@@ -142,30 +142,33 @@ _RCR_SCHEMA = T.StructType([
 _RCR_KEYS = ["obs_id", "IFNUM", "PLNUM", "segment", "CALSTATE"]
 
 
-def _fit_group(pdf: pd.DataFrame) -> dict:
-    """The per-segment robust fit (one diode-on or diode-off half of a
-    cal spike)."""
-    t = pdf["t"].to_numpy(dtype=float)
-    y = pdf["intensity"].to_numpy(dtype=float)
+def fit_segment(t: np.ndarray, y: np.ndarray) -> dict:
+    """The robust fit of one diode-on or diode-off half of a cal
+    spike: (intercept, slope, b_sd, m_sd, t_mean), the fit fields None
+    when the half is too short to fit."""
     t_mean = float(t.mean())
     x = t - t_mean  # mean-centering, continuum.py:77-78
     if len(x) < 4:
         # reference guard: <4 points on either side -> no fit
         # (continuum.py:119)
-        fit = dict(intercept=None, slope=None, b_sd=None, m_sd=None)
-    else:
-        b, m, keep = rcr_linear_fit(x, y)
-        b_sd, m_sd = fit_stats(x[keep], y[keep], b, m)
-        fit = dict(intercept=b, slope=m, b_sd=b_sd, m_sd=m_sd)
+        return dict(intercept=None, slope=None, b_sd=None, m_sd=None,
+                    t_mean=t_mean)
+    b, m, keep = rcr_linear_fit(x, y)
+    b_sd, m_sd = fit_stats(x[keep], y[keep], b, m)
+    return dict(intercept=b, slope=m, b_sd=b_sd, m_sd=m_sd, t_mean=t_mean)
+
+
+def _fit_group(pdf: pd.DataFrame) -> dict:
+    """The per-segment robust fit as one rcr_fit_segments row."""
     return {
         "obs_id": pdf["obs_id"].iloc[0],
         "IFNUM": pdf["IFNUM"].iloc[0],
         "PLNUM": pdf["PLNUM"].iloc[0],
         "segment": pdf["segment"].iloc[0],
         "calstate": pdf["CALSTATE"].iloc[0],
-        "t_mean": t_mean,
         "n": len(pdf),
-        **fit,
+        **fit_segment(pdf["t"].to_numpy(dtype=float),
+                      pdf["intensity"].to_numpy(dtype=float)),
     }
 
 
@@ -230,8 +233,13 @@ def calibration_height(fits: pd.DataFrame) -> CalibrationHeight:
     off = fits[fits["calstate"] == 0]
     if len(on) != 1 or len(off) != 1:
         return CalibrationHeight(None, None)
-    on, off = on.iloc[0], off.iloc[0]
-    if on["intercept"] is None or off["intercept"] is None or \
+    return height_from_fits(on.iloc[0], off.iloc[0])
+
+
+def height_from_fits(on, off) -> CalibrationHeight:
+    """M5 from the diode-on and diode-off fits (``fit_segment``
+    fields) of one cal segment; None for a missing or unfit half."""
+    if on is None or off is None or \
             pd.isna(on["intercept"]) or pd.isna(off["intercept"]):
         return CalibrationHeight(None, None)
     t_star = (on["t_mean"] + off["t_mean"]) / 2.0
@@ -248,6 +256,28 @@ def calibration_height(fits: pd.DataFrame) -> CalibrationHeight:
 # ------------------------------------------------------------------
 # M6: gain calibration of the science continuum
 # ------------------------------------------------------------------
+
+def gain_calibrate(t: np.ndarray, y: np.ndarray, pre: CalibrationHeight,
+                   post: CalibrationHeight) -> np.ndarray:
+    """M6 on one stream's science rows in NumPy, with the branches of
+    apply_gain_calibration_distributed: interpolate the height in time
+    between the first and last science samples when both heights are
+    present and z >= 1.96, else their mean (also when the z
+    denominator is zero or undefined), else the one present height,
+    else leave y unchanged."""
+    if pre.delta is not None and post.delta is not None:
+        denom = math.sqrt(pre.uncertainty ** 2 + post.uncertainty ** 2)
+        if denom > 0 and abs(pre.delta - post.delta) / denom >= 1.96:
+            t1, t2 = t.min(), t.max()
+            frac = np.zeros_like(t) if t2 == t1 else (t - t1) / (t2 - t1)
+            return y / (pre.delta + (post.delta - pre.delta) * frac)
+        return y / ((pre.delta + post.delta) / 2.0)
+    if pre.delta is not None:
+        return y / pre.delta
+    if post.delta is not None:
+        return y / post.delta
+    return y
+
 
 def apply_gain_calibration(science: DataFrame,
                            pre: CalibrationHeight,
@@ -292,8 +322,10 @@ def apply_gain_calibration(science: DataFrame,
 
 
 # ------------------------------------------------------------------
-# M5/M6 fully distributed: no driver round-trip, any number of
-# observations in one lineage (the 1M-observation path)
+# M5/M6 as joins: no driver round-trip, any number of observations
+# in one lineage. The corpus continuum runs height_from_fits and
+# gain_calibrate inside its per-observation kernel instead; these stay
+# as the operator form it is tested against.
 # ------------------------------------------------------------------
 
 STREAM_COLS = ["obs_id", "IFNUM", "PLNUM"]
@@ -359,8 +391,10 @@ def apply_gain_calibration_distributed(science: DataFrame,
                 .join(bounds, STREAM_COLS, "left"))
 
     pre_d, post_d = F.col("pre_d"), F.col("post_d")
-    z = F.abs(pre_d - post_d) / F.sqrt(F.col("pre_u") ** 2
-                                       + F.col("post_u") ** 2)
+    # try_divide: a zero denominator (two perfect fits) gives a null z
+    # and the mean-height branch, also in ANSI mode where "/" raises
+    z = F.try_divide(F.abs(pre_d - post_d),
+                     F.sqrt(F.col("pre_u") ** 2 + F.col("post_u") ** 2))
     frac = F.when(F.col("_t2") == F.col("_t1"), F.lit(0.0)).otherwise(
         (F.col(t_col) - F.col("_t1")) / (F.col("_t2") - F.col("_t1")))
     interp = pre_d + (post_d - pre_d) * frac

@@ -290,6 +290,12 @@ def find_calibrations_hybrid(df: DataFrame,
     false-start patterns). Equivalence to the pure Python machine is
     pinned by tests/test_segmentation.py across both regimes.
 
+    No longer on the corpus path: continuum_pipeline_distributed runs
+    find_calibration_indices inside its per-observation kernel and
+    spectrum_pipeline_distributed takes the off transition from a
+    window. Kept as the reference of the fused-vs-operators test in
+    tests/test_radio_pipeline.py and of the benchmark's layer trace.
+
     The fallback join is keyed on the stream id the segmentation
     shuffle already established, and the Python stage sees ONLY the
     ineligible streams — on a clean 100 TB corpus that is ~zero rows.

@@ -7,17 +7,33 @@ reference entry points (SURVEY.md §3):
 Each is a composition of lazy transformations; the only driver
 round-trips are the per-segment calibration-height scalars (M5/M6),
 matching SURVEY §3's lifecycle note.
+
+The corpus forms reduce every (obs_id, IFNUM, PLNUM) stream at once
+with no driver round-trip:
+
+- ``continuum_pipeline_distributed``: one per-observation kernel
+  (segmentation, robust cal fits, calibration heights and gain in
+  NumPy) over the Spark-integrated rows;
+- ``spectrum_pipeline_distributed``: one signed posexplode
+  aggregation, the off transition a per-stream window.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from radio_data_pipeline_spark.operators.calibration import (
-    CalibrationHeight,
+    STREAM_COLS,
     apply_gain_calibration,
     calibration_height,
+    fit_segment,
+    gain_calibrate,
+    height_from_fits,
     rcr_fit_segments,
 )
 from radio_data_pipeline_spark.operators.filters import (
@@ -32,8 +48,8 @@ from radio_data_pipeline_spark.operators.integrate import (
     on_off_spectrum,
 )
 from radio_data_pipeline_spark.operators.segmentation import (
+    find_calibration_indices,
     find_calibrations,
-    find_calibrations_hybrid,
     label_segments,
 )
 
@@ -149,95 +165,104 @@ def spectrum_pipeline(df: DataFrame, header: ObservationHeader,
             .orderBy("pos"))
 
 
+def _reduce_stream_continuum(s: pd.DataFrame, header_obsmode: str,
+                             channel_count: int) -> pd.DataFrame:
+    """One stream's gain-calibrated science continuum, rows in file
+    order: segmentation (O13/O15) -> per-(segment, CALSTATE) robust
+    fits of the SWPVALID==0 cal rows (M2-M4) -> calibration heights
+    (M5) -> gain division (M6)."""
+    cal = s["CALSTATE"].to_numpy()
+    swp = s["SWPVALID"].to_numpy()
+    data_start, post_cal, _off = find_calibration_indices(
+        cal, swp, s["OBSMODE"].tolist(), header_obsmode, channel_count)
+    pos = np.arange(len(s))
+    t = s["t"].to_numpy(dtype=float)
+    y = s["intensity"].to_numpy(dtype=float)
+    pre = pos < data_start
+    post = ~pre & (pos >= post_cal)
+    heights = []
+    for segment in (pre, post):
+        halves = {}
+        for state in (0, 1):
+            rows = segment & (swp == 0) & (cal == state)
+            if rows.any():
+                halves[state] = fit_segment(t[rows], y[rows])
+        heights.append(height_from_fits(halves.get(1), halves.get(0)))
+    science = ~pre & ~post
+    return s.loc[science, [*STREAM_COLS, "t"]].assign(
+        intensity=gain_calibrate(t[science], y[science], *heights))
+
+
 def continuum_pipeline_distributed(df: DataFrame,
                                    header_obsmode: str = "track",
-                                   channel_count: int | None = None,
                                    ) -> DataFrame:
-    """The 1M-observation continuum: every (obs_id, IFNUM, PLNUM)
-    stream of `df` reduced in ONE lineage with ZERO driver round-trips
-    — segmentation, per-segment robust fits, calibration heights, and
-    gain application are all joins/aggregations keyed on the stream id.
+    """The corpus continuum: every (obs_id, IFNUM, PLNUM) stream of
+    `df` reduced in ONE lineage with ZERO driver round-trips by one
+    per-observation kernel.
 
     Returns (obs_id, IFNUM, PLNUM, t, intensity) for the science rows
     of every stream. Differences vs continuum_pipeline (the
     single-observation reference shape): no time/frequency crops (those
     are per-header driver parameters; apply them upstream per
-    observation group if needed), and channel_count defaults to each
-    observation's own stream count (continuum.py:24-28 semantics)
-    computed distributively.
+    observation group if needed), t is seconds since the epoch rather
+    than since the header date, and channel_count is each
+    observation's own distinct-IFNUM x distinct-PLNUM product
+    (continuum.py:24-28).
 
-    Scale: the only shuffles are keyed on the observation stream —
-    segmentation (applyInPandas), the segment fits (applyInPandas over
-    dozens-of-row groups), and two broadcast joins of one-row-per-
-    stream tables back onto the science rows.
+    Shape: t and the channel sum are the same Spark expressions as
+    integrate_continuum, so no DATA array crosses into Python; one
+    groupBy(obs_id).applyInPandas then runs segmentation, the robust
+    cal fits, the calibration heights and the gain division per
+    stream in NumPy. One SDFITS file is one observation — a few
+    hundred narrow rows per group — and the only shuffle is keyed on
+    the observation id.
     """
-    from radio_data_pipeline_spark.operators.calibration import (
-        apply_gain_calibration_distributed,
-        calibration_heights_df,
-    )
+    rows = integrate_continuum(
+        df, keep_cols=[*STREAM_COLS, "row_idx", "CALSTATE", "SWPVALID",
+                       "OBSMODE"])
+    schema = T.StructType([rows.schema[c]
+                           for c in (*STREAM_COLS, "t", "intensity")])
 
-    # hybrid segmentation: window-compiled (pure JVM) for every stream
-    # where the discard counter cannot fire, applyInPandas only for
-    # the rest — on a clean corpus the Python stage sees ~zero rows
-    indices = find_calibrations_hybrid(df, channel_count=channel_count,
-                                       header_obsmode=header_obsmode)
-    # labeled feeds three consumers (cal fits, science, time bounds):
-    # localCheckpoint materializes the segmentation subtree (shuffle +
-    # Python state machine) once and truncates lineage; unlike
-    # persist(), its blocks are released by the ContextCleaner when
-    # the result DataFrame is garbage-collected, so repeated pipeline
-    # calls in a long-lived session do not accumulate cached copies.
-    labeled = label_segments(df, indices).localCheckpoint(eager=False)
+    def reduce_observation(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values([*STREAM_COLS, "row_idx"])
+        channel_count = pdf["IFNUM"].nunique() * pdf["PLNUM"].nunique()
+        return pd.concat(
+            [_reduce_stream_continuum(s, header_obsmode, channel_count)
+             for _, s in pdf.groupby(["IFNUM", "PLNUM"], sort=False)],
+            ignore_index=True)
 
-    cal_rows = labeled.filter(
-        F.col("segment").isin("pre_cal", "post_cal")
-        & (F.col("SWPVALID") == 0))
-    cal_cont = integrate_continuum(
-        cal_rows, keep_cols=["obs_id", "IFNUM", "PLNUM", "segment",
-                             "CALSTATE"])
-    heights = calibration_heights_df(rcr_fit_segments(cal_cont))
-
-    science = labeled.filter(F.col("segment") == "science")
-    cont = integrate_continuum(science,
-                               keep_cols=["obs_id", "IFNUM", "PLNUM"])
-    return apply_gain_calibration_distributed(cont, heights)
+    return rows.groupBy("obs_id").applyInPandas(reduce_observation, schema)
 
 
 def spectrum_pipeline_distributed(df: DataFrame,
                                   header_obsmode: str = "track",
-                                  channel_count: int | None = None,
                                   ) -> DataFrame:
     """All-streams spectrum in one lineage: the ON-OFF subtraction (M7)
-    folded into ONE signed aggregation — rows labeled 'off' contribute
-    -value — so the whole reduction is a single posexplode + groupBy
-    keyed on (stream, channel). Shuffle volume after map-side partial
-    aggregation is O(streams x channels), independent of row count.
+    folded into ONE signed aggregation — rows at or after a stream's
+    first 'onoff:off' row contribute -value — so the reduction is a
+    single posexplode + groupBy keyed on (stream, channel). Shuffle
+    volume after map-side partial aggregation is O(streams x channels),
+    independent of row count.
+
+    The off transition (O14) is a per-stream window min(row_idx) over
+    the 'onoff:off' rows, taken before the CALSTATE/SWPVALID filter, so
+    the spectrum needs no segmentation pass of its own.
 
     Returns (obs_id, IFNUM, PLNUM, pos, intensity); join the per-ifnum
     frequency axis (header.frequencies) on pos downstream."""
-    if header_obsmode != "onoff":
-        # track mode: no ON/OFF split exists, so skip the segmentation
-        # machinery entirely (its output would be a constant +1 sign)
-        # — the reduction is a plain signed-less aggregation
-        filtered = df.filter((F.col("CALSTATE") == 0)
-                             & (F.col("SWPVALID") == 0))
-        return (
-            filtered.select("obs_id", "IFNUM", "PLNUM",
-                            F.posexplode("DATA").alias("pos", "val"))
-            .groupBy("obs_id", "IFNUM", "PLNUM", "pos")
-            .agg(F.sum("val").alias("intensity"))
-        )
-    indices = find_calibrations_hybrid(df, channel_count=channel_count,
-                                       header_obsmode=header_obsmode)
-    labeled = label_segments(df, indices)
-    filtered = labeled.filter((F.col("CALSTATE") == 0)
-                              & (F.col("SWPVALID") == 0))
-    sign = F.when(F.col("onoff") == "off", F.lit(-1.0)) \
-            .otherwise(F.lit(1.0))
+    sign = F.lit(1.0)
+    if header_obsmode == "onoff":
+        off_start = F.min(F.when(F.col("OBSMODE").contains("onoff:off"),
+                                 F.col("row_idx"))) \
+            .over(Window.partitionBy(*STREAM_COLS))
+        df = df.withColumn("_off_start", off_start)
+        sign = F.when(F.col("row_idx") >= F.col("_off_start"),
+                      F.lit(-1.0)).otherwise(F.lit(1.0))
+    filtered = df.filter((F.col("CALSTATE") == 0) & (F.col("SWPVALID") == 0))
     return (
-        filtered.select("obs_id", "IFNUM", "PLNUM", sign.alias("_sign"),
+        filtered.select(*STREAM_COLS, sign.alias("_sign"),
                         F.posexplode("DATA").alias("pos", "val"))
-        .groupBy("obs_id", "IFNUM", "PLNUM", "pos")
+        .groupBy(*STREAM_COLS, "pos")
         .agg(F.sum(F.col("val") * F.col("_sign")).alias("intensity"))
     )
 

@@ -110,9 +110,11 @@ def radio_segmentation_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         "iiidd",
         ["obs_id", "IFNUM", "PLNUM", "t"]),
     doc="Gain-calibrated continuum (reference continuum.py:140-191) "
-        "for every stream of the corpus fixture in one lineage — "
-        "segmentation, RCR fits, calibration heights, interpolated "
-        "gain division, zero driver round-trips. The oracle pins the "
+        "for every stream of the corpus fixture in one lineage: one "
+        "per-observation kernel (groupBy(obs_id).applyInPandas) runs "
+        "segmentation, RCR fits, calibration heights and interpolated "
+        "gain division per stream on the Spark-integrated rows, zero "
+        "driver round-trips. The oracle pins the "
         "exact science-row outputs (VALUES; robust per-segment fits "
         "are iterative, not SQL-expressible); equivalence with the "
         "reference-shaped per-stream pipeline is pinned by "
@@ -370,10 +372,12 @@ def radio_hires_spectrum_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["obs_id", "IFNUM", "PLNUM", "t"]),
     doc="Wide-channel (HIRES) stress of the distributed continuum: the "
         "16,384-channel fixture through the SAME continuum_pipeline_"
-        "distributed lineage (segmentation -> RCR fits -> calibration "
-        "heights -> interpolated gain). The integrate fold "
+        "distributed lineage (Spark channel-sum fold, then the "
+        "per-observation kernel: segmentation -> RCR fits -> "
+        "calibration heights -> interpolated gain). The integrate fold "
         "(F.aggregate) is a constant-size expression looping over the "
-        "runtime array, so channel width costs data movement only, "
+        "runtime array and runs before the kernel, so no DATA array "
+        "crosses into Python; channel width costs data movement only, "
         "never plan size. Oracle pins the exact science-row outputs "
         "(VALUES; per-segment robust fits are iterative, not SQL) — "
         "regenerated by tools/gen_radio_fixtures.py alongside the "

@@ -358,3 +358,223 @@ def test_wide_channel_arrays(spark):
     np.testing.assert_allclose(
         spec.sort_values("pos")["intensity"].to_numpy(),
         np.vstack(pdf["DATA"].map(np.asarray)).sum(axis=0), rtol=1e-9)
+
+
+# ------------------------------------------------------------------
+# The per-observation kernel vs the operator composition it replaced
+# ------------------------------------------------------------------
+
+STREAMS = ["obs_id", "IFNUM", "PLNUM"]
+
+
+def _streams(spec, edit=lambda s: s, drop=()):
+    """The four streams of `spec`, each edited, renumbered and
+    re-timed (one row per second from spec.start); streams in `drop`
+    left out."""
+    import pandas as pd
+    from datetime import timedelta
+    from radio_data_pipeline_spark.sources.synthetic import make_observation
+    frames = []
+    for ifnum in (0, 1):
+        for plnum in (0, 1):
+            if (ifnum, plnum) in drop:
+                continue
+            s = edit(make_observation(spec, ifnum, plnum)).reset_index(
+                drop=True)
+            s["row_idx"] = range(len(s))
+            s["DATE_OBS"] = [spec.start + timedelta(seconds=float(i))
+                             for i in range(len(s))]
+            frames.append(s)
+    return pd.concat(frames, ignore_index=True)
+
+
+def _set_data(s, rows, value):
+    s = s.copy()
+    s["DATA"] = [[value] * len(d) if r else d
+                 for d, r in zip(s["DATA"], rows)]
+    return s
+
+
+def _edge_case_corpus():
+    """One observation per edge case (obs_id -> what it exercises)."""
+    import pandas as pd
+    from radio_data_pipeline_spark.sources.synthetic import ObsSpec
+
+    def spec(obs_id, **kw):
+        return ObsSpec(obs_id=obs_id, n_science=24, **kw)
+
+    def off_at_row_0(s):
+        s = s.copy()
+        s.loc[0, "OBSMODE"] = "onoff:off"
+        return s
+
+    def negative_tsys(s):
+        s = s.copy()
+        if (s["IFNUM"].iloc[0], s["PLNUM"].iloc[0]) == (1, 1):
+            s["TSYS"] = -30.0
+        return s
+
+    def zero_residual(s):
+        # constant, exactly representable cal sums: every fit is
+        # perfect, so both uncertainties are 0 and the z test divides
+        # by zero; pre and post heights differ (32 vs 48)
+        pre, post = s.index < 16, s.index >= 40
+        cal = s["CALSTATE"] == 1
+        off = (s["SWPVALID"] == 0) & ~cal & (pre | post)
+        s = _set_data(s, off, 0.25)
+        s = _set_data(s, pre & cal, 0.75)
+        return _set_data(s, post & cal, 1.0)
+
+    def nan_channel(s):
+        s = s.copy()
+        s["DATA"] = [d[:5] + [float("nan")] + d[6:] for d in s["DATA"]]
+        return s
+
+    cases = {
+        0: _streams(spec(0)),
+        # no pre-cal spike: the state machine's rescan fallback
+        1: _streams(spec(1, pre_cal=False)),
+        # two false starts in a row (rows 16-18 repeated)
+        2: _streams(spec(2, false_start=True),
+                    lambda s: pd.concat([s.iloc[:19], s.iloc[16:19],
+                                         s.iloc[19:]])),
+        3: _streams(spec(3, onoff=True), off_at_row_0),
+        # stream (1, 1) emptied by the negative-TSYS rule
+        4: _streams(spec(4), negative_tsys),
+        # post-cal diode-on half cut to 3 rows: no fit there
+        5: _streams(spec(5), lambda s: s.iloc[:-5]),
+        6: _streams(spec(6), zero_residual),
+        7: _streams(spec(7, onoff=True), nan_channel),
+        # (1, 1) missing: channel_count is 2 x 2 = 4, not 3 pairs, so
+        # a 10-row false start is discarded (10 <= 12, not <= 9)
+        8: _streams(spec(8, false_start=True),
+                    lambda s: pd.concat([s.iloc[:16], s.iloc[[16] * 10],
+                                         s.iloc[18:]]),
+                    drop={(1, 1)}),
+    }
+    return pd.concat(cases.values(), ignore_index=True)
+
+
+def _continuum_by_operators(df):
+    from radio_data_pipeline_spark.operators.calibration import (
+        apply_gain_calibration_distributed,
+        calibration_heights_df,
+        rcr_fit_segments,
+    )
+    from radio_data_pipeline_spark.operators.integrate import (
+        integrate_continuum,
+    )
+    from radio_data_pipeline_spark.operators.segmentation import (
+        find_calibrations,
+        label_segments,
+    )
+    labeled = label_segments(df, find_calibrations(df))
+    cal = labeled.filter(F.col("segment").isin("pre_cal", "post_cal")
+                         & (F.col("SWPVALID") == 0))
+    fits = rcr_fit_segments(integrate_continuum(
+        cal, keep_cols=[*STREAMS, "segment", "CALSTATE"]))
+    science = integrate_continuum(labeled.filter(F.col("segment") ==
+                                                 "science"),
+                                  keep_cols=STREAMS)
+    return apply_gain_calibration_distributed(science,
+                                              calibration_heights_df(fits))
+
+
+def _spectrum_by_operators(df, header_obsmode):
+    from radio_data_pipeline_spark.operators.segmentation import (
+        find_calibrations_hybrid,
+        label_segments,
+    )
+    labeled = label_segments(
+        df, find_calibrations_hybrid(df, header_obsmode=header_obsmode))
+    sign = F.when(F.col("onoff") == "off", F.lit(-1.0)).otherwise(F.lit(1.0))
+    return (labeled.filter((F.col("CALSTATE") == 0)
+                           & (F.col("SWPVALID") == 0))
+            .select(*STREAMS, sign.alias("_sign"),
+                    F.posexplode("DATA").alias("pos", "val"))
+            .groupBy(*STREAMS, "pos")
+            .agg(F.sum(F.col("val") * F.col("_sign")).alias("intensity")))
+
+
+def _assert_same(got, ref, keys):
+    import numpy as np
+    got = got.sort_values(keys).reset_index(drop=True)
+    ref = ref.sort_values(keys).reset_index(drop=True)
+    assert len(got) == len(ref)
+    assert (got[keys].to_numpy() == ref[keys].to_numpy()).all()
+    for obs_id, g in got.groupby("obs_id"):
+        np.testing.assert_allclose(
+            g["intensity"].to_numpy(dtype=float),
+            ref.loc[g.index, "intensity"].to_numpy(dtype=float),
+            rtol=1e-9, err_msg=f"obs_id {obs_id}")
+
+
+def test_fused_products_match_operator_composition_on_edge_cases(spark):
+    from radio_data_pipeline_spark.operators.segmentation import (
+        find_calibration_indices,
+    )
+    from radio_data_pipeline_spark.operators.validation import (
+        validate_observation,
+    )
+    from radio_data_pipeline_spark.pipeline import (
+        continuum_pipeline_distributed,
+        spectrum_pipeline_distributed,
+    )
+    pdf = _edge_case_corpus()
+    # the missing-combination case only bites through the product
+    s8 = pdf[(pdf["obs_id"] == 8) & (pdf["IFNUM"] == 0) & (pdf["PLNUM"] == 0)]
+    args = (s8["CALSTATE"].to_numpy(), s8["SWPVALID"].to_numpy(),
+            s8["OBSMODE"].tolist(), "track")
+    assert find_calibration_indices(*args, 4) != \
+        find_calibration_indices(*args, 3)
+
+    df = validate_observation(spark.createDataFrame(pdf),
+                              channel_window=(0, 63))
+    df = df.localCheckpoint()
+
+    cont = continuum_pipeline_distributed(df, header_obsmode="onoff") \
+        .toPandas()
+    ref = _continuum_by_operators(df).toPandas()
+    _assert_same(cont, ref, [*STREAMS, "t"])
+    assert set(cont["obs_id"]) == set(range(9))
+    assert not ((cont["obs_id"] == 4) & (cont["IFNUM"] == 1)
+                & (cont["PLNUM"] == 1)).any()
+
+    for mode in ("onoff", "track"):
+        spec = spectrum_pipeline_distributed(df, header_obsmode=mode) \
+            .toPandas()
+        _assert_same(spec, _spectrum_by_operators(df, mode).toPandas(),
+                     [*STREAMS, "pos"])
+        # an all-NULL channel sums to NULL, not 0
+        nan_channel = spec[(spec["obs_id"] == 7) & (spec["pos"] == 5)]
+        assert len(nan_channel) == 4
+        assert nan_channel["intensity"].isna().all()
+
+
+def test_corpus_products_run_in_few_spark_jobs(spark):
+    # the two corpus products of a 2-observation set: a reintroduced
+    # eager checkpoint, count() or semi-join rescan adds jobs here
+    from radio_data_pipeline_spark.pipeline import (
+        continuum_pipeline_distributed,
+        spectrum_pipeline_distributed,
+    )
+    from radio_data_pipeline_spark.sources.synthetic import (
+        ObsSpec,
+        make_observation_set,
+    )
+    df = spark.createDataFrame(make_observation_set(
+        [ObsSpec(obs_id=0, n_science=24),
+         ObsSpec(obs_id=1, n_science=24, onoff=True, false_start=True)]))
+    sc = spark.sparkContext
+    group = "corpus-products-job-guard"
+    sc.setJobGroup(group, group)
+    try:
+        cont = continuum_pipeline_distributed(
+            df, header_obsmode="onoff").toPandas()
+        spec = spectrum_pipeline_distributed(
+            df, header_obsmode="onoff").toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(cont) == 2 * 4 * 24 and len(spec) == 2 * 4 * 64
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 6, f"{len(jobs)} Spark jobs for the two products"
