@@ -1,21 +1,21 @@
 """End-to-end reduction pipelines — the Spark equivalents of the
-reference entry points (SURVEY.md §3):
-
-- ``continuum_pipeline``  = Continuum(...).continuum()  (continuum.py:140-191)
-- ``spectrum_pipeline``   = Spectrum(...).spectrum()    (spectrum.py:46-71)
-
-Each is a composition of lazy transformations; the only driver
-round-trips are the per-segment calibration-height scalars (M5/M6),
-matching SURVEY §3's lifecycle note.
+reference entry points (SURVEY.md §3).
 
 The corpus forms reduce every (obs_id, IFNUM, PLNUM) stream at once
 with no driver round-trip:
 
 - ``continuum_pipeline_distributed``: one per-observation kernel
   (segmentation, robust cal fits, calibration heights and gain in
-  NumPy) over the Spark-integrated rows;
+  NumPy) over the Spark-integrated rows — Continuum(...).continuum()
+  (continuum.py:140-191);
 - ``spectrum_pipeline_distributed``: one signed posexplode
-  aggregation, the off transition a per-stream window.
+  aggregation, the off transition a per-stream window —
+  Spectrum(...).spectrum() (spectrum.py:46-71).
+
+``reduce_observation`` is the one-observation form (main.py:20-47):
+the same two kernels on one validated file, with the time and
+frequency crops applied before them and one stream selected after;
+``reduce_sdfits`` reads and validates the file first.
 """
 
 from __future__ import annotations
@@ -29,140 +29,19 @@ from pyspark.sql import types as T
 
 from radio_data_pipeline_spark.operators.calibration import (
     STREAM_COLS,
-    apply_gain_calibration,
-    calibration_height,
     fit_segment,
     gain_calibrate,
     height_from_fits,
-    rcr_fit_segments,
 )
 from radio_data_pipeline_spark.operators.filters import (
     filter_frequency_ranges,
     filter_time_ranges,
-    select_stream,
 )
 from radio_data_pipeline_spark.operators.header import ObservationHeader
-from radio_data_pipeline_spark.operators.integrate import (
-    integrate_continuum,
-    integrate_spectrum,
-    on_off_spectrum,
-)
+from radio_data_pipeline_spark.operators.integrate import integrate_continuum
 from radio_data_pipeline_spark.operators.segmentation import (
     find_calibration_indices,
-    find_calibrations,
-    label_segments,
 )
-
-
-def _prepare(df: DataFrame, header: ObservationHeader, ifnum: int, plnum: int,
-             include_time=None, exclude_time=None,
-             include_freq=None, exclude_freq=None,
-             extra_predicate=None):
-    """Shared front half: stream count (A3 on the UNFILTERED input,
-    continuum.py:24-28) -> stream select (F1) -> time crop (F3) ->
-    frequency crop / axis derivation (F4/P2)."""
-    # reference semantics (continuum.py:26-28): channel_count is the
-    # PRODUCT len(unique IFNUM) * len(unique PLNUM), not the count of
-    # observed (IFNUM, PLNUM) pairs — they diverge when some stream
-    # combinations are missing, shifting the 3*channel_count
-    # false-start threshold in the segmentation state machine.
-    # Returned as a THUNK: only the continuum path needs it, and the
-    # aggregate is a full-input scan the spectrum path must not pay
-    def stream_count() -> int:
-        row = df.agg(F.countDistinct("IFNUM").alias("i"),
-                     F.countDistinct("PLNUM").alias("p")).first()
-        return row["i"] * row["p"]
-    out = select_stream(df, ifnum, plnum)
-    if extra_predicate is not None:
-        out = out.filter(extra_predicate)
-    if include_time or exclude_time:
-        out = filter_time_ranges(out, "DATE_OBS", include_time, exclude_time)
-    frequencies = header.frequencies(ifnum)
-    if include_freq or exclude_freq:
-        out, frequencies = filter_frequency_ranges(
-            out, frequencies, include_freq, exclude_freq)
-    return out, frequencies, stream_count
-
-
-def continuum_pipeline(df: DataFrame, header: ObservationHeader,
-                       ifnum: int = 0, plnum: int = 0,
-                       include_time=None, exclude_time=None,
-                       include_freq=None, exclude_freq=None) -> DataFrame:
-    """Full gain-calibrated continuum: returns (obs_id, t, intensity).
-
-    Stage map (continuum.py:140-191): crops -> find_calibrations (O13)
-    -> segment labels (O15) -> per-segment diode on/off integration
-    (F2+A1) -> robust fits (M2/M3/M4) -> calibration heights (M5) ->
-    science integration (A1) -> gain calibration (M6).
-    """
-    data, _freqs, stream_count = _prepare(
-        df, header, ifnum, plnum, include_time, exclude_time,
-        include_freq, exclude_freq)
-
-    indices = find_calibrations(data, channel_count=stream_count(),
-                                header_obsmode=header.obsmode)
-    # lazy localCheckpoint, not cache(): the subtree feeds cal_rows
-    # AND science, and checkpoint blocks are released by the
-    # ContextCleaner when the frame is collected — an unpersist-less
-    # cache would accumulate across a corpus loop (same rule as
-    # continuum_pipeline_distributed)
-    labeled = label_segments(data, indices).localCheckpoint(eager=False)
-
-    # Calibration segments: diode on/off split (F2: SWPVALID==0 within
-    # the pre/post windows, continuum.py:51-59) -> continuum integrate.
-    cal_rows = labeled.filter(
-        F.col("segment").isin("pre_cal", "post_cal")
-        & (F.col("SWPVALID") == 0))
-    cal_cont = integrate_continuum(cal_rows, epoch_ts=header.date,
-                                   keep_cols=["obs_id", "IFNUM", "PLNUM",
-                                              "segment", "CALSTATE"])
-    fits = rcr_fit_segments(cal_cont).toPandas()
-
-    pre = calibration_height(fits[fits["segment"] == "pre_cal"])
-    post = calibration_height(fits[fits["segment"] == "post_cal"])
-
-    science = labeled.filter(F.col("segment") == "science")
-    cont = integrate_continuum(science, epoch_ts=header.date,
-                               keep_cols=["obs_id"])
-    return apply_gain_calibration(cont, pre, post)
-
-
-def spectrum_pipeline(df: DataFrame, header: ObservationHeader,
-                      ifnum: int = 0, plnum: int = 0,
-                      include_time=None, exclude_time=None,
-                      include_freq=None, exclude_freq=None) -> DataFrame:
-    """ON-OFF (or plain) spectrum: returns (pos, frequency, intensity).
-
-    Stage map (spectrum.py:46-71): stream + CALSTATE==0 & SWPVALID==0
-    pre-filter (F1+F2, spectrum.py:31-32) -> crops -> off transition
-    (O14) -> A2 integration with ON-OFF subtraction (M7).
-    """
-    pred = (F.col("CALSTATE") == 0) & (F.col("SWPVALID") == 0)
-    data, freqs, _stream_count = _prepare(
-        df, header, ifnum, plnum, include_time, exclude_time,
-        include_freq, exclude_freq, extra_predicate=pred)
-
-    if header.obsmode == "onoff":
-        # Falsy-index quirk (spectrum.py:63): the reference treats an
-        # off-transition at row 0 the same as "no transition"; we treat
-        # any non-null transition as real (documented divergence).
-        spec = on_off_spectrum(data, on_pred=~F.col("OBSMODE")
-                               .contains("onoff:off"))
-    else:
-        spec = integrate_spectrum(data)
-
-    # frequency axis as a broadcast (pos, frequency) join, NOT an
-    # N-channel literal array expression: at HIRES widths (16k+
-    # channels) a literal F.array(...) is a giant expression tree —
-    # the measured codegen-blowup failure mode (BENCH_SCALING.md §4).
-    # The axis is one tiny driver-built table; the join is a broadcast
-    # hash join on pos, constant-size no matter the channel count.
-    freq_df = df.sparkSession.createDataFrame(
-        [(i, float(f)) for i, f in enumerate(freqs)],
-        "pos int, frequency double")
-    return (spec.join(F.broadcast(freq_df), "pos")
-            .select("pos", "frequency", "intensity")
-            .orderBy("pos"))
 
 
 def _reduce_stream_continuum(s: pd.DataFrame, header_obsmode: str,
@@ -201,13 +80,11 @@ def continuum_pipeline_distributed(df: DataFrame,
     per-observation kernel.
 
     Returns (obs_id, IFNUM, PLNUM, t, intensity) for the science rows
-    of every stream. Differences vs continuum_pipeline (the
-    single-observation reference shape): no time/frequency crops (those
-    are per-header driver parameters; apply them upstream per
-    observation group if needed), t is seconds since the epoch rather
-    than since the header date, and channel_count is each
-    observation's own distinct-IFNUM x distinct-PLNUM product
-    (continuum.py:24-28).
+    of every stream. t is seconds since the Unix epoch (one file's
+    reduce_observation rebases it on the header date), and
+    channel_count is each observation's own distinct-IFNUM x
+    distinct-PLNUM product (continuum.py:24-28). Time and frequency
+    crops are predicates applied to `df` upstream (reduce_observation).
 
     Shape: t and the channel sum are the same Spark expressions as
     integrate_continuum, so no DATA array crosses into Python; one
@@ -223,7 +100,7 @@ def continuum_pipeline_distributed(df: DataFrame,
     schema = T.StructType([rows.schema[c]
                            for c in (*STREAM_COLS, "t", "intensity")])
 
-    def reduce_observation(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_observation(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([*STREAM_COLS, "row_idx"])
         channel_count = pdf["IFNUM"].nunique() * pdf["PLNUM"].nunique()
         return pd.concat(
@@ -231,7 +108,7 @@ def continuum_pipeline_distributed(df: DataFrame,
              for _, s in pdf.groupby(["IFNUM", "PLNUM"], sort=False)],
             ignore_index=True)
 
-    return rows.groupBy("obs_id").applyInPandas(reduce_observation, schema)
+    return rows.groupBy("obs_id").applyInPandas(per_observation, schema)
 
 
 def spectrum_pipeline_distributed(df: DataFrame,
@@ -267,20 +144,69 @@ def spectrum_pipeline_distributed(df: DataFrame,
     )
 
 
+def reduce_observation(validated: DataFrame, header: ObservationHeader,
+                       ifnum: int = 0, plnum: int = 0,
+                       include_time=None, exclude_time=None,
+                       include_freq=None, exclude_freq=None,
+                       ) -> dict[str, DataFrame]:
+    """One validated observation -> {"continuum", "spectrum"} for the
+    (ifnum, plnum) stream, both lazy, no driver round-trip.
+
+    The time (F3) and frequency (F4) crops apply to every stream of
+    the file before either kernel. The continuum kernel runs over all
+    streams, so channel_count stays the file's distinct-IFNUM x
+    distinct-PLNUM product (continuum.py:24-28), and the stream is
+    selected (F1) after it: (obs_id, t, intensity) with t in seconds
+    since the header DATE. The spectrum is (pos, frequency,
+    intensity), ordered by pos; in onoff mode rows at or after the
+    stream's first 'onoff:off' row count as OFF (spectrum.py:64-65),
+    and a channel with no non-NULL value sums to NULL.
+    """
+    data = validated
+    if include_time or exclude_time:
+        data = filter_time_ranges(data, "DATE_OBS", include_time,
+                                  exclude_time)
+    freqs = header.frequencies(ifnum)
+    if include_freq or exclude_freq:
+        data, freqs = filter_frequency_ranges(data, freqs, include_freq,
+                                              exclude_freq)
+    stream = (F.col("IFNUM") == ifnum) & (F.col("PLNUM") == plnum)
+    t0 = F.lit(header.date).cast("timestamp").cast("double")
+    continuum = (continuum_pipeline_distributed(data, header.obsmode)
+                 .filter(stream)
+                 .select("obs_id", (F.col("t") - t0).alias("t"),
+                         "intensity"))
+    # frequency axis as a broadcast (pos, frequency) join, NOT an
+    # N-channel literal array expression: at HIRES widths (16k+
+    # channels) a literal F.array(...) is a giant expression tree —
+    # the measured codegen-blowup failure mode (BENCH_SCALING.md §4).
+    freq_df = validated.sparkSession.createDataFrame(
+        [(i, float(f)) for i, f in enumerate(freqs)],
+        "pos int, frequency double")
+    spectrum = (spectrum_pipeline_distributed(data.filter(stream),
+                                              header.obsmode)
+                .join(F.broadcast(freq_df), "pos")
+                .select("pos", "frequency", "intensity")
+                .orderBy("pos"))
+    return {"continuum": continuum, "spectrum": spectrum}
+
+
 def reduce_sdfits(spark, path: str, ifnum: int = 0, plnum: int = 0,
                   include_time=None, exclude_time=None,
                   include_freq=None, exclude_freq=None,
                   ) -> dict[str, DataFrame]:
     """The reference's full entry point (main.py:20-47) for one SDFITS
-    file: scan (S1/S2) -> validation -> continuum + spectrum products.
+    file: header pass -> scan (S1/S2) -> validation ->
+    reduce_observation.
 
-    Returns {"validated": ..., "continuum": ..., "spectrum": ...} —
-    all lazy except the calibration-height scalar fetch inside
-    continuum_pipeline. Multi-file globs work for the validated scan;
-    the reduction products assume one observation per call, like the
-    reference (loop over files for a corpus, or use the operators
-    directly for the fully-distributed path)."""
-    from radio_data_pipeline_spark.operators.header import ObservationHeader
+    Returns {"validated": ..., "continuum": ..., "spectrum": ...}, all
+    lazy; the header pass is the one eager step. `path` must
+    match exactly one file (ValueError otherwise): the products are
+    one observation's, like the reference — reduce a corpus with
+    continuum_pipeline_distributed / spectrum_pipeline_distributed.
+    channel_count (the false-start threshold) is counted after the
+    time crop, so it differs from the whole file's only when the crop
+    removes every row of some IFNUM or PLNUM value."""
     from radio_data_pipeline_spark.operators.validation import (
         validate_observation,
     )
@@ -290,19 +216,17 @@ def reduce_sdfits(spark, path: str, ifnum: int = 0, plnum: int = 0,
     )
     import json
 
-    hdr_row = read_sdfits_headers(spark, path).collect()[0]
+    hdr_rows = read_sdfits_headers(spark, path).collect()
+    if len(hdr_rows) != 1:
+        raise ValueError(f"reduce_sdfits reduces one SDFITS file; "
+                         f"{path!r} matched {len(hdr_rows)}")
     header = ObservationHeader.from_fits(
-        json.loads(hdr_row["header_json"]),
-        json.loads(hdr_row["history_json"]))
+        json.loads(hdr_rows[0]["header_json"]),
+        json.loads(hdr_rows[0]["history_json"]))
 
     raw = read_sdfits(spark, path)
     validated = validate_observation(raw, channel_window=header.channel_window)
-    kw = dict(include_time=include_time, exclude_time=exclude_time,
-              include_freq=include_freq, exclude_freq=exclude_freq)
-    return {
-        "validated": validated,
-        "continuum": continuum_pipeline(validated, header, ifnum, plnum,
-                                        **kw),
-        "spectrum": spectrum_pipeline(validated, header, ifnum, plnum,
-                                      **kw),
-    }
+    return {"validated": validated,
+            **reduce_observation(validated, header, ifnum, plnum,
+                                 include_time, exclude_time,
+                                 include_freq, exclude_freq)}

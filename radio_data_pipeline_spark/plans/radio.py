@@ -117,7 +117,7 @@ def radio_segmentation_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
         "driver round-trips. The oracle pins the "
         "exact science-row outputs (VALUES; robust per-segment fits "
         "are iterative, not SQL-expressible); equivalence with the "
-        "reference-shaped per-stream pipeline is pinned by "
+        "per-stream NumPy reduction is pinned by "
         "tests/test_radio_pipeline.py.",
     tags=("radio", "mapInPandas", "calibration"),
 )

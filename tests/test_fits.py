@@ -170,6 +170,44 @@ def test_reduce_sdfits_end_to_end(spark, tmp_path):
     assert spect["frequency"].iloc[0] > spect["frequency"].iloc[-1]
 
 
+def test_reduce_sdfits_rejects_multi_file_glob(spark, tmp_path):
+    # the products are one observation's: a glob over two files must
+    # not silently sum both into one spectrum
+    from radio_data_pipeline_spark.pipeline import reduce_sdfits
+    for i in range(2):
+        (tmp_path / f"o{i}.fits").write_bytes(
+            write_sdfits(_obs_pdf(n_science=12), HEADER, HISTORY))
+    with pytest.raises(ValueError, match="matched 2"):
+        reduce_sdfits(spark, str(tmp_path / "o*.fits"))
+
+
+def test_reduce_sdfits_runs_in_few_spark_jobs(spark, tmp_path):
+    # one 4-stream file, both products collected: a reintroduced
+    # driver round-trip (count, fit collect, eager checkpoint) adds
+    # jobs here
+    from radio_data_pipeline_spark.pipeline import reduce_sdfits
+    spec = ObsSpec(obs_id=0, n_science=24)
+    pdf = pd.concat([make_observation(spec, i, p)
+                     for i in (0, 1) for p in (0, 1)], ignore_index=True)
+    pdf = pdf.drop(columns=["obs_id", "row_idx"])
+    pdf["DATE_OBS"] = pdf["DATE_OBS"].map(
+        lambda d: d.strftime("%Y-%m-%dT%H:%M:%S"))
+    path = str(tmp_path / "obs4.fits")
+    (tmp_path / "obs4.fits").write_bytes(write_sdfits(pdf, HEADER, HISTORY))
+    sc = spark.sparkContext
+    group = "reduce-sdfits-job-guard"
+    sc.setJobGroup(group, group)
+    try:
+        products = reduce_sdfits(spark, path)
+        cont = products["continuum"].toPandas()
+        spect = products["spectrum"].toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(cont) == spec.n_science and len(spect) == 64
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 8, f"{len(jobs)} Spark jobs for one file"
+
+
 def test_sdfits_datasource_format(spark, tmp_path):
     # the Spark-4 Python DataSource: spark.read.format("sdfits")
     from radio_data_pipeline_spark.sources.fits_datasource import (

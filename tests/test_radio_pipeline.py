@@ -14,15 +14,20 @@ from radio_data_pipeline_spark.operators.calibration import (
     fit_stats,
     rcr_linear_fit,
 )
-from radio_data_pipeline_spark.pipeline import (
-    continuum_pipeline,
-    spectrum_pipeline,
-)
+from radio_data_pipeline_spark.pipeline import reduce_observation
 from radio_data_pipeline_spark.sources.synthetic import (
     ObsSpec,
     make_header,
     make_observation,
 )
+
+
+def _continuum(df, header, **kw):
+    return reduce_observation(df, header, **kw)["continuum"]
+
+
+def _spectrum(df, header, **kw):
+    return reduce_observation(df, header, **kw)["spectrum"]
 
 
 @pytest.fixture(scope="module")
@@ -42,7 +47,7 @@ def onoff_obs(spark):
 class TestContinuum:
     def test_gain_calibrated_level(self, spark, track_obs):
         df, header, spec = track_obs
-        result = continuum_pipeline(df, header, ifnum=0, plnum=0).toPandas()
+        result = _continuum(df, header, ifnum=0, plnum=0).toPandas()
         assert len(result) == spec.n_science
         # science rows sum to ~base_level; diode delta is cal_height;
         # calibrated intensity should be ~ base_level / cal_height
@@ -55,10 +60,10 @@ class TestContinuum:
 
     def test_time_crop(self, spark, track_obs):
         df, header, spec = track_obs
-        full = continuum_pipeline(df, header).toPandas()
+        full = _continuum(df, header).toPandas()
         t_lo = "2024-03-01T00:00:20"
         t_hi = "2024-03-01T00:01:00"
-        cropped = continuum_pipeline(
+        cropped = _continuum(
             df, header, include_time=[(t_lo, t_hi)]).toPandas()
         assert 0 < len(cropped) < len(full)
         assert cropped["t"].min() > 20.0
@@ -68,7 +73,7 @@ class TestContinuum:
 class TestSpectrum:
     def test_onoff_subtraction(self, spark, onoff_obs):
         df, header, spec = onoff_obs
-        result = spectrum_pipeline(df, header, ifnum=0, plnum=0).toPandas()
+        result = _spectrum(df, header, ifnum=0, plnum=0).toPandas()
         assert len(result) == spec.n_channels
         # ON and OFF science rows have the same level -> the pre-filter
         # keeps only CALSTATE=0 & SWPVALID=0 rows (transition blips and
@@ -80,7 +85,7 @@ class TestSpectrum:
 
     def test_track_spectrum_sums_time(self, spark, track_obs):
         df, header, spec = track_obs
-        result = spectrum_pipeline(df, header, ifnum=0, plnum=0).toPandas()
+        result = _spectrum(df, header, ifnum=0, plnum=0).toPandas()
         assert len(result) == spec.n_channels
         # per-channel sum over the CALSTATE=0 & SWPVALID=0 rows
         pdf = make_observation(spec)
@@ -97,7 +102,7 @@ class TestSpectrum:
                        noise=0.2)
         df = spark.createDataFrame(make_observation(spec))
         header = make_header(spec)
-        out = spectrum_pipeline(df, header, ifnum=0, plnum=0)
+        out = _spectrum(df, header, ifnum=0, plnum=0)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
         # a literal-array plan would carry thousands of float literals
@@ -116,12 +121,43 @@ class TestSpectrum:
         df, header, spec = track_obs
         freqs = make_header(spec).frequencies(0)
         lo, hi = freqs[40], freqs[10]   # descending axis
-        result = spectrum_pipeline(
+        result = _spectrum(
             df, header, include_freq=[(lo, hi)]).toPandas()
         # strictly-inside semantics (utils.py:291): endpoints excluded
         assert len(result) == 29
         assert result["frequency"].min() > lo
         assert result["frequency"].max() < hi
+
+
+def test_onoff_sign_is_positional_and_all_nan_channel_is_null(spark):
+    # on -> off -> on stream: rows at or after the first 'onoff:off'
+    # row count as OFF, whatever their label (spectrum.py:64-65); a
+    # channel NaN in every row (masked to NULL) sums to NULL, not 0
+    from radio_data_pipeline_spark.operators.validation import (
+        validate_observation,
+    )
+    spec = ObsSpec(obs_id=3, onoff=True, n_science=20, noise=0.2)
+    pdf = make_observation(spec)
+    post_cal = len(pdf) - 2 * max(spec.n_cal, 4)
+    pdf.loc[post_cal:, "OBSMODE"] = "onoff:on"
+    pdf["DATA"] = [d[:5] + [float("nan")] + d[6:] for d in pdf["DATA"]]
+    df = validate_observation(spark.createDataFrame(pdf),
+                              channel_window=(0, spec.n_channels - 1))
+    got = (_spectrum(df, make_header(spec)).toPandas()
+           .sort_values("pos")["intensity"].to_numpy())
+
+    data = np.vstack(pdf["DATA"].to_numpy())
+    rows = ((pdf["CALSTATE"] == 0) & (pdf["SWPVALID"] == 0)).to_numpy()
+    is_off = pdf["OBSMODE"].str.contains("onoff:off").to_numpy()
+    positional = np.where(np.arange(len(pdf)) >= is_off.argmax(), -1.0, 1.0)
+    labelled = np.where(is_off, -1.0, 1.0)
+    expected = np.nansum(data[rows] * positional[rows, None], axis=0)
+    assert not np.allclose(
+        expected, np.nansum(data[rows] * labelled[rows, None], axis=0))
+    assert len(got) == spec.n_channels
+    assert np.isnan(got[5])
+    keep = np.arange(spec.n_channels) != 5
+    np.testing.assert_allclose(got[keep], expected[keep], rtol=1e-9)
 
 
 def _ss_median_rcr(x, y, max_iter=50):
@@ -248,17 +284,37 @@ class TestCalibrationMath:
                                    rtol=1e-12)
 
 
-def test_distributed_continuum_matches_per_stream_pipeline(spark):
-    # the zero-driver-round-trip path must equal the reference-shaped
-    # single-observation pipeline on every stream of a multi-obs set
+def _numpy_reduction(pdf):
+    """Every stream of the synthetic set `pdf` reduced by the benchmark's
+    NumPy reduction (perfbench/inputs.py): the continuum
+    (obs_id, IFNUM, PLNUM, t, intensity) and the spectrum
+    (obs_id, IFNUM, PLNUM, pos, intensity)."""
+    import numpy as np
     import pandas as pd
+    from perfbench.inputs import _reduce_stream, validated
+    conts, specs = [], []
+    for obs_id, obs in pdf.groupby("obs_id"):
+        v = validated(obs)
+        cc = v["IFNUM"].nunique() * v["PLNUM"].nunique()
+        for (ifnum, plnum), stream in v.groupby(["IFNUM", "PLNUM"]):
+            (t, y), spec = _reduce_stream(stream.sort_values("row_idx"), cc,
+                                          0.0, sign_by_position=True)
+            ids = dict(obs_id=obs_id, IFNUM=ifnum, PLNUM=plnum)
+            conts.append(pd.DataFrame({"t": t, "intensity": y, **ids}))
+            specs.append(pd.DataFrame({"pos": np.arange(len(spec)),
+                                       "intensity": spec, **ids}))
+    return (pd.concat(conts, ignore_index=True),
+            pd.concat(specs, ignore_index=True))
+
+
+def test_distributed_continuum_matches_per_stream_pipeline(spark):
+    # the zero-driver-round-trip path must equal the per-stream NumPy
+    # reduction on every stream of a multi-obs set
     from radio_data_pipeline_spark.pipeline import (
-        continuum_pipeline,
         continuum_pipeline_distributed,
     )
     from radio_data_pipeline_spark.sources.synthetic import (
         ObsSpec,
-        make_header,
         make_observation_set,
     )
     specs = [ObsSpec(obs_id=0, n_science=24),
@@ -269,24 +325,12 @@ def test_distributed_continuum_matches_per_stream_pipeline(spark):
     dist = (continuum_pipeline_distributed(df).toPandas()
             .sort_values(["obs_id", "IFNUM", "PLNUM", "t"])
             .reset_index(drop=True))
-
-    frames = []
-    for spec in specs:
-        obs_df = df.filter(F.col("obs_id") == spec.obs_id)
-        header = make_header(spec)
-        for ifnum in (0, 1):
-            for plnum in (0, 1):
-                out = (continuum_pipeline(obs_df, header, ifnum, plnum)
-                       .toPandas().sort_values("t"))
-                out["IFNUM"], out["PLNUM"] = ifnum, plnum
-                frames.append(out)
-    classic = pd.concat(frames, ignore_index=True)
-    classic = (classic.sort_values(["obs_id", "IFNUM", "PLNUM", "t"])
+    classic = (_numpy_reduction(pdf)[0]
+               .sort_values(["obs_id", "IFNUM", "PLNUM", "t"])
                .reset_index(drop=True))
 
     assert len(dist) == len(classic) == 2 * 4 * 24
-    # intensities must agree exactly (same fits, same branch logic);
-    # t differs by the header epoch offset only
+    # intensities must agree exactly (same fits, same branch logic)
     import numpy as np
     np.testing.assert_allclose(dist["intensity"].to_numpy(),
                                classic["intensity"].to_numpy(), rtol=1e-9)
@@ -294,14 +338,11 @@ def test_distributed_continuum_matches_per_stream_pipeline(spark):
 
 def test_distributed_spectrum_matches_per_stream_pipeline(spark):
     import numpy as np
-    import pandas as pd
     from radio_data_pipeline_spark.pipeline import (
-        spectrum_pipeline,
         spectrum_pipeline_distributed,
     )
     from radio_data_pipeline_spark.sources.synthetic import (
         ObsSpec,
-        make_header,
         make_observation_set,
     )
     specs = [ObsSpec(obs_id=0, n_science=20, onoff=True),
@@ -313,25 +354,32 @@ def test_distributed_spectrum_matches_per_stream_pipeline(spark):
             .toPandas()
             .sort_values(["obs_id", "IFNUM", "PLNUM", "pos"])
             .reset_index(drop=True))
-
-    frames = []
-    for spec in specs:
-        obs_df = df.filter(F.col("obs_id") == spec.obs_id)
-        header = make_header(spec)
-        for ifnum in (0, 1):
-            for plnum in (0, 1):
-                out = (spectrum_pipeline(obs_df, header, ifnum, plnum)
-                       .toPandas().sort_values("pos"))
-                out["obs_id"], out["IFNUM"], out["PLNUM"] = \
-                    spec.obs_id, ifnum, plnum
-                frames.append(out)
-    classic = (pd.concat(frames, ignore_index=True)
+    classic = (_numpy_reduction(pdf)[1]
                .sort_values(["obs_id", "IFNUM", "PLNUM", "pos"])
                .reset_index(drop=True))
 
     assert len(dist) == len(classic) == 2 * 4 * 64
     np.testing.assert_allclose(dist["intensity"].to_numpy(),
                                classic["intensity"].to_numpy(), rtol=1e-9)
+
+
+def test_reduce_observation_counts_channels_over_the_whole_file(spark):
+    # the stream is selected after the continuum kernel: channel_count
+    # stays 2 x 2 = 4, so a 10-row false start is discarded (10 <= 12);
+    # counted on the selected stream alone it would be kept (10 > 3)
+    import pandas as pd
+    from radio_data_pipeline_spark.sources.synthetic import ObsSpec
+    spec = ObsSpec(obs_id=0, n_science=24, false_start=True)
+    pdf = _streams(spec, lambda s: pd.concat([s.iloc[:16],
+                                              s.iloc[[16] * 10],
+                                              s.iloc[18:]]))
+    got = (_continuum(spark.createDataFrame(pdf), make_header(spec))
+           .toPandas().sort_values("t"))
+    ref = _numpy_reduction(pdf)[0]
+    ref = ref[(ref["IFNUM"] == 0) & (ref["PLNUM"] == 0)].sort_values("t")
+    assert len(got) == len(ref) == spec.n_science
+    np.testing.assert_allclose(got["intensity"].to_numpy(),
+                               ref["intensity"].to_numpy(), rtol=1e-9)
 
 
 def test_wide_channel_arrays(spark):
