@@ -541,170 +541,6 @@ def _nearest_label_small(pv: DataFrame, cents_arr: DataFrame,
     return _argmin_label(d, label)
 
 
-def prepare_assignment(cc: DataFrame, two_level: bool,
-                       coarse_clusters: int | None) -> dict:
-    """Precompute (and Spark-persist) every quantizer-DERIVED table
-    ``_assign_points`` needs — the exploded centroids, and in
-    two-level mode the coarse table, the fine-cell filing, and the
-    compact centroid-array join table — so a serving loop pays the
-    k-row prep ONCE instead of per micro-batch. Rebuilding these per
-    call was measured at ~0.5 s/batch of pure fixed cost in the
-    incremental-ingest serving path (r6 VERDICT #1): the tables
-    depend only on the FROZEN quantizer, never on the batch.
-
-    Returns an opaque dict for ``assign_to_centroids(...,
-    prepared=...)`` / ``_assign_points(..., prepared=...)``. The
-    caller owns the caches: call ``release_assignment`` when done,
-    and rebuild after any requantize (the tables embed the old
-    centroids)."""
-    cc = cc.persist()
-    prep = {"cc": cc, "two_level": bool(two_level),
-            "coarse_clusters": coarse_clusters, "_persisted": [cc]}
-    try:
-        if two_level:
-            if coarse_clusters is None:
-                raise ValueError(
-                    "two_level assignment requires coarse_clusters")
-            coarse, ccf = _quantizer_tables(cc, coarse_clusters)
-            coarse = coarse.persist()
-            prep["_persisted"].append(coarse)
-            # pre-spread the k-row fine table (see the micro-batch
-            # fine join): cached at AQE's byte-coalesced ~1 partition
-            # it serializes the whole fine fold into one task per
-            # batch; spread ONCE here, every batch inherits it
-            ccf = ccf.repartition(
-                cc.sparkSession.sparkContext.defaultParallelism
-            ).persist()
-            prep["_persisted"].append(ccf)
-            coarse_arr = _centroid_array_form(coarse, "cell").persist()
-            prep["_persisted"].append(coarse_arr)
-            # eager: a serving loop should pay the prep here, not
-            # inside its first micro-batch
-            coarse.count()
-            n_fine = ccf.count()
-            coarse_arr.count()
-            prep["coarse"] = coarse
-            prep["ccf"] = ccf
-            prep["coarse_arr"] = coarse_arr
-            d = int(ccf.select(F.size("cv")).first()[0])
-            if n_fine * d <= _INLINE_PACK_MAX_ELEMS:
-                # single-row PACKS for the one-projection micro-batch
-                # assignment (see _assign_points_inline): the whole
-                # quantizer as one broadcastable row — an array of
-                # (cell, cv) coarse structs plus a cell -> candidate
-                # fine centroids map. collect_list order is
-                # irrelevant: the consumer is array_min (order-free).
-                cpack = (coarse_arr.agg(F.collect_list(
-                    F.struct(F.col("cell"), F.col("cv"))).alias("ca"))
-                    .persist())
-                fpack = (ccf.groupBy("cell")
-                         .agg(F.collect_list(
-                             F.struct(F.col("cluster"),
-                                      F.col("cv"))).alias("cands"))
-                         .agg(F.map_from_entries(F.collect_list(
-                             F.struct(F.col("cell"),
-                                      F.col("cands")))).alias("fm"))
-                         .persist())
-                prep["_persisted"] += [cpack, fpack]
-                cpack.count()
-                fpack.count()
-                prep["coarse_pack"] = cpack
-                prep["fine_pack"] = fpack
-        else:
-            cc_arr = _centroid_array_form(cc, "cluster").persist()
-            prep["_persisted"].append(cc_arr)
-            cc.count()
-            n_fine = cc_arr.count()
-            prep["cc_arr"] = cc_arr
-            d = int(cc_arr.select(F.size("cv")).first()[0])
-            if n_fine * d <= _INLINE_PACK_MAX_ELEMS:
-                cpack = (cc_arr.agg(F.collect_list(
-                    F.struct(F.col("cluster"), F.col("cv")))
-                    .alias("ca")).persist())
-                prep["_persisted"].append(cpack)
-                cpack.count()
-                prep["flat_pack"] = cpack
-    except BaseException:
-        # a failed open must not leak pinned partitions into the
-        # shared session (every frame is registered before its first
-        # materialization, so the release covers partial failures)
-        release_assignment(prep)
-        raise
-    return prep
-
-
-def release_assignment(prep: dict) -> None:
-    """Unpersist every frame ``prepare_assignment`` pinned."""
-    for df in prep.get("_persisted", []):
-        df.unpersist()
-
-
-# ceiling on k*d for the single-row quantizer PACKS the inline
-# micro-batch assignment broadcasts (~32 MB of doubles at 4M
-# elements): above it prepare_assignment simply skips the packs and
-# the serving path falls back to the join-shaped assignment — the
-# inline form is a small-quantizer fast path, never a contract
-_INLINE_PACK_MAX_ELEMS = 4_000_000
-
-
-def _argmin_over_pack(v_col, pack_col, label_field: str):
-    """In-row argmin: for one point vector ``v_col`` and an array of
-    (label, cv) candidate structs, return the label minimizing the
-    position-order (x-y)^2 fold. array_min over struct(d2, label) is
-    the lexicographic (d2, label) minimum — the EXACT tie-break
-    _argmin_label's row_number(order by d2, label) applies, with the
-    d2 expression bit-identical (same zip_with/aggregate fold) — and
-    is order-free, so the pack's collect_list order cannot matter."""
-    return F.array_min(F.transform(
-        pack_col,
-        lambda c: F.struct(
-            F.aggregate(F.zip_with(v_col, c["cv"],
-                                   lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x).alias("d2"),
-            c[label_field].alias("label"))))["label"]
-
-
-def _assign_points_inline(pv: DataFrame, prepared: dict,
-                          keep_v: bool = False) -> DataFrame:
-    """Micro-batch assignment as ONE spread projection (serving fast
-    path, r9): the prepared single-row quantizer packs are broadcast
-    and BOTH argmin levels run as in-row higher-order folds — no
-    aggregation shuffle, no join-back, so the per-batch AQE job
-    cascade (~5 shuffles / 8 jobs in the join-shaped path, each
-    paying a scheduling floor) collapses to one round-robin spread
-    of the byte-tiny batch plus one projection. Verdict-identical to
-    the join-shaped path: same fold, same (d2, label) tie-break
-    (see _argmin_over_pack), pinned by equivalence test.
-
-    Only reachable through prepare_assignment's size guard
-    (_INLINE_PACK_MAX_ELEMS): at auto-scale k the packs stop being
-    built and the join-shaped path serves. The RR spread stays — a
-    one-file micro-batch is one input split, and the |batch|·~2√k·d
-    fold compute would otherwise run single-task (the measured
-    byte-blindness class)."""
-    spread = pv.sparkSession.sparkContext.defaultParallelism
-    pv = pv.repartition(spread)
-    keep = ["vec_id"] + (["v"] if keep_v else [])
-    if prepared["two_level"]:
-        out = (pv.crossJoin(F.broadcast(prepared["coarse_pack"]))
-               .withColumn("cell",
-                           _argmin_over_pack(F.col("v"),
-                                             F.col("ca"), "cell"))
-               .crossJoin(F.broadcast(prepared["fine_pack"]))
-               .select(*keep,
-                       _argmin_over_pack(
-                           F.col("v"),
-                           F.element_at(F.col("fm"), F.col("cell")),
-                           "cluster").alias("cluster")))
-    else:
-        out = (pv.crossJoin(F.broadcast(prepared["flat_pack"]))
-               .select(*keep,
-                       _argmin_over_pack(F.col("v"), F.col("ca"),
-                                         "cluster").alias("cluster")))
-    return out
-
-
 def _quantizer_tables(cc: DataFrame, coarse_clusters: int,
                       merge_hint: bool = False
                       ) -> tuple[DataFrame, DataFrame]:
@@ -717,8 +553,8 @@ def _quantizer_tables(cc: DataFrame, coarse_clusters: int,
     nearest cell). ``merge_hint`` pins the k-row cell-filing join to
     SMJ for the CORPUS regime — at auto scale k grows with N and the
     planner's compressed-size stats are deceptively small (the
-    measured requantize hazard); the prepared/serving path persists
-    the bounded tables instead and keeps the planner's choice."""
+    measured requantize hazard); the micro-batch path keeps the
+    planner's choice."""
     cells = (cc.select("cluster").distinct()
              .orderBy("cluster").limit(coarse_clusters)
              .select(F.col("cluster").alias("cell")))
@@ -739,8 +575,7 @@ def _quantizer_tables(cc: DataFrame, coarse_clusters: int,
 
 def _assign_points(pv: DataFrame, cc: DataFrame, two_level: bool = False,
                    coarse_clusters: int | None = None,
-                   broadcast_points: bool = False,
-                   prepared: dict | None = None) -> DataFrame:
+                   broadcast_points: bool = False) -> DataFrame:
     """Assign COMPACT points ``pv`` (vec_id, v array) to centroids
     ``cc`` (cluster, pos, cval). Flat mode broadcasts the centroid
     table (bounded k only); two-level mode routes through a
@@ -762,40 +597,23 @@ def _assign_points(pv: DataFrame, cc: DataFrame, two_level: bool = False,
     so the d2 aggregation shuffled ~11e9 uncombined partials and
     filled the disk. The vec_id join is merge-hinted — both sides
     scale with N, so no broadcast is ever correct at index scale."""
-    if prepared is not None:
-        two_level = prepared["two_level"]
-        coarse_clusters = prepared["coarse_clusters"]
-        cc = prepared["cc"]
-        if broadcast_points and (
-                "coarse_pack" in prepared or "flat_pack" in prepared):
-            # serving fast path: one spread projection over the
-            # prepared single-row packs (see _assign_points_inline)
-            return _assign_points_inline(pv, prepared)
     if not two_level:
         if broadcast_points:
             # micro-batch flat: |batch|·k folds in place instead of
             # the |batch|·k·d exploded join (see _nearest_label_small)
-            cc_arr = (prepared["cc_arr"] if prepared is not None
-                      else _centroid_array_form(cc, "cluster"))
-            return _nearest_label_small(pv, cc_arr, "cluster")
+            return _nearest_label_small(
+                pv, _centroid_array_form(cc, "cluster"), "cluster")
         rr = pv.select("vec_id", F.posexplode("v").alias("pos", "val"))
         return _nearest_label(rr, F.broadcast(cc), "cluster")
     if coarse_clusters is None:
         raise ValueError("two_level assignment requires coarse_clusters")
 
-    if prepared is not None:
-        # serving path: the quantizer-derived tables were built and
-        # persisted ONCE by prepare_assignment — per-batch cost is
-        # just the batch-sized joins below
-        coarse, ccf = prepared["coarse"], prepared["ccf"]
-    else:
-        coarse, ccf = _quantizer_tables(cc, coarse_clusters,
-                                        merge_hint=not broadcast_points)
+    coarse, ccf = _quantizer_tables(cc, coarse_clusters,
+                                    merge_hint=not broadcast_points)
     if broadcast_points:
         # micro-batch coarse step in the same array form
-        coarse_arr = (prepared["coarse_arr"] if prepared is not None
-                      else _centroid_array_form(coarse, "cell"))
-        p_cell = _nearest_label_small(pv, coarse_arr, "cell")
+        p_cell = _nearest_label_small(
+            pv, _centroid_array_form(coarse, "cell"), "cell")
     else:
         # point -> nearest cell (N x sqrt(k) x d partials; coarse
         # table broadcast — it is sqrt(k)·d rows, bounded)
@@ -824,23 +642,21 @@ def _assign_points(pv: DataFrame, cc: DataFrame, two_level: bool = False,
     # approximate in two-level mode (see the docstring contract);
     # flat mode — every pinned oracle — is untouched.
     if broadcast_points:
-        # MICRO-BATCH regime (the serving kernel's explicit contract:
+        # MICRO-BATCH regime (the incremental kernel's explicit contract:
         # points are batch-bounded): broadcast the batch and its cell
         # assignment straight into the k-row centroid-array table —
         # no sort, no salt machinery. Never used for corpus-sized
-        # inputs (requantize / batch dedup), where the broadcast
+        # inputs (batch dedup), where the broadcast
         # would be the deceptive-stats hazard all over. The k-row
         # STREAM side is round-robin spread first: the quantizer
         # table reads from one small parquet file and AQE coalesces
         # its byte-tiny shuffles to ~1 partition, so the whole
         # |batch|·(k/coarse) fine fold otherwise lands in a single
         # task (measured 15.0 s for 3.8M pair folds at a 20k batch /
-        # k=7813 vs ~1 s spread; prepare_assignment ships its ccf
-        # pre-spread so the serving loop pays this shuffle once).
+        # k=7813 vs ~1 s spread).
         pts = pv.join(F.broadcast(p_cell), "vec_id")
-        if prepared is None:
-            ccf = ccf.repartition(
-                pv.sparkSession.sparkContext.defaultParallelism)
+        ccf = ccf.repartition(
+            pv.sparkSession.sparkContext.defaultParallelism)
         pairs = ccf.join(F.broadcast(pts), "cell")
     else:
         # CORPUS regime: the pair join is salted — cell sizes follow
@@ -895,8 +711,8 @@ def train_semantic_centroids(df: DataFrame, n_clusters: int,
                              _n_rows: int | None = None,
                              ) -> tuple[DataFrame, dict]:
     """Train the relational-Lloyd quantizer semantic_dedup clusters
-    with, WITHOUT assigning or deduping — the piece the incremental
-    ingest tier persists (streaming/semantic.py): centroids trained
+    with, WITHOUT assigning or deduping — the piece incremental dedup
+    (semantic_dedup_batch_against_index) freezes: centroids trained
     once, then every arriving batch assigns against the frozen table.
     Returns ``(centroids, resolved)`` where centroids is the exploded
     (cluster, pos, cval) frame after ``lloyd_rounds - 1`` update
@@ -979,25 +795,21 @@ def assign_to_centroids(df: DataFrame, centroids: DataFrame,
                         id_col: str = "vec_id",
                         two_level: bool = False,
                         coarse_clusters: int | None = None,
-                        points_are_small: bool = False,
-                        prepared: dict | None = None) -> DataFrame:
+                        points_are_small: bool = False) -> DataFrame:
     """Assign each row of ``df`` to its nearest centroid from an
     exploded (cluster, pos, cval) table (train_semantic_centroids
-    output, or a persisted copy of one). Returns (vec_id, cluster).
-    The serving half of the quantizer: incremental semantic dedup
+    output). Returns (vec_id, cluster).
+    The assignment half of the quantizer: incremental semantic dedup
     assigns every arriving micro-batch with this against FROZEN
     centroids, so per-batch cost is O(|batch|·k·d) — independent of
     the accumulated corpus. ``points_are_small`` is the micro-batch
     contract (bounded input): the two-level fine stage broadcasts the
     batch instead of paying the corpus-scale sort/salt machinery —
-    never set it for corpus-sized inputs. ``prepared`` (from
-    prepare_assignment) supplies the persisted quantizer-derived
-    tables so a serving loop skips the per-call rebuild."""
+    never set it for corpus-sized inputs."""
     v = df.select(F.col(id_col).alias("vec_id"),
                   _as_double(F.col(vec_col)).alias("v"))
     return _assign_points(v, centroids, two_level, coarse_clusters,
-                          broadcast_points=points_are_small,
-                          prepared=prepared)
+                          broadcast_points=points_are_small)
 
 
 def _semantic_removed(assigned: DataFrame, eps: float,
@@ -1018,7 +830,7 @@ def _semantic_removed(assigned: DataFrame, eps: float,
     is the SAME sqrt(sum-of-squares) expression evaluated on the same
     vector, and the divisor keeps the same (na·nb) product shape.
 
-    ``batch_bounded`` (the serving kernel's micro-batch contract
+    ``batch_bounded`` (the incremental kernel's micro-batch contract
     ONLY — never corpus-sized inputs): broadcast the witness table
     and round-robin-spread the assigned side. The default
     cluster-keyed join places every pair of one cluster in one task,
@@ -1156,6 +968,85 @@ def semantic_dedup(df: DataFrame, eps: float = 0.4,
         .select("vec_id", "cluster",
                 F.col("_rm").isNull().alias("is_kept"))
     )
+
+
+def semantic_dedup_batch_against_index(
+        batch_df: DataFrame, index: DataFrame | None, batch_id: int,
+        centroids: DataFrame, meta: dict | None = None,
+        eps: float = 0.4, vec_col: str = "embedding",
+        id_col: str = "vec_id", dedup_identical: bool = True,
+        ) -> tuple[DataFrame, DataFrame]:
+    """Incremental SemDeDup: dedup one micro-batch within itself and
+    against ``index``, the (id, v, vn, cell) rows of every previously
+    processed batch (None for the first). ``centroids``/``meta`` are a
+    FROZEN quantizer from train_semantic_centroids. ``batch_id``
+    numbers the chunk in arrival order; verdicts do not depend on it.
+
+    Within the batch the semantic_dedup rule applies (a smaller-id
+    same-cell witness at round(cosine, 6) >= eps); across batches
+    arrival order wins (any index hit drops the new doc). Under
+    id-ordered arrival the survivors equal batch semantic_dedup of the
+    whole corpus. Returns ``(survivors, rows)``: ``rows`` are the
+    batch's index rows — dropped docs included, so a later twin of a
+    dropped doc still matches — returned PERSISTED; the caller
+    appends them to the next call's index and unpersists them."""
+    if meta is None:
+        # no silent default: a two-level-trained quantizer served flat
+        # assigns probes with a different shape than the index rows
+        # were filed with — boundary twins land in different cells
+        raise ValueError(
+            "meta required alongside caller-supplied centroids — pass "
+            "the resolved dict train_semantic_centroids returned")
+    a = assign_to_centroids(batch_df, centroids, vec_col=vec_col,
+                            id_col=id_col, two_level=meta["two_level"],
+                            coarse_clusters=meta["coarse_clusters"],
+                            points_are_small=True)
+    v = batch_df.select(F.col(id_col).alias("vec_id"),
+                        _as_double(F.col(vec_col)).alias("v"))
+    rows = (v.join(a, "vec_id")
+            .select(F.col("vec_id").alias("id"), "v",
+                    F.col("cluster").alias("cell"))
+            .withColumn("vn", l2_norm(F.col("v")))
+            .persist())
+    try:
+        assigned = rows.select(F.col("id").alias("vec_id"), "v", "vn",
+                               F.col("cell").alias("cluster"))
+        dropped = _semantic_removed(assigned, eps, dedup_identical,
+                                    batch_bounded=True)
+        if index is not None:
+            # bounded driver metadata: <= min(|batch|, k) cell ids.
+            # The pruned index is round-robin spread before the pair
+            # join: a clustered corpus puts most pairs in a few hot
+            # cells, and a byte-small scan would run them in one task.
+            cells = [r["cluster"] for r in
+                     assigned.select("cluster").distinct().collect()]
+            pruned = (index.filter(F.col("cell").isin(cells))
+                      .repartition(rows.sparkSession.sparkContext
+                                   .defaultParallelism * 2))
+            matched = (
+                pruned
+                .join(F.broadcast(assigned.select(
+                          F.col("vec_id").alias("new_id"),
+                          F.col("cluster").alias("cell"),
+                          F.col("v").alias("nv"),
+                          F.col("vn").alias("nvn"))),
+                      "cell")
+                .filter(F.round(_dot_double(F.col("v"), F.col("nv"))
+                                / (F.col("vn") * F.col("nvn")), 6)
+                        >= eps)
+                .select(F.col("new_id").alias("vec_id")))
+            dropped = dropped.union(matched)
+        # dropped is bounded by |batch| ids, so the anti-join build
+        # side is broadcast statically: batch_df never shuffles
+        survivors = batch_df.join(
+            F.broadcast(dropped.distinct()
+                        .withColumnRenamed("vec_id", id_col)),
+            id_col, "left_anti")
+    except BaseException:
+        # the kernel owns `rows` until it returns it
+        rows.unpersist()
+        raise
+    return survivors, rows
 
 
 def write_ivf_index(df: DataFrame, path: str, n_centroids: int = 8,
@@ -1322,9 +1213,9 @@ def append_to_lsh_index(df: DataFrame, path: str, n_planes: int = 6,
     files, visible atomically per file).
 
     At-least-once caveat: a retried append duplicates its rows (plain
-    parquet append has no transaction). Retry-safe ingest should wrap
-    this in the per-batch-directory pattern of streaming/dedup.py, or
-    follow with an exact dedup on ``id_col`` at read time."""
+    parquet append has no transaction). Retry-safe ingest should write
+    each batch to its own directory with mode overwrite, or follow
+    with an exact dedup on ``id_col`` at read time."""
     head = (df.select(vec_col).filter(F.col(vec_col).isNotNull()).first())
     if head is None:
         raise ValueError("cannot append an empty/all-null vector table")

@@ -1136,27 +1136,24 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rem.vec_id IS NULL
     ORDER BY av.vec_id
     """,
-    doc="Incremental SemDeDup ingest (streaming/semantic.py "
+    doc="Incremental SemDeDup ingest (functions/similarity.py "
         "semantic_dedup_batch_against_index): the corpus arrives as "
         "three id-ordered chunks, each assigned against the ONE "
-        "frozen quantizer (trained up front — the init_semantic_index "
-        "contract) and deduped batch-locally plus against the "
-        "accumulated (id, v, cell) index of every previously "
-        "processed doc; arrival order wins across batches. Under "
-        "id-ordered arrival this equals batch semantic_dedup of the "
-        "full corpus — the equivalence the oracle checks (same CTE "
-        "chain as semantic_dedup_stats, survivors view) and "
-        "tests/test_streaming_semantic.py pins against the persisted "
-        "partition layout with crash-replay and compaction. Output: "
-        "surviving vec_ids with their quantizer cell.",
+        "frozen quantizer (trained up front) and deduped "
+        "batch-locally plus against the accumulated (id, v, cell) "
+        "index of every previously processed doc; arrival order wins "
+        "across batches. Under id-ordered arrival this equals batch "
+        "semantic_dedup of the full corpus — the equivalence the "
+        "oracle checks (same CTE chain as semantic_dedup_stats, "
+        "survivors view) and tests/test_dedup_caps.py pins across "
+        "chunk granularities. Output: surviving vec_ids with their "
+        "quantizer cell.",
     tags=("similarity", "dedup", "streaming", "incremental"),
 )
 def semantic_dedup_survivors_incremental(spark: SparkSession,
                                          sf_dir: str) -> DataFrame:
     from radio_data_pipeline_spark.functions.similarity import (
-        train_semantic_centroids)
-    from radio_data_pipeline_spark.streaming.semantic import (
-        semantic_dedup_batch_against_index)
+        semantic_dedup_batch_against_index, train_semantic_centroids)
 
     emb = _emb(spark, sf_dir)
     cents, resolved = train_semantic_centroids(

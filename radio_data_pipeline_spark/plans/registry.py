@@ -178,8 +178,7 @@ SAMPLE_WINDOW = (
     "simhash_docs", "dedup_clusters", "near_dup_survivors_greedy",
     "corpus_refinery_report",
     # round-10 rotation (r9 VERDICT #2): the composed multi-signal
-    # gate's batch form — round 9's capstone tier — gets driver-gate
-    # evidence (batch equivalence anchor for streaming/multi_signal)
+    # dedup gets driver-gate evidence
     "dedup_multi_signal",
     # text analysis (doc_fingerprint rotated out, covered by family)
     "text_stats", "language_id", "quality_score",

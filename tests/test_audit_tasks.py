@@ -39,34 +39,29 @@ def test_measure_records_stage_metrics(spark):
     assert rec.flagged(min_task_ms=60_000) == []
 
 
-def test_shipped_semantic_kernel_is_clean(spark, tmp_path):
-    """The real serving kernel (semantic_dedup_batch_against_index on
-    a persisted index, handle mode) runs ZERO byte-blind stages at a
-    probe size where the pre-fix shape measurably flagged — the
-    regression canary wired to the actual library path."""
+def test_shipped_semantic_kernel_is_clean(spark):
+    """The real incremental kernel (semantic_dedup_batch_against_index
+    probing the first batch's rows as its index) runs ZERO byte-blind
+    stages at a probe size where the pre-fix shape measurably flagged
+    — the regression canary wired to the actual library path."""
     import pyspark.sql.functions as F
 
-    from radio_data_pipeline_spark.streaming.semantic import (
-        append_semantic_batch, init_semantic_index,
-        open_semantic_index, semantic_dedup_batch_against_index)
+    from radio_data_pipeline_spark.functions.similarity import (
+        semantic_dedup_batch_against_index, train_semantic_centroids)
 
     df = (spark.range(3000)
           .select(F.col("id").alias("vec_id"),
                   F.transform(F.sequence(F.lit(1), F.lit(32)),
                               lambda i: F.sin(F.col("id") % 7 + i)
                               .cast("double")).alias("embedding")))
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, 8, lloyd_rounds=1)
-    h = open_semantic_index(spark, index)
+    cents, meta = train_semantic_centroids(df, 8, lloyd_rounds=1)
+    _, rows = semantic_dedup_batch_against_index(
+        df, None, 0, cents, meta, eps=0.95)
     try:
-        _, rows = semantic_dedup_batch_against_index(
-            df, h, 0, eps=0.95)
-        append_semantic_batch(rows, index, 0)
-        rows.unpersist()
         batch = df.filter(F.col("vec_id") < 500)
         with measure(spark) as rec:
             s, rows2 = semantic_dedup_batch_against_index(
-                batch, h, 1, eps=0.95)
+                batch, rows, 1, cents, meta, eps=0.95)
             s.count()
             rows2.unpersist()
         # kernel stages exist and none concentrates heavy compute on
@@ -74,7 +69,7 @@ def test_shipped_semantic_kernel_is_clean(spark, tmp_path):
         assert rec.stages
         assert rec.flagged(min_task_ms=1500) == [], rec.stages[:5]
     finally:
-        h.close()
+        rows.unpersist()
 
 
 if __name__ == "__main__":

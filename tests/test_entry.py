@@ -66,7 +66,7 @@ def test_sample_window_pins_critical_families_in_first_50():
         {"semantic_dedup_stats"}, {"knn_join_topk"},
         {"near_dup_survivors_greedy"}, {"corpus_refinery_report"},
         # round-6 families: span-level exact-substring dedup and
-        # incremental semantic dedup (streaming/semantic.py)
+        # incremental semantic dedup (functions/similarity.py)
         {"exact_substring_spans"},
         {"semantic_dedup_survivors_incremental"},
         # round-7 rotations (r6 VERDICT #5): the salted sessionize

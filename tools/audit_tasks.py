@@ -152,8 +152,9 @@ def _force(df) -> int:
 def _canary_probe_join(spark, tmp: str, fixed: bool):
     """Shape 1: pair join against a PRUNED index scan that fits one
     split. Pre-fix: scan feeds the join as-is (1 task owns every
-    pair). Fix: round-robin the pruned scan first (shipped at
-    streaming/semantic.py probe)."""
+    pair). Fix: round-robin the pruned scan first (shipped at the
+    functions/similarity.py semantic_dedup_batch_against_index
+    probe)."""
     from pyspark.sql import functions as F
     path = f"{tmp}/probe_idx"
     if not os.path.exists(path):

@@ -1,12 +1,11 @@
 #!/usr/bin/env python
 """Cluster-mode (separate-JVM) check of library paths NO registered
-query exercises: the two-level semantic_dedup assignment, the salted
-sessionization helper, and the widened-prefix band-index kernel with
-compaction. run_cluster_parity.py sweeps every REGISTERED query under
-local-cluster; these round-6 additions are library-level (the
-registered semantic_dedup_stats pins k=4 = flat path; the band index
-has no oracle query at prefix_len=3), so without this they would only
-ever run inside the threaded local[N] suite.
+query exercises: the two-level semantic_dedup assignment and the
+salted sessionization helper. run_cluster_parity.py sweeps every
+REGISTERED query under local-cluster; these two are library-level
+(the registered semantic_dedup_stats pins k=4 = flat path), so
+without this they would only ever run inside the threaded local[N]
+suite.
 
 Usage: python tools/run_cluster_library_check.py [master]
 """
@@ -15,7 +14,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,11 +29,6 @@ from radio_data_pipeline_spark.operators.skew import (  # noqa: E402
     salted_sessionize,
 )
 from radio_data_pipeline_spark.session import get_spark  # noqa: E402
-from radio_data_pipeline_spark.streaming.dedup import (  # noqa: E402
-    append_batch_bands,
-    compact_band_index,
-    dedup_batch_against_index,
-)
 
 MASTER = sys.argv[1] if len(sys.argv) > 1 else "local-cluster[2,4,2048]"
 
@@ -79,224 +72,10 @@ def check_salted_sessionize(spark) -> None:
     print("salted_sessionize equivalence: ok", flush=True)
 
 
-def check_band_index(spark) -> None:
-    with tempfile.TemporaryDirectory() as d:
-        index = os.path.join(d, "idx")
-        dup = "kilo lima mike november oscar papa quebec romeo"
-        b0 = spark.createDataFrame(
-            [(0, dup), (1, "alfa bravo charlie delta echo foxtrot")],
-            "doc_id long, text string")
-        s0, bands0 = dedup_batch_against_index(b0, index, 0, prefix_len=3)
-        assert s0.count() == 2
-        append_batch_bands(bands0, index, 0)
-        bands0.unpersist()
-        b1 = spark.createDataFrame([(9, dup)], "doc_id long, text string")
-        s1, bands1 = dedup_batch_against_index(b1, index, 1, prefix_len=3)
-        assert s1.count() == 0  # cross-batch match through the layout
-        append_batch_bands(bands1, index, 1)
-        bands1.unpersist()
-        assert compact_band_index(spark, index) == 2
-        b2 = spark.createDataFrame([(12, dup)], "doc_id long, text string")
-        s2, bands2 = dedup_batch_against_index(b2, index, 2, prefix_len=3)
-        assert s2.count() == 0  # still matches after compaction
-        bands2.unpersist()
-    print("band index (prefix_len=3) + compaction: ok", flush=True)
-
-
-def check_semantic_index(spark) -> None:
-    from radio_data_pipeline_spark.streaming.semantic import (
-        append_semantic_batch,
-        compact_semantic_index,
-        init_semantic_index,
-        open_semantic_index,
-        requantize_semantic_index,
-        semantic_dedup_batch_against_index,
-    )
-
-    rng = np.random.default_rng(5)
-    base = rng.standard_normal((2, 8))
-    rows = [(i, [float(v) for v in base[i % 2] + 0.1
-                 * rng.standard_normal(8)]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    with tempfile.TemporaryDirectory() as d:
-        index = os.path.join(d, "idx")
-        init_semantic_index(df, index, n_clusters=2, lloyd_rounds=2,
-                            n_cell_buckets=2)
-        for bid, (lo, hi) in enumerate([(0, 30), (30, 60)]):
-            chunk = df.filter((F.col("vec_id") >= lo)
-                              & (F.col("vec_id") < hi))
-            _, rws = semantic_dedup_batch_against_index(chunk, index,
-                                                        bid, eps=0.95)
-            append_semantic_batch(rws, index, bid)
-            rws.unpersist()
-        # a twin of an ingested doc drops through the persisted layout
-        twin = (df.filter(F.col("vec_id") == 3)
-                .withColumn("vec_id", F.lit(900)))
-        s, rws = semantic_dedup_batch_against_index(twin, index, 7,
-                                                    eps=0.95)
-        assert s.count() == 0
-        rws.unpersist()
-        # same verdict through the SERVING handle (r7): the prepared
-        # quantizer tables are broadcast/persisted frames — this is
-        # the path that must survive real executor-JVM serialization
-        h = open_semantic_index(spark, index)
-        try:
-            s, rws = semantic_dedup_batch_against_index(twin, h, 7,
-                                                        eps=0.95)
-            assert s.count() == 0
-            rws.unpersist()
-        finally:
-            h.close()
-        assert compact_semantic_index(spark, index) == 2
-        requantize_semantic_index(spark, index, n_clusters=4,
-                                  n_cell_buckets=2)
-        s, rws = semantic_dedup_batch_against_index(twin, index, 8,
-                                                    eps=0.95)
-        assert s.count() == 0  # still drops after compact + requantize
-        rws.unpersist()
-    print("semantic index ingest + compaction + requantize: ok",
-          flush=True)
-
-
-def check_maintenance(spark) -> None:
-    """The round-9 policy loops under real executor JVMs: signals
-    (driver-side pyarrow fast path), decisions, and a policy-driven
-    fold through the lease."""
-    from radio_data_pipeline_spark.streaming.dedup import (
-        BandMaintenancePolicy,
-        append_batch_bands,
-        dedup_batch_against_index,
-        maintain_band_index,
-    )
-    from radio_data_pipeline_spark.streaming.semantic import (
-        MaintenancePolicy,
-        append_semantic_batch,
-        init_semantic_index,
-        maintain_semantic_index,
-        semantic_dedup_batch_against_index,
-    )
-
-    with tempfile.TemporaryDirectory() as d:
-        index = os.path.join(d, "bidx")
-        for bid in range(2):
-            b = spark.createDataFrame(
-                [(bid * 10 + j, f"w{j} x{j} y{j} z{j} a{j} b{j}")
-                 for j in range(4)], "doc_id long, text string")
-            _, bands = dedup_batch_against_index(b, index, bid)
-            append_batch_bands(bands, index, bid)
-            bands.unpersist()
-        rep = maintain_band_index(
-            spark, index, BandMaintenancePolicy(compact_after_batches=2))
-        assert rep["action"] == "compact" and rep["result"] == 2
-        assert maintain_band_index(
-            spark, index,
-            BandMaintenancePolicy(compact_after_batches=2)
-        )["action"] == "noop"
-
-        sidx = os.path.join(d, "sidx")
-        rng = np.random.default_rng(9)
-        df = spark.createDataFrame(
-            [(i, [float(v) for v in rng.standard_normal(8)])
-             for i in range(40)], "vec_id long, embedding array<double>")
-        init_semantic_index(df, sidx, n_clusters=2, lloyd_rounds=1)
-        _, rws = semantic_dedup_batch_against_index(df, sidx, 0, eps=0.99)
-        append_semantic_batch(rws, sidx, 0)
-        rws.unpersist()
-        rep = maintain_semantic_index(
-            spark, sidx, MaintenancePolicy(requantize_over_occupancy=0.1,
-                                           target_cluster_rows=8,
-                                           min_rows_for_requantize=1,
-                                           lloyd_rounds=1))
-        assert rep["action"] == "requantize"
-        assert rep["signals"]["rows"] == 40  # pyarrow footer fast path
-    print("maintenance policy loops (band + semantic): ok", flush=True)
-
-
-def check_multi_signal(spark) -> None:
-    """The composed band->semantic kernel under real executor JVMs:
-    both tiers drop through their persisted indexes, the zero-row
-    semantic append an all-band-dropped batch produces is tolerated
-    by both reader paths, and the tiered index-content rule holds."""
-    from radio_data_pipeline_spark.streaming.dedup import (
-        append_batch_bands,
-        open_band_index,
-    )
-    from radio_data_pipeline_spark.streaming.multi_signal import (
-        multi_signal_batch_against_indexes,
-    )
-    from radio_data_pipeline_spark.streaming.semantic import (
-        append_semantic_batch,
-        init_semantic_index,
-        open_semantic_index,
-    )
-
-    rng = np.random.default_rng(17)
-    vecs = [[float(v) for v in rng.standard_normal(8)]
-            for _ in range(30)]
-    df = spark.createDataFrame(
-        [(i, f"m{i}a m{i}b m{i}c m{i}d m{i}e m{i}f", vecs[i])
-         for i in range(30)],
-        "doc_id long, text string, embedding array<double>")
-    with tempfile.TemporaryDirectory() as d:
-        bidx, sidx = os.path.join(d, "b"), os.path.join(d, "s")
-        init_semantic_index(df.select("doc_id", "embedding"), sidx,
-                            n_clusters=2, lloyd_rounds=1,
-                            id_col="doc_id", n_cell_buckets=2)
-
-        def run(frame, bid, band=None, sem=None):
-            surv, bands, rws, bs = multi_signal_batch_against_indexes(
-                frame, band or bidx, sem or sidx, bid, eps=0.95)
-            n = surv.count()
-            append_batch_bands(bands, bidx, bid)
-            append_semantic_batch(rws, sidx, bid)
-            bands.unpersist()
-            rws.unpersist()
-            bs.unpersist()
-            return n
-
-        assert run(df, 0) == 30
-        # batch 1: all docs are exact TEXT copies -> band tier drops
-        # everything, the semantic append is zero-row
-        text_twins = df.withColumn("doc_id", F.col("doc_id") + 100)
-        assert run(text_twins, 1) == 0
-        # batch 2: new text, eps-close vectors -> semantic tier drops
-        sem_twins = (df
-                     .withColumn("doc_id", F.col("doc_id") + 200)
-                     .withColumn("text", F.format_string(
-                         "n%da n%db n%dc n%dd n%de n%df",
-                         *([F.col("doc_id")] * 6))))
-        assert run(sem_twins, 2) == 0
-        # same verdicts through BOTH serving handles, past the
-        # zero-row dir batch 1 committed
-        sem_twins2 = (df
-                      .withColumn("doc_id", F.col("doc_id") + 300)
-                      .withColumn("text", F.format_string(
-                          "p%da p%db p%dc p%dd p%de p%df",
-                          *([F.col("doc_id")] * 6))))
-        bh, sh = open_band_index(spark, bidx), None
-        try:
-            sh = open_semantic_index(spark, sidx)
-            surv, bands, rws, bs = multi_signal_batch_against_indexes(
-                sem_twins2, bh, sh, 3, eps=0.95)
-            assert surv.count() == 0
-            for f in (bands, rws, bs):
-                f.unpersist()
-        finally:
-            bh.close()
-            if sh is not None:
-                sh.close()
-    print("multi-signal composed gate (band -> semantic): ok",
-          flush=True)
-
-
 def main() -> None:
     spark = get_spark("cluster-library-check", master=MASTER)
     check_two_level(spark)
     check_salted_sessionize(spark)
-    check_band_index(spark)
-    check_semantic_index(spark)
-    check_maintenance(spark)
-    check_multi_signal(spark)
     print(f"CLUSTER LIBRARY CHECK: all ok on {MASTER}", flush=True)
     spark.stop()
 
