@@ -236,9 +236,8 @@ def _ingest_dirs(spark: SparkSession, index_path: str):
     """(fs, root, ``ingest_batch=*`` child Paths) through Hadoop's
     FileSystem, so any writer-accepted scheme (file:/, hdfs://,
     s3a://) answers correctly. The one listing primitive every
-    maintenance op (compaction here, requantize in
-    streaming/semantic.py) builds its source set from — a layout or
-    naming change lands in exactly one place."""
+    maintenance op builds its source set from — a layout or naming
+    change lands in exactly one place."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(index_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -374,7 +373,7 @@ class GenerationCachedHandle:
     costs one sample pass at cache build (paid once per generation
     set) and buys probe locality: the in-memory columnar batches
     each span a narrow key range, so a probe-side key filter (the
-    kernel's conditional cell IN-list at large N, semantic.py)
+    kernel's conditional cell IN-list at large N)
     rejects a row on the sorted key's column vector alone and the
     row's heavy payload columns (the 64-dim ``v`` array) are never
     deserialized — lazy per-column access in the columnar-to-row
@@ -810,12 +809,7 @@ _MAINT_SKIP_RECENT: "deque[dict]" = _deque(maxlen=100)
 # jsonl per writer pid avoids cross-process append races; remote
 # schemes get one tiny file per skip (skips are rare by design —
 # persistent contention, the alert condition, is exactly when the
-# file count itself is the signal). NOTE the kernel-probe guard set
-# (_GUARD_ISSUED_PATHS, semantic.py) stays per-process BY DESIGN:
-# the guard tuple itself travels with the rows, so a second process
-# appending kernel rows carries its own guard — only the
-# shed-detection is per-process, and persisting it would turn a
-# structural-loudness aid into a cross-process coordination file.
+# file count itself is the signal).
 _MAINT_SKIP_DIRNAME = "_maintenance_skips"
 
 
@@ -1281,9 +1275,8 @@ def _compact_ingest_index(spark: SparkSession, index_path: str,
                           partition_cols: tuple[str, ...],
                           generation: int = -1,
                           _post_fold_hook=None) -> int:
-    """The generational fold shared by every per-batch-overwrite
-    ingest index (band index above; semantic index in
-    streaming/semantic.py). Correctness rests on EXISTENTIAL matching
+    """The generational fold of a per-batch-overwrite ingest index
+    (the band index above). Correctness rests on EXISTENTIAL matching
     — a probe's verdict depends only on whether a matching row
     exists, so duplicated rows across a crash window or a skipped
     racing source are harmless — which every index routed through
@@ -1458,8 +1451,7 @@ def maintain_band_index(spark: SparkSession, index_path: str,
                         policy: BandMaintenancePolicy | None = None,
                         dry_run: bool = False) -> dict:
     """Read the cheap signals, decide, and (unless ``dry_run``) run
-    the chosen maintenance op — the band twin of
-    streaming/semantic.maintain_semantic_index, same contract: each
+    the chosen maintenance op: each
     heavy op takes the maintenance lease itself, so concurrent
     maintainers exclude each other exactly as direct callers do, and
     the decide-then-act gap is closed by compaction's own
@@ -1495,8 +1487,7 @@ def stream_dedup_ingest(stream_df: DataFrame, index_path: str,
     the band index. The survivor write and the band append run
     CONCURRENTLY — both are per-batch-dir overwrites, and the
     kernel's own-batch probe exclusion makes every crash
-    interleaving replay to the identical result (the same argument
-    as stream_semantic_ingest's parallel commit). Requires a
+    interleaving replay to the identical result. Requires a
     checkpoint for the same reason stream_to_training_shards does:
     the per-batch overwrite layout is only exactly-once under a
     checkpointed batch-id sequence. Returns the StreamingQuery

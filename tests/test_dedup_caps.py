@@ -692,136 +692,3 @@ def test_fine_salt_tracks_parallelism(spark):
     dp = spark.sparkContext.defaultParallelism
     assert got == max(_FINE_SALT, min(_FINE_SALT_CAP, dp))
     assert _FINE_SALT <= got <= _FINE_SALT_CAP
-
-
-# -- incremental semantic dedup (semantic_dedup_batch_against_index) --
-
-_SEM_EPS = 0.9
-_SEM_K = 4
-
-
-def _emb_corpus(spark, n=90, d=8, seed=3):
-    # four base directions with per-doc noise (same-direction cosines
-    # sit around the eps boundary) plus exact cross-chunk copies
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    base = rng.normal(size=(_SEM_K, d))
-    rows = []
-    for i in range(n):
-        v = base[i % _SEM_K] + 0.45 * rng.normal(size=d)
-        if i % 7 == 0 and i >= 7:
-            v = np.array(rows[i - 7][1])  # exact copy of an earlier doc
-        rows.append((i, [float(x) for x in v]))
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>")
-
-
-@pytest.mark.parametrize("seed,n_chunks", [(3, 3), (11, 2), (29, 5)])
-def test_dataframe_index_mode_matches_batch_semantic_dedup(spark, seed,
-                                                           n_chunks):
-    """Chunking the corpus through the in-memory index kernel in id
-    order reproduces batch semantic_dedup's kept set exactly (same
-    trained quantizer, arrival order == id order) — across corpus
-    draws AND chunk granularities (the equivalence must not depend
-    on where batch boundaries fall)."""
-    from radio_data_pipeline_spark.functions.similarity import (
-        semantic_dedup, semantic_dedup_batch_against_index,
-        train_semantic_centroids)
-
-    df = _emb_corpus(spark, seed=seed)
-    sd = semantic_dedup(df, eps=_SEM_EPS, n_clusters=_SEM_K,
-                        lloyd_rounds=2)
-    expected = sorted(r["vec_id"] for r in
-                      sd.filter("is_kept").select("vec_id").collect())
-    assert 0 < len(expected) < 90  # nontrivial verdicts both ways
-
-    cents, meta = train_semantic_centroids(df, _SEM_K, lloyd_rounds=2)
-    step = 90 // n_chunks
-    acc = None
-    handles = []
-    got = []
-    for bid in range(n_chunks):
-        chunk = df.filter((F.col("vec_id") >= bid * step)
-                          & (F.col("vec_id") < (bid + 1) * step))
-        survivors, rows = semantic_dedup_batch_against_index(
-            chunk, acc, bid, cents, meta, eps=_SEM_EPS)
-        got.extend(r["vec_id"] for r in
-                   survivors.select("vec_id").collect())
-        handles.append(rows)
-        acc = rows if acc is None else acc.unionByName(rows)
-    assert sorted(got) == expected
-    # ALL processed docs are indexed (survivors AND dropped): a later
-    # twin of a dropped doc must still match
-    assert acc.select("id").distinct().count() == 90
-    for h in handles:
-        h.unpersist()
-
-
-def test_kernel_drops_duplicate_of_already_dropped_doc(spark):
-    """A doc within eps of an already-DROPPED doc (but not of any
-    survivor) is still dropped: dropped docs' vectors are indexed
-    too. Geometry: a=(1,0), b at 45 deg (dropped by a), c at 90 deg
-    — cos(c,a)=0 < eps, cos(c,b)=0.707 >= eps=0.7."""
-    import numpy as np
-
-    from radio_data_pipeline_spark.functions.similarity import (
-        semantic_dedup_batch_against_index, train_semantic_centroids)
-
-    s = float(np.sqrt(0.5))
-    b0 = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [s, s])],
-        "vec_id long, embedding array<double>")
-    b1 = spark.createDataFrame(
-        [(2, [0.0, 1.0])], "vec_id long, embedding array<double>")
-    cents, meta = train_semantic_centroids(b0, 1, lloyd_rounds=1)
-    s0, acc = semantic_dedup_batch_against_index(
-        b0, None, 0, cents, meta, eps=0.7)
-    assert [r["vec_id"] for r in s0.collect()] == [0]
-    s1, rows1 = semantic_dedup_batch_against_index(
-        b1, acc, 1, cents, meta, eps=0.7)
-    assert s1.count() == 0  # dropped via the dropped doc 1
-    rows1.unpersist()
-    acc.unpersist()
-
-
-def test_kernel_requires_meta_with_centroids(spark):
-    """Caller-supplied centroids without the resolved mode raise —
-    a two-level-trained quantizer silently served flat would file
-    probes differently than the index rows and admit duplicates."""
-    from radio_data_pipeline_spark.functions.similarity import (
-        semantic_dedup_batch_against_index, train_semantic_centroids)
-
-    df = _emb_corpus(spark, n=12)
-    cents, _ = train_semantic_centroids(df, 2, lloyd_rounds=1)
-    with pytest.raises(ValueError, match="meta"):
-        semantic_dedup_batch_against_index(df, None, 0,
-                                           centroids=cents, eps=_SEM_EPS)
-
-
-def test_incremental_registered_query_releases_caches(spark):
-    """The registered incremental query must not leak cached
-    partitions into the shared session (ADVICE r6 low): after the
-    result materializes, no persisted RDD it pinned may remain."""
-    import os
-
-    from radio_data_pipeline_spark.plans.arrays import (
-        semantic_dedup_survivors_incremental)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL",
-                            "/root/testdata/sf0.001")
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
-                 .toArray())
-    out = semantic_dedup_survivors_incremental(spark, sf_dir)
-    assert out.count() > 0
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
-                .toArray())
-    # localCheckpoint storage of the returned frame itself is context-
-    # cleaned on GC; persist()-pinned frames must already be gone
-    leaked = after - before
-    jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-    names = [str(jrdds.get(i).toString()) for i in leaked
-             if jrdds.containsKey(i)]
-    non_checkpoint = [n for n in names
-                      if "localcheckpoint" not in n.lower()]
-    assert not non_checkpoint, names

@@ -1,9 +1,10 @@
-"""Incremental semantic dedup ingest (streaming/semantic.py): the
-quantizer is trained once and frozen, the persisted (id, v, cell)
-index accumulates under the bounded cell_bucket partition key,
-per-batch probes prune by bucket + cell, and the stream's
-verdicts equal batch functions/similarity.semantic_dedup of the full
-corpus under id-ordered arrival with the same trained centroids."""
+"""Incremental semantic dedup (functions/similarity.py
+semantic_dedup_batch_against_index): the quantizer is trained once and
+frozen, each micro-batch is deduped within itself and against the
+in-memory (id, v, cell) rows of every earlier batch, and the verdicts
+equal batch semantic_dedup of the full corpus under id-ordered arrival
+with the same trained centroids. The last test checks the band index's
+(streaming/dedup.py) footer row-count signal."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -11,15 +12,8 @@ import pytest
 
 from radio_data_pipeline_spark.functions.similarity import (
     semantic_dedup,
-)
-from radio_data_pipeline_spark.streaming.semantic import (
-    append_semantic_batch,
-    compact_semantic_index,
-    init_semantic_index,
-    read_semantic_quantizer,
-    requantize_semantic_index,
     semantic_dedup_batch_against_index,
-    stream_semantic_ingest,
+    train_semantic_centroids,
 )
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -50,69 +44,48 @@ def _chunks(df, n_chunks, n):
             for i in range(n_chunks)]
 
 
-def _batch_kept(df):
-    sd = semantic_dedup(df, eps=_EPS, n_clusters=_K, lloyd_rounds=2)
-    return sorted(r["vec_id"] for r in
-                  sd.filter("is_kept").select("vec_id").collect())
+def _ingest(df, n_chunks, cents, meta):
+    """Run the chunks through the kernel in id order; returns the
+    survivor ids and the accumulated index (persisted parts listed
+    for the caller to unpersist)."""
+    acc = None
+    handles = []
+    got = []
+    for bid, chunk in enumerate(_chunks(df, n_chunks, 90)):
+        survivors, rows = semantic_dedup_batch_against_index(
+            chunk, acc, bid, cents, meta, eps=_EPS)
+        got.extend(r["vec_id"] for r in
+                   survivors.select("vec_id").collect())
+        handles.append(rows)
+        acc = rows if acc is None else acc.unionByName(rows)
+    return sorted(got), acc, handles
 
 
 @pytest.mark.parametrize("seed,n_chunks", [(3, 3), (11, 2), (29, 5)])
-def test_incremental_kernel_matches_batch_semantic_dedup(spark,
-                                                         tmp_path,
-                                                         seed,
+def test_incremental_kernel_matches_batch_semantic_dedup(spark, seed,
                                                          n_chunks):
-    """Chunking the corpus through the persisted-index kernel in id
+    """Chunking the corpus through the in-memory index kernel in id
     order reproduces batch semantic_dedup's kept set exactly (same
     trained quantizer, arrival order == id order) — across corpus
     draws AND chunk granularities (the equivalence must not depend
     on where batch boundaries fall)."""
     df = _emb_corpus(spark, seed=seed)
-    expected = _batch_kept(df)
+    sd = semantic_dedup(df, eps=_EPS, n_clusters=_K, lloyd_rounds=2)
+    expected = sorted(r["vec_id"] for r in
+                      sd.filter("is_kept").select("vec_id").collect())
     assert 0 < len(expected) < 90  # nontrivial verdicts both ways
 
-    index = str(tmp_path / "sem_index")
-    init_semantic_index(df, index, n_clusters=_K, lloyd_rounds=2)
-    got = []
-    for bid, chunk in enumerate(_chunks(df, n_chunks, 90)):
-        survivors, rows = semantic_dedup_batch_against_index(
-            chunk, index, bid, eps=_EPS)
-        got.extend(r["vec_id"] for r in
-                   survivors.select("vec_id").collect())
-        append_semantic_batch(rows, index, bid)
-        rows.unpersist()
-    assert sorted(got) == expected
+    cents, meta = train_semantic_centroids(df, _K, lloyd_rounds=2)
+    got, acc, handles = _ingest(df, n_chunks, cents, meta)
+    assert got == expected
     # ALL processed docs are indexed (survivors AND dropped): a later
     # twin of a dropped doc must still match
-    idx = spark.read.parquet(index)
-    assert idx.select("id").distinct().count() == 90
-    assert set(idx.columns) >= {"id", "v", "cell", "ingest_batch"}
+    assert acc.select("id").distinct().count() == 90
+    for h in handles:
+        h.unpersist()
 
 
-def test_dataframe_index_mode_matches_path_mode(spark, tmp_path):
-    """The in-memory (DataFrame) index form — the shape the
-    registered driver query uses, no filesystem — produces the same
-    verdicts as the persisted layout."""
-    df = _emb_corpus(spark)
-    expected = _batch_kept(df)
-
-    from radio_data_pipeline_spark.functions.similarity import (
-        train_semantic_centroids)
-    cents, resolved = train_semantic_centroids(df, _K, lloyd_rounds=2)
-    meta = {"two_level": resolved["two_level"],
-            "coarse_clusters": resolved["coarse_clusters"]}
-    acc = None
-    got = []
-    for bid, chunk in enumerate(_chunks(df, 3, 90)):
-        survivors, rows = semantic_dedup_batch_against_index(
-            chunk, acc, bid, centroids=cents, meta=meta, eps=_EPS)
-        got.extend(r["vec_id"] for r in
-                   survivors.select("vec_id").collect())
-        acc = rows if acc is None else acc.unionByName(rows)
-    assert sorted(got) == expected
-
-
-def test_kernel_drops_duplicate_of_already_dropped_doc(spark,
-                                                       tmp_path):
+def test_kernel_drops_duplicate_of_already_dropped_doc(spark):
     """A doc within eps of an already-DROPPED doc (but not of any
     survivor) is still dropped: dropped docs' vectors are indexed
     too. Geometry: a=(1,0), b at 45 deg (dropped by a), c at 90 deg
@@ -123,82 +96,22 @@ def test_kernel_drops_duplicate_of_already_dropped_doc(spark,
         "vec_id long, embedding array<double>")
     b1 = spark.createDataFrame(
         [(2, [0.0, 1.0])], "vec_id long, embedding array<double>")
-    index = str(tmp_path / "idx")
-    init_semantic_index(b0, index, n_clusters=1, lloyd_rounds=1)
-    s0, rows0 = semantic_dedup_batch_against_index(
-        b0, index, 0, eps=0.7)
+    cents, meta = train_semantic_centroids(b0, 1, lloyd_rounds=1)
+    s0, acc = semantic_dedup_batch_against_index(
+        b0, None, 0, cents, meta, eps=0.7)
     assert [r["vec_id"] for r in s0.collect()] == [0]
-    append_semantic_batch(rows0, index, 0)
-    rows0.unpersist()
     s1, rows1 = semantic_dedup_batch_against_index(
-        b1, index, 1, eps=0.7)
+        b1, acc, 1, cents, meta, eps=0.7)
     assert s1.count() == 0  # dropped via the dropped doc 1
     rows1.unpersist()
+    acc.unpersist()
 
 
-def test_kernel_replay_excludes_own_batch(spark, tmp_path):
-    """Crash-replay: a batch whose index rows were already (partially
-    or fully) written re-executes to the IDENTICAL verdicts — the
-    probe excludes its own ingest_batch partition."""
-    df = _emb_corpus(spark, n=30)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, n_clusters=_K, lloyd_rounds=2)
-
-    s0, rows0 = semantic_dedup_batch_against_index(df, index, 0,
-                                                   eps=_EPS)
-    first = sorted(r["vec_id"] for r in s0.collect())
-    append_semantic_batch(rows0, index, 0)  # crash AFTER index write
-    rows0.unpersist()
-
-    s1, rows1 = semantic_dedup_batch_against_index(df, index, 0,
-                                                   eps=_EPS)
-    replay = sorted(r["vec_id"] for r in s1.collect())
-    rows1.unpersist()
-    assert replay == first  # without the exclusion: everything drops
-
-
-def test_bucketed_layout_bounds_dirs_and_prunes(spark, tmp_path):
-    """The layout key is the BOUNDED cell_bucket, not the raw cell:
-    dirs per append <= n_cell_buckets however large k grows, the
-    width roundtrips through the quantizer meta, and a probe-shaped
-    read prunes on the bucket at planning time."""
-    import os
-
-    df = _emb_corpus(spark)
-    index = str(tmp_path / "idx")
-    resolved = init_semantic_index(df, index, n_clusters=_K,
-                                   lloyd_rounds=2, n_cell_buckets=2)
-    assert resolved["n_cell_buckets"] == 2
-    _, meta = read_semantic_quantizer(spark, index)
-    assert meta["n_cell_buckets"] == 2
-
-    _, rows = semantic_dedup_batch_against_index(df, index, 0,
-                                                 eps=_EPS)
-    append_semantic_batch(rows, index, 0)
-    rows.unpersist()
-    buckets = os.listdir(f"{index}/ingest_batch=0")
-    assert 0 < sum(1 for b in buckets
-                   if b.startswith("cell_bucket=")) <= 2
-
-    def _plan(df_):
-        jmode = (spark._jvm.org.apache.spark.sql.execution
-                 .ExplainMode.fromString("formatted"))
-        return df_._jdf.queryExecution().explainString(jmode)
-
-    probe_read = (spark.read.parquet(index)
-                  .filter(F.col("cell_bucket").isin([0])))
-    plan = _plan(probe_read)
-    assert "PartitionFilters" in plan
-    assert "cell_bucket" in plan.split("PartitionFilters", 1)[1].split(
-        "\n", 1)[0]
-
-
-def test_two_level_serving_matches_flat_on_separated_data(spark,
-                                                          tmp_path):
+def test_two_level_serving_matches_flat_on_separated_data(spark):
     """The kernel against a TWO-LEVEL quantizer (forced; the
     broadcast-points micro-batch regime) produces the same verdicts
     as against a flat one on well-separated clusters — the §17
-    two-level==flat agreement property carried into the serving
+    two-level==flat agreement property carried into the incremental
     path. Separation must be REAL for the property to hold (tight
     0.05 noise; the shared 0.45-noise corpus has boundary points
     whose cluster differs by design between the two modes)."""
@@ -213,62 +126,18 @@ def test_two_level_serving_matches_flat_on_separated_data(spark,
     df = spark.createDataFrame(rows,
                                "vec_id long, embedding array<double>")
     expected = []
-    for mode, forced in (("flat", False), ("two", True)):
-        index = str(tmp_path / mode)
-        init_semantic_index(df, index, n_clusters=_K, lloyd_rounds=2,
-                            two_level=forced,
-                            coarse_clusters=2 if forced else None,
-                            seed_strategy="smallest_id")
-        got = []
-        for bid, chunk in enumerate(_chunks(df, 3, 90)):
-            s, rows = semantic_dedup_batch_against_index(
-                chunk, index, bid, eps=_EPS)
-            got.extend(r["vec_id"] for r in s.collect())
-            append_semantic_batch(rows, index, bid)
-            rows.unpersist()
-        expected.append(sorted(got))
+    for forced in (False, True):
+        cents, meta = train_semantic_centroids(
+            df, _K, lloyd_rounds=2, two_level=forced,
+            coarse_clusters=2 if forced else None,
+            seed_strategy="smallest_id")
+        assert meta["two_level"] is forced
+        got, _, handles = _ingest(df, 3, cents, meta)
+        for h in handles:
+            h.unpersist()
+        expected.append(got)
     assert expected[0] == expected[1]
     assert 0 < len(expected[0]) < 90
-
-
-def test_replay_after_compaction_keeps_verdicts(spark, tmp_path):
-    """Crash after the index append but BEFORE the checkpoint commit,
-    then compaction while the stream is down, then replay of the same
-    batch id: the failed attempt's rows now live in a negative
-    generation, so a partition-value exclusion alone would stop
-    seeing them and every replayed doc would self-match at cosine 1.0
-    and drop. The src_batch data column keeps the exclusion working."""
-    df = _emb_corpus(spark, n=30)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, n_clusters=_K, lloyd_rounds=2)
-    s0, rows0 = semantic_dedup_batch_against_index(df, index, 0,
-                                                   eps=_EPS)
-    first = sorted(r["vec_id"] for r in s0.collect())
-    append_semantic_batch(rows0, index, 0)  # crash before checkpoint
-    rows0.unpersist()
-    assert compact_semantic_index(spark, index) == 1
-    s1, rows1 = semantic_dedup_batch_against_index(df, index, 0,
-                                                   eps=_EPS)
-    replay = sorted(r["vec_id"] for r in s1.collect())
-    rows1.unpersist()
-    assert replay == first
-
-
-def test_init_refuses_populated_index(spark, tmp_path):
-    """Re-initializing over ingested batches would orphan every
-    accumulated row's cell filing — the guard fails loudly and
-    leaves the index untouched."""
-    df = _emb_corpus(spark, n=30)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, n_clusters=_K, lloyd_rounds=2)
-    _, rows = semantic_dedup_batch_against_index(df, index, 0,
-                                                 eps=_EPS)
-    append_semantic_batch(rows, index, 0)
-    rows.unpersist()
-    with pytest.raises(ValueError, match="requantize"):
-        init_semantic_index(df, index, n_clusters=2, lloyd_rounds=1)
-    cents, _ = read_semantic_quantizer(spark, index)
-    assert cents.select("cluster").distinct().count() == _K
 
 
 def test_kernel_requires_meta_with_centroids(spark):
@@ -276,277 +145,10 @@ def test_kernel_requires_meta_with_centroids(spark):
     a two-level-trained quantizer silently served flat would file
     probes differently than the index rows and admit duplicates."""
     df = _emb_corpus(spark, n=12)
-    from radio_data_pipeline_spark.functions.similarity import (
-        train_semantic_centroids)
     cents, _ = train_semantic_centroids(df, 2, lloyd_rounds=1)
     with pytest.raises(ValueError, match="meta"):
         semantic_dedup_batch_against_index(df, None, 0,
                                            centroids=cents, eps=_EPS)
-
-
-def test_quantizer_roundtrip_and_meta(spark, tmp_path):
-    """init persists centroids + resolved mode; read returns both,
-    and the quantizer files are invisible to index dataset reads."""
-    df = _emb_corpus(spark, n=30)
-    index = str(tmp_path / "idx")
-    resolved = init_semantic_index(df, index, n_clusters=_K,
-                                   lloyd_rounds=2)
-    cents, meta = read_semantic_quantizer(spark, index)
-    assert meta["two_level"] == resolved["two_level"] is False
-    assert meta["coarse_clusters"] == resolved["coarse_clusters"] == 2
-    assert cents.select("cluster").distinct().count() == _K
-
-    # underscore dirs are hidden from partition discovery: an index
-    # read right after an append sees only ingest_batch partitions
-    _, rows = semantic_dedup_batch_against_index(df, index, 0,
-                                                 eps=_EPS)
-    append_semantic_batch(rows, index, 0)
-    rows.unpersist()
-    assert set(spark.read.parquet(index).columns) == {
-        "id", "v", "vn", "cell", "cell_bucket", "src_batch",
-        "ingest_batch"}
-
-
-def test_stream_semantic_ingest_end_to_end(spark, tmp_path):
-    """Real Structured Streaming run in two phases (availableNow +
-    checkpoint = deterministic batch boundaries): survivors across
-    phases equal batch semantic_dedup of everything ingested."""
-    df = _emb_corpus(spark)
-    expected = _batch_kept(df)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "survivors")
-    index = str(tmp_path / "sem_index")
-    cp = str(tmp_path / "cp")
-    init_semantic_index(df, index, n_clusters=_K, lloyd_rounds=2)
-    schema = "vec_id long, embedding array<double>"
-
-    def run_phase(lo, hi, fname):
-        (df.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-         .coalesce(1).write.mode("overwrite").parquet(str(src / fname)))
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        q = stream_semantic_ingest(stream, index, out, checkpoint=cp,
-                                   eps=_EPS)
-        q.awaitTermination()
-
-    run_phase(0, 45, "f1")
-    run_phase(45, 90, "f2")
-
-    got = sorted(r["vec_id"] for r in
-                 spark.read.parquet(out).select("vec_id").collect())
-    assert got == expected
-    assert (spark.read.parquet(index)
-            .select("ingest_batch").distinct().count() == 2)
-
-
-def _ingest_all(df, index, n_chunks=3, n=90, eps=_EPS):
-    for bid, chunk in enumerate(_chunks(df, n_chunks, n)):
-        _, rows = semantic_dedup_batch_against_index(chunk, index, bid,
-                                                     eps=eps)
-        append_semantic_batch(rows, index, bid)
-        rows.unpersist()
-
-
-def test_requantize_grows_cells_and_preserves_history(spark, tmp_path):
-    """Requantizing to a larger k re-files every accumulated row:
-    the corpus is intact (same distinct ids/vectors), the quantizer
-    now has the new cell count, old generations are gone, and a twin
-    of an already-ingested doc is still dropped by a post-requantize
-    probe."""
-    df = _emb_corpus(spark)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, n_clusters=2, lloyd_rounds=2)
-    _ingest_all(df, index)
-
-    deleted = requantize_semantic_index(spark, index, n_clusters=_K,
-                                        lloyd_rounds=2)
-    assert deleted == 3
-    cents, meta = read_semantic_quantizer(spark, index)
-    assert cents.select("cluster").distinct().count() == _K
-    assert meta["two_level"] is False
-    idx = spark.read.parquet(index)
-    assert idx.select("id").distinct().count() == 90
-    assert (idx.select("ingest_batch").distinct().count() == 1)
-    assert idx.select("cell").distinct().count() == _K
-
-    # a twin of doc 0 (id above all ingested) must still be dropped
-    twin = (df.filter(F.col("vec_id") == 0)
-            .withColumn("vec_id", F.lit(5000)))
-    s, rows = semantic_dedup_batch_against_index(twin, index, 50,
-                                                 eps=_EPS)
-    assert s.count() == 0
-    rows.unpersist()
-
-
-def test_requantize_verdicts_match_fresh_index_at_new_k(spark,
-                                                        tmp_path):
-    """After requantize at k, a probe batch gets the SAME verdicts as
-    against an index initialized at k and fed the identical corpus:
-    the re-file is equivalent to having ingested under the new
-    quantizer all along (same training data — the full corpus — and
-    same seeds)."""
-    df = _emb_corpus(spark)
-    probe = _emb_corpus(spark, n=20, seed=11).withColumn(
-        "vec_id", F.col("vec_id") + 1000)
-
-    a = str(tmp_path / "a")
-    init_semantic_index(df, a, n_clusters=2, lloyd_rounds=2)
-    _ingest_all(df, a)
-    requantize_semantic_index(spark, a, n_clusters=_K, lloyd_rounds=2)
-
-    b = str(tmp_path / "b")
-    init_semantic_index(df, b, n_clusters=_K, lloyd_rounds=2)
-    _, rows_b = semantic_dedup_batch_against_index(df, b, 0, eps=_EPS)
-    append_semantic_batch(rows_b, b, 0)
-    rows_b.unpersist()
-
-    got = []
-    for index in (a, b):
-        s, rows = semantic_dedup_batch_against_index(probe, index, 99,
-                                                     eps=_EPS)
-        got.append(sorted(r["vec_id"] for r in s.collect()))
-        rows.unpersist()
-    assert got[0] == got[1]
-
-
-def test_requantize_aborts_on_racing_writer(spark, tmp_path):
-    """A batch appended between the fold's listing and the quantizer
-    swap aborts the commit: RuntimeError, the OLD quantizer stays
-    active, the new generation is removed, and both the original
-    corpus and the racing batch's rows survive. A quiesced re-run
-    then succeeds and folds everything, racing batch included."""
-    df = _emb_corpus(spark)
-    racer = _emb_corpus(spark, n=10, seed=5).withColumn(
-        "vec_id", F.col("vec_id") + 2000)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, n_clusters=2, lloyd_rounds=2)
-    _ingest_all(df, index)
-
-    def race():
-        _, rows = semantic_dedup_batch_against_index(racer, index, 7,
-                                                     eps=_EPS)
-        append_semantic_batch(rows, index, 7)
-        rows.unpersist()
-
-    with pytest.raises(RuntimeError, match="raced"):
-        requantize_semantic_index(spark, index, n_clusters=_K,
-                                  _pre_swap_hook=race)
-    cents, _ = read_semantic_quantizer(spark, index)
-    assert cents.select("cluster").distinct().count() == 2  # old k
-    idx = spark.read.parquet(index)
-    assert idx.select("id").distinct().count() == 100
-    assert idx.filter(F.col("ingest_batch") < 0).count() == 0
-
-    deleted = requantize_semantic_index(spark, index, n_clusters=_K)
-    assert deleted == 4
-    idx = spark.read.parquet(index)
-    assert idx.select("id").distinct().count() == 100
-    cents, _ = read_semantic_quantizer(spark, index)
-    assert cents.select("cluster").distinct().count() == _K
-
-
-def test_requantize_generations_strictly_decrease(spark, tmp_path):
-    """A requantize over a previously requantized/compacted index
-    writes gen min(existing)-1, never overwriting a generation it is
-    reading (the compactor's discipline)."""
-    df = _emb_corpus(spark, n=30)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, n_clusters=2, lloyd_rounds=2)
-    _ingest_all(df, index, n_chunks=2, n=30)
-    requantize_semantic_index(spark, index, n_clusters=2)
-    gens0 = sorted(
-        r["ingest_batch"] for r in spark.read.parquet(index)
-        .select("ingest_batch").distinct().collect())
-    assert gens0 == [-1]
-    # new live batch, then requantize again
-    extra = _emb_corpus(spark, n=6, seed=9).withColumn(
-        "vec_id", F.col("vec_id") + 3000)
-    _, rows = semantic_dedup_batch_against_index(extra, index, 5,
-                                                 eps=_EPS)
-    append_semantic_batch(rows, index, 5)
-    rows.unpersist()
-    requantize_semantic_index(spark, index, n_clusters=2)
-    gens1 = sorted(
-        r["ingest_batch"] for r in spark.read.parquet(index)
-        .select("ingest_batch").distinct().collect())
-    assert gens1 == [-2]
-    assert (spark.read.parquet(index).select("id").distinct().count()
-            == 36)
-
-
-def test_compaction_preserves_verdicts_and_quantizer(spark, tmp_path):
-    """Folding the per-batch dirs into a generation changes no future
-    verdict (existential matching over the same row set), leaves the
-    quantizer readable, and bounds the directory count."""
-    df = _emb_corpus(spark)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, n_clusters=_K, lloyd_rounds=2)
-    probe = _emb_corpus(spark, n=12, seed=3).withColumn(
-        "vec_id", F.col("vec_id") + 1000)
-
-    for bid, chunk in enumerate(_chunks(df, 3, 90)):
-        _, rows = semantic_dedup_batch_against_index(chunk, index, bid,
-                                                     eps=_EPS)
-        append_semantic_batch(rows, index, bid)
-        rows.unpersist()
-
-    s_pre, rows_pre = semantic_dedup_batch_against_index(
-        probe, index, 99, eps=_EPS)
-    before = sorted(r["vec_id"] for r in s_pre.collect())
-    rows_pre.unpersist()
-
-    folded = compact_semantic_index(spark, index)
-    assert folded == 3
-    assert (spark.read.parquet(index)
-            .select("ingest_batch").distinct().count() == 1)
-
-    s_post, rows_post = semantic_dedup_batch_against_index(
-        probe, index, 99, eps=_EPS)
-    after = sorted(r["vec_id"] for r in s_post.collect())
-    rows_post.unpersist()
-    assert after == before
-    # quantizer survived the fold
-    cents, _ = read_semantic_quantizer(spark, index)
-    assert cents.count() > 0
-    # idempotent: a second fold with only one generation is a no-op
-    assert compact_semantic_index(spark, index) == 0
-
-
-def test_path_mode_requires_layout_width_in_meta(spark, tmp_path):
-    """Caller-supplied meta for a PERSISTED index must carry
-    n_cell_buckets (ADVICE r6 low): a cached meta straight from
-    train_semantic_centroids lacks the layout width, and silently
-    defaulting it would file/prune with a different width than the
-    index layout — duplicates admitted silently. Loud instead."""
-    from radio_data_pipeline_spark.functions.similarity import (
-        train_semantic_centroids)
-
-    df = _emb_corpus(spark, 30)
-    index = str(tmp_path / "sem_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    _, rows = semantic_dedup_batch_against_index(df, index, 0, eps=_EPS)
-    append_semantic_batch(rows, index, 0)
-    rows.unpersist()
-
-    cents, resolved = train_semantic_centroids(df, _K, lloyd_rounds=2)
-    bad_meta = {"two_level": resolved["two_level"],
-                "coarse_clusters": resolved["coarse_clusters"]}
-    with pytest.raises(ValueError, match="n_cell_buckets"):
-        semantic_dedup_batch_against_index(
-            df, index, 1, centroids=cents, meta=bad_meta, eps=_EPS)
-    # the quantizer-read meta (which carries the width) keeps working
-    c2, m2 = read_semantic_quantizer(spark, index)
-    s, r2 = semantic_dedup_batch_against_index(
-        df, index, 1, centroids=c2, meta=m2, eps=_EPS)
-    assert s.count() == 0  # replayed corpus: all dropped
-    r2.unpersist()
-    # DataFrame mode (no persisted layout) still accepts width-less
-    # meta — there is no on-disk layout to diverge from
-    s3, r3 = semantic_dedup_batch_against_index(
-        df, None, 0, centroids=cents, meta=bad_meta, eps=_EPS)
-    assert s3.count() > 0
-    r3.unpersist()
 
 
 def test_incremental_registered_query_releases_caches(spark):
@@ -569,837 +171,12 @@ def test_incremental_registered_query_releases_caches(spark):
     # localCheckpoint storage of the returned frame itself is context-
     # cleaned on GC; persist()-pinned frames must already be gone
     leaked = after - before
-    from pyspark.storagelevel import StorageLevel  # noqa: F401
-    sc = spark.sparkContext
-    jrdds = sc._jsc.getPersistentRDDs()
+    jrdds = spark.sparkContext._jsc.getPersistentRDDs()
     names = [str(jrdds.get(i).toString()) for i in leaked
              if jrdds.containsKey(i)]
     non_checkpoint = [n for n in names
                       if "localcheckpoint" not in n.lower()]
     assert not non_checkpoint, names
-
-
-def test_requantize_leaves_session_conf_untouched(spark, tmp_path):
-    """r6 VERDICT #4: the auto-broadcast hazard is handled with
-    per-join merge hints, not a session-wide conf toggle — a
-    concurrent query on the same session must keep its broadcast
-    joins for the whole duration of the op. The _pre_swap_hook seam
-    observes the conf MID-operation (after the heavy fold, before
-    the quantizer swap)."""
-    df = _emb_corpus(spark, 60)
-    index = str(tmp_path / "conf_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    for bid, chunk in enumerate(_chunks(df, 2, 60)):
-        _, rows = semantic_dedup_batch_against_index(
-            chunk, index, bid, eps=_EPS)
-        append_semantic_batch(rows, index, bid)
-        rows.unpersist()
-
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(key)
-    seen = {}
-
-    def hook():
-        seen["mid"] = spark.conf.get(key)
-
-    requantize_semantic_index(spark, index, _K * 2, lloyd_rounds=2,
-                              _pre_swap_hook=hook)
-    assert seen["mid"] == before, "conf was toggled during the op"
-    assert spark.conf.get(key) == before
-
-
-def test_requantize_and_compaction_mutually_exclude(spark, tmp_path):
-    """Requantize and compaction share the maintenance lease: a
-    compaction attempted while requantize is mid-op (the
-    _pre_swap_hook seam) fails fast, and the lease is released
-    afterwards."""
-    import os
-
-    df = _emb_corpus(spark, 60)
-    index = str(tmp_path / "lease_sem_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    for bid, chunk in enumerate(_chunks(df, 2, 60)):
-        _, rows = semantic_dedup_batch_against_index(
-            chunk, index, bid, eps=_EPS)
-        append_semantic_batch(rows, index, bid)
-        rows.unpersist()
-
-    hits = {}
-
-    def racing_compaction():
-        try:
-            compact_semantic_index(spark, index)
-        except RuntimeError as e:
-            hits["err"] = str(e)
-
-    requantize_semantic_index(spark, index, _K * 2, lloyd_rounds=2,
-                              _pre_swap_hook=racing_compaction)
-    assert "lease" in hits["err"]
-    assert not os.path.exists(f"{index}/_maintenance.lease")
-    # probes keep working with leftover underscore files around
-    s, r = semantic_dedup_batch_against_index(df, index, 9, eps=_EPS)
-    assert s.count() == 0
-    r.unpersist()
-
-
-def test_handle_serving_matches_per_call_reads(spark, tmp_path):
-    """The open-handle serving path (cached quantizer + persisted
-    assignment tables, r6 VERDICT #1) produces verdicts identical to
-    the per-call-read path, end to end across batches, and releases
-    its caches on close."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        open_semantic_index)
-
-    df = _emb_corpus(spark, 90)
-    index_a = str(tmp_path / "idx_plain")
-    index_b = str(tmp_path / "idx_handle")
-    for index in (index_a, index_b):
-        init_semantic_index(df, index, _K, lloyd_rounds=2)
-
-    got_plain, got_handle = [], []
-    h = open_semantic_index(spark, index_b)
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
-                 .toArray())
-    for bid, chunk in enumerate(_chunks(df, 3, 90)):
-        s, rows = semantic_dedup_batch_against_index(
-            chunk, index_a, bid, eps=_EPS)
-        got_plain.extend(r["vec_id"] for r in s.collect())
-        append_semantic_batch(rows, index_a, bid)
-        rows.unpersist()
-
-        s2, rows2 = semantic_dedup_batch_against_index(
-            chunk, h, bid, eps=_EPS)
-        got_handle.extend(r["vec_id"] for r in s2.collect())
-        append_semantic_batch(rows2, index_b, bid)
-        rows2.unpersist()
-    assert sorted(got_handle) == sorted(got_plain)
-
-    # handle + explicit centroids is ambiguous — refused
-    with pytest.raises(ValueError, match="not both"):
-        semantic_dedup_batch_against_index(
-            df, h, 9, centroids=h.centroids, meta=h.meta, eps=_EPS)
-    h.close()
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
-                .toArray())
-    assert after <= before  # close released everything it pinned
-
-
-def test_handle_prune_threshold_preserves_verdicts(spark, tmp_path,
-                                                   monkeypatch):
-    """The large-index probe prune (r10 VERDICT #1: cells IN-filter
-    on the generation cache above _HANDLE_PRUNE_MIN_ROWS) is
-    verdict-invariant: forcing the threshold to 0 — every handle
-    batch takes the pruned branch, including over a compacted
-    generation — yields survivors identical to plain path mode."""
-    from radio_data_pipeline_spark.streaming import semantic as sem
-
-    monkeypatch.setattr(sem, "_HANDLE_PRUNE_MIN_ROWS", 0)
-
-    df = _emb_corpus(spark, 90)
-    index_a = str(tmp_path / "idx_plain")
-    index_b = str(tmp_path / "idx_pruned")
-    for index in (index_a, index_b):
-        init_semantic_index(df, index, _K, lloyd_rounds=2)
-
-    got_plain, got_pruned = [], []
-    h = None
-    for bid, chunk in enumerate(_chunks(df, 3, 90)):
-        s, rows = semantic_dedup_batch_against_index(
-            chunk, index_a, bid, eps=_EPS)
-        got_plain.extend(r["vec_id"] for r in s.collect())
-        append_semantic_batch(rows, index_a, bid)
-        rows.unpersist()
-
-        # reopen per batch so the generation fold below lands in the
-        # handle's cache (the prune must also hold over a cached
-        # generation, not just live dirs)
-        if h is not None:
-            h.close()
-        h = sem.open_semantic_index(spark, index_b)
-        assert h._gen_count >= 0  # prune branch taken at threshold 0
-        s2, rows2 = semantic_dedup_batch_against_index(
-            chunk, h, bid, eps=_EPS)
-        got_pruned.extend(r["vec_id"] for r in s2.collect())
-        append_semantic_batch(rows2, index_b, bid)
-        rows2.unpersist()
-        if bid == 0:
-            # fold batch 0 into a generation: batches 1-2 probe the
-            # pruned PERSISTED cache, not only live dirs
-            compact_semantic_index(spark, index_b)
-    h.close()
-    assert sorted(got_pruned) == sorted(got_plain)
-
-
-def test_stream_ingest_with_handle_matches_batch(spark, tmp_path):
-    """stream_semantic_ingest(handle=...) — the serving
-    configuration — still equals batch semantic_dedup under
-    id-ordered arrival."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        open_semantic_index)
-
-    df = _emb_corpus(spark)
-    expected = _batch_kept(df)
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "survivors")
-    index = str(tmp_path / "idx")
-    cp = str(tmp_path / "cp")
-    init_semantic_index(df, index, n_clusters=_K, lloyd_rounds=2)
-    h = open_semantic_index(spark, index)
-    try:
-        for phase, (lo, hi) in enumerate([(0, 45), (45, 90)]):
-            (df.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-             .coalesce(1).write.mode("overwrite")
-             .parquet(str(src / f"f{phase}")))
-            stream = (spark.readStream
-                      .schema("vec_id long, embedding array<double>")
-                      .parquet(str(src / "*")))
-            q = stream_semantic_ingest(stream, index, out,
-                                       checkpoint=cp, eps=_EPS,
-                                       handle=h)
-            q.awaitTermination()
-        got = sorted(r["vec_id"] for r in
-                     spark.read.parquet(out).select("vec_id").collect())
-        assert got == expected
-        with pytest.raises(ValueError, match="open on"):
-            stream_semantic_ingest(
-                spark.readStream
-                .schema("vec_id long, embedding array<double>")
-                .parquet(str(src / "*")),
-                str(tmp_path / "other"), out, checkpoint=cp, handle=h)
-    finally:
-        h.close()
-
-
-def test_handle_stale_across_requantize_raises(spark, tmp_path):
-    """r8 VERDICT #1 (two rounds overdue): a SemanticIndexHandle held
-    across requantize_semantic_index must RAISE on its next kernel
-    call, not file new rows under the dead quantizer's cells (silent
-    duplicate admission). The guard is a driver-side metadata compare
-    (no Spark job) — also pinned: it costs ~nothing and a fresh
-    handle works immediately after."""
-    import time
-
-    from radio_data_pipeline_spark.streaming.semantic import (
-        StaleQuantizerError, open_semantic_index)
-
-    df = _emb_corpus(spark, 60)
-    index = str(tmp_path / "stale_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    chunks = list(_chunks(df, 2, 60))
-    h = open_semantic_index(spark, index)
-    try:
-        s, rows = semantic_dedup_batch_against_index(
-            chunks[0], h, 0, eps=_EPS)
-        s.count()
-        append_semantic_batch(rows, index, 0)
-        rows.unpersist()
-
-        requantize_semantic_index(spark, index, _K * 2, lloyd_rounds=2)
-
-        # the stale handle fails LOUDLY before any cached table is used
-        with pytest.raises(StaleQuantizerError, match="STALE"):
-            semantic_dedup_batch_against_index(
-                chunks[1], h, 1, eps=_EPS)
-        # and check_fresh itself is the raising primitive
-        with pytest.raises(StaleQuantizerError):
-            h.check_fresh()
-    finally:
-        h.close()
-
-    # a fresh handle serves the requantized index immediately
-    h2 = open_semantic_index(spark, index)
-    try:
-        # guard overhead: driver-side listStatus only — no job. Bound
-        # it loosely (ms-scale) so a regression to a Spark job here
-        # (~100ms+ floor per job on this VM) fails the test.
-        t0 = time.perf_counter()
-        for _ in range(20):
-            h2.check_fresh()
-        per_call = (time.perf_counter() - t0) / 20
-        assert per_call < 0.05, f"check_fresh {per_call:.4f}s/call"
-        s2, rows2 = semantic_dedup_batch_against_index(
-            chunks[1], h2, 1, eps=_EPS)
-        s2.count()
-        rows2.unpersist()
-    finally:
-        h2.close()
-
-
-def test_maintenance_policy_decision_table():
-    """decide_maintenance is a pure function — pin the table
-    (r8 VERDICT #5): requantize beats compact beats noop; the
-    min-rows guard stops a freshly seeded index from churning; the
-    new k tracks rows/target."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        MaintenancePolicy, decide_maintenance)
-
-    p = MaintenancePolicy(compact_after_batches=4,
-                          requantize_over_occupancy=4.0,
-                          target_cluster_rows=256,
-                          min_rows_for_requantize=10_000)
-
-    def sig(live=0, gens=0, rows=0, k=1, files=0):
-        return {"live_batches": live, "generations": gens,
-                "rows": rows, "k": k, "files": files,
-                "occupancy": rows / k if k else 0.0}
-
-    # noop: few batches, healthy occupancy
-    assert decide_maintenance(sig(live=3, rows=5000, k=20), p)[0] \
-        == "noop"
-    # compact: live batches at threshold
-    assert decide_maintenance(sig(live=4, rows=5000, k=20), p)[0] \
-        == "compact"
-    # requantize: occupancy 4x target and enough rows — and it wins
-    # over a simultaneous compact trigger (it folds anyway)
-    act, params = decide_maintenance(
-        sig(live=9, rows=20_480, k=20), p)  # occ=1024 = 4*256
-    assert act == "requantize"
-    assert params["n_clusters"] == 80  # ceil(20480/256)
-    # min-rows guard: same occupancy ratio, tiny corpus -> compact
-    assert decide_maintenance(sig(live=9, rows=9_999, k=9), p)[0] \
-        == "compact"
-    # occupancy just below the bar -> compact path only
-    assert decide_maintenance(sig(live=4, rows=20_470, k=20), p)[0] \
-        == "compact"
-
-
-def test_maintain_semantic_index_serving_loop(spark, tmp_path):
-    """The policy loop against a real index: noop below the batch
-    threshold, compaction fires AT the threshold (folding the live
-    dirs into one generation), then noop again — and dry_run never
-    mutates. Verdicts stay identical through maintenance."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        MaintenancePolicy, maintain_semantic_index)
-
-    df = _emb_corpus(spark, 120)
-    index = str(tmp_path / "m_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    pol = MaintenancePolicy(compact_after_batches=4,
-                            min_rows_for_requantize=1_000_000)
-
-    fired = []
-    chunks = list(_chunks(df, 6, 120))
-    for bid, chunk in enumerate(chunks):
-        _, rows = semantic_dedup_batch_against_index(
-            chunk, index, bid, eps=_EPS)
-        append_semantic_batch(rows, index, bid)
-        rows.unpersist()
-        rep = maintain_semantic_index(spark, index, pol)
-        fired.append((rep["action"], rep["signals"]["live_batches"]))
-    # cadence: noop at 1-3 live dirs, compact at 4, then counter
-    # resets (the fold leaves one negative generation)
-    actions = [a for a, _ in fired]
-    assert actions == ["noop", "noop", "noop", "compact", "noop",
-                       "noop"]
-    compact_rep = fired[3]
-    assert compact_rep[1] == 4  # fired at the measured cadence
-
-    # dry_run reports without acting
-    rep = maintain_semantic_index(spark, index, pol, dry_run=True)
-    assert rep["action"] == "noop" and rep["result"] is None
-
-    # requantize path through the policy: drop the rows bar so the
-    # tiny corpus trips the occupancy trigger, preserve layout width
-    pol2 = MaintenancePolicy(requantize_over_occupancy=0.001,
-                             target_cluster_rows=8,
-                             min_rows_for_requantize=1)
-    rep2 = maintain_semantic_index(spark, index, pol2)
-    assert rep2["action"] == "requantize"
-    assert rep2["result"] >= 1  # folded the generation
-    # and the index still answers: a replayed duplicate batch drops
-    s, r = semantic_dedup_batch_against_index(
-        chunks[0], index, 99, eps=_EPS)
-    assert s.count() == 0
-    r.unpersist()
-
-
-def test_inline_pack_assignment_matches_join_path(spark):
-    """r9 serving fast path: when prepare_assignment built the
-    single-row quantizer packs, assignment runs as one spread
-    projection (_assign_points_inline). Pin verdict-identity against
-    the join-shaped path in BOTH modes, the keep_v passthrough, and
-    the size guard's pack decision."""
-    import pyspark.sql.functions as F
-
-    from radio_data_pipeline_spark.functions.similarity import (
-        _INLINE_PACK_MAX_ELEMS, _assign_points_inline, _as_double,
-        assign_to_centroids, prepare_assignment, release_assignment,
-        train_semantic_centroids)
-
-    def corpus(n, d=12):
-        return (spark.range(n)
-                .select(F.col("id").alias("vec_id"),
-                        F.transform(
-                            F.sequence(F.lit(1), F.lit(d)),
-                            lambda i: F.sin((F.col("id") % 97) * i)
-                            .cast("double")).alias("embedding")))
-
-    for n, k, two in ((300, 6, False), (1500, 150, True)):
-        df = corpus(n)
-        c, resolved = train_semantic_centroids(
-            df, k, lloyd_rounds=2, two_level=two)
-        c = c.persist()
-        c.count()
-        prep = prepare_assignment(c, resolved["two_level"],
-                                  resolved["coarse_clusters"])
-        try:
-            assert ("coarse_pack" in prep) or ("flat_pack" in prep)
-            batch = df.filter(F.col("vec_id") % 3 == 0)
-            a_old = assign_to_centroids(
-                batch, c, two_level=resolved["two_level"],
-                coarse_clusters=resolved["coarse_clusters"],
-                points_are_small=True)
-            a_new = assign_to_centroids(
-                batch, c, two_level=resolved["two_level"],
-                coarse_clusters=resolved["coarse_clusters"],
-                points_are_small=True, prepared=prep)
-            old = {r["vec_id"]: r["cluster"] for r in a_old.collect()}
-            new = {r["vec_id"]: r["cluster"] for r in a_new.collect()}
-            assert old == new
-            # keep_v rides the original vector through unchanged
-            pv = batch.select("vec_id",
-                              _as_double(F.col("embedding"))
-                              .alias("v"))
-            withv = _assign_points_inline(pv, prep, keep_v=True)
-            assert set(withv.columns) == {"vec_id", "v", "cluster"}
-            got = {r["vec_id"]: (r["cluster"], tuple(r["v"]))
-                   for r in withv.collect()}
-            ref = {r["vec_id"]: tuple(r["v"]) for r in pv.collect()}
-            assert all(got[i][0] == old[i] and got[i][1] == ref[i]
-                       for i in old)
-        finally:
-            release_assignment(prep)
-            c.unpersist()
-
-    # size guard: a quantizer over the element ceiling builds NO
-    # packs and the serving path falls back to the join shape
-    df = corpus(200, d=8)
-    c, resolved = train_semantic_centroids(df, 4, lloyd_rounds=1,
-                                           two_level=False)
-    c = c.persist()
-    c.count()
-    import radio_data_pipeline_spark.functions.similarity as sim
-    orig = sim._INLINE_PACK_MAX_ELEMS
-    sim._INLINE_PACK_MAX_ELEMS = 1
-    try:
-        prep = prepare_assignment(c, False, None)
-        try:
-            assert "flat_pack" not in prep
-            a = assign_to_centroids(df, c, two_level=False,
-                                    points_are_small=True,
-                                    prepared=prep)
-            assert a.count() == 200
-        finally:
-            release_assignment(prep)
-    finally:
-        sim._INLINE_PACK_MAX_ELEMS = orig
-        c.unpersist()
-
-
-def test_handle_gen_cache_refreshes_across_compaction(spark, tmp_path):
-    """r9 serving cache: the handle serves immutable generations from
-    a Spark cache and auto-refreshes when a maintenance fold changes
-    the generation set — verdicts through the SAME handle are
-    identical before and after compaction, and close() releases the
-    cache."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        compact_semantic_index, open_semantic_index)
-
-    df = _emb_corpus(spark, 90)
-    index = str(tmp_path / "gc_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    chunks = list(_chunks(df, 3, 90))
-    h = open_semantic_index(spark, index)
-    try:
-        for bid in (0, 1):
-            s, rows = semantic_dedup_batch_against_index(
-                chunks[bid], h, bid, eps=_EPS)
-            s.count()
-            append_semantic_batch(rows, index, bid)
-            rows.unpersist()
-        gen_names_before = set(h._gen_names)
-        compact_semantic_index(spark, index)
-        # same handle serves on: the fold is detected and the cache
-        # swaps to the new generation
-        s, rows = semantic_dedup_batch_against_index(
-            chunks[2], h, 2, eps=_EPS)
-        got = sorted(r["vec_id"] for r in s.collect())
-        append_semantic_batch(rows, index, 2)
-        rows.unpersist()
-        assert h._gen_names != gen_names_before
-        assert h._gen_df is not None
-
-        # replayed duplicate of an already-folded batch still drops
-        # fully through the cached path
-        s2, rows2 = semantic_dedup_batch_against_index(
-            chunks[0], h, 99, eps=_EPS)
-        assert s2.count() == 0
-        rows2.unpersist()
-    finally:
-        h.close()
-    assert h._gen_df is None
-
-    # equivalence: a fresh PATH-mode run of chunk 2 on a twin index
-    # (no handle, no cache) produces the same survivors
-    index2 = str(tmp_path / "gc_idx2")
-    init_semantic_index(df, index2, _K, lloyd_rounds=2)
-    for bid in (0, 1):
-        _, rows = semantic_dedup_batch_against_index(
-            chunks[bid], index2, bid, eps=_EPS)
-        append_semantic_batch(rows, index2, bid)
-        rows.unpersist()
-    compact_semantic_index(spark, index2)
-    s3, rows3 = semantic_dedup_batch_against_index(
-        chunks[2], index2, 2, eps=_EPS)
-    assert sorted(r["vec_id"] for r in s3.collect()) == got
-    rows3.unpersist()
-
-
-def test_gen_cache_witness_dedup_replay_exact(spark, tmp_path):
-    """The witness-deduped generation cache must keep replay verdicts
-    bit-identical to the uncached path. The killer case for a naive
-    one-representative dedup: the SAME vector indexed by a HIGH-id
-    seed batch and by a low-id live batch that later crashed and
-    replays — after a fold, the replayed batch's own-src_batch
-    exclusion must still see the seed copy as witness (min-src_batch
-    alone would have discarded it when the replayed id is the
-    minimum)."""
-    import pyspark.sql.functions as F
-
-    from radio_data_pipeline_spark.streaming.semantic import (
-        compact_semantic_index, open_semantic_index)
-
-    def vecs(ids, pattern_of):
-        rows = [(i, [float(j % 5 + 1) * pattern_of(i) for j in
-                     range(8)]) for i in ids]
-        return spark.createDataFrame(rows, "vec_id long, "
-                                           "embedding array<double>")
-
-    index = str(tmp_path / "wd_idx")
-    # 30 distinct patterns; seed ids 1e6.. carry patterns 0..29,
-    # live batch 3 carries the SAME patterns under new ids
-    train = vecs(range(30), lambda i: float(i % 30 + 1))
-    init_semantic_index(train, index, 4, lloyd_rounds=2)
-
-    seed = vecs(range(1_000_000, 1_000_030),
-                lambda i: float(i % 30 + 1))
-    live = vecs(range(100, 130), lambda i: float(i % 30 + 1))
-
-    # path A: uncached (plain path mode)
-    for b, df in ((1_000_000, seed), (3, live)):
-        _, rows = semantic_dedup_batch_against_index(
-            df, index, b, eps=0.99)
-        append_semantic_batch(rows, index, b)
-        rows.unpersist()
-    compact_semantic_index(spark, index)
-    s_plain, r_plain = semantic_dedup_batch_against_index(
-        live, index, 3, eps=0.99)  # REPLAY of batch 3
-    plain = sorted(r["vec_id"] for r in s_plain.collect())
-    r_plain.unpersist()
-    # every replayed doc still drops: the seed copies witness
-    assert plain == []
-
-    # path B: same replay through the witness-deduped handle cache
-    h = open_semantic_index(spark, index)
-    try:
-        assert h._gen_df is not None
-        # the cache holds at most 2 reps per (cell, v)
-        n_reps = h._gen_df.groupBy("cell", "v").count()
-        assert n_reps.agg(F.max("count")).first()[0] <= 2
-        s_h, r_h = semantic_dedup_batch_against_index(
-            live, h, 3, eps=0.99)
-        got = sorted(r["vec_id"] for r in s_h.collect())
-        r_h.unpersist()
-        assert got == plain
-    finally:
-        h.close()
-
-
-def test_failed_handle_open_releases_prepared_caches(
-        spark, tmp_path, monkeypatch):
-    """A handle open that fails AFTER prepare_assignment pinned its
-    frames must release them before re-raising — including a failure
-    in the staleness-snapshot listing itself (a transient fs error on
-    a remote scheme), which sits between the prepare and the
-    generation-cache build (review r9: it originally ran outside the
-    release guard and leaked the prepared caches)."""
-    from radio_data_pipeline_spark.streaming import dedup as sdedup
-    from radio_data_pipeline_spark.streaming.semantic import (
-        open_semantic_index)
-
-    df = _emb_corpus(spark, 60)
-    index = str(tmp_path / "leak_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-
-    real = sdedup._dir_snapshot
-
-    def boom(fs, path):
-        if "_quantizer" in path.toString():
-            raise RuntimeError("transient listing failure")
-        return real(fs, path)
-
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
-                 .toArray())
-    monkeypatch.setattr(sdedup, "_dir_snapshot", boom)
-    with pytest.raises(RuntimeError, match="transient listing"):
-        open_semantic_index(spark, index)
-    monkeypatch.undo()
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
-                .toArray())
-    assert after <= before  # nothing the failed open pinned survives
-
-    # and a clean open still works afterwards
-    h = open_semantic_index(spark, index)
-    h.close()
-
-
-def test_signals_footer_fast_path_matches_spark(spark, tmp_path):
-    """semantic_index_signals' driver-side pyarrow reads (rows via
-    footer sums, k via column uniques — no Spark job on local
-    indexes) must equal what the Spark fallback computes, including
-    with a crash-window duplicate generation present (both readers
-    see the same files)."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        semantic_index_signals)
-
-    df = _emb_corpus(spark, 90)
-    index = str(tmp_path / "sig_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    for bid, chunk in enumerate(_chunks(df, 3, 90)):
-        _, rows = semantic_dedup_batch_against_index(
-            chunk, index, bid, eps=_EPS)
-        append_semantic_batch(rows, index, bid)
-        rows.unpersist()
-    # crash-window shape: a generation copy with sources not yet
-    # deleted — rows duplicated on disk, and BOTH counts must agree
-    (spark.read.parquet(index)
-     .select("id", "v", "vn", "cell", "cell_bucket", "src_batch")
-     .write.mode("overwrite").partitionBy("cell_bucket")
-     .parquet(f"{index}/ingest_batch=-1"))
-
-    sig = semantic_index_signals(spark, index)
-    spark_rows = spark.read.parquet(index).count()
-    spark_k = (spark.read.parquet(f"{index}/_quantizer")
-               .select("cluster").distinct().count())
-    assert sig["rows"] == spark_rows
-    assert sig["k"] == spark_k
-    assert sig["occupancy"] == spark_rows / spark_k
-
-
-def test_concurrent_external_compaction_never_corrupts(spark,
-                                                       tmp_path):
-    """Semantic twin of the band-index race test: a PARALLEL
-    external maintainer (compact-only policy — requantize stays
-    offline and is covered by the append guard) folds continuously
-    while chunks serve through the path-mode kernel. Transient
-    failures retry the same batch id; the final survivor set must
-    equal the uncontended sequential reference, with at least one
-    fold mid-flight."""
-    import threading
-
-    from radio_data_pipeline_spark.streaming.semantic import (
-        MaintenancePolicy, maintain_semantic_index)
-
-    df = _emb_corpus(spark, 120)
-    index_ref = str(tmp_path / "ref_idx")
-    init_semantic_index(df, index_ref, _K, lloyd_rounds=2)
-    expected = []
-    for bid, chunk in enumerate(_chunks(df, 6, 120)):
-        s, rows = semantic_dedup_batch_against_index(chunk, index_ref,
-                                                     bid, eps=_EPS)
-        expected.extend(r["vec_id"] for r in
-                        s.select("vec_id").collect())
-        append_semantic_batch(rows, index_ref, bid)
-        rows.unpersist()
-    expected.sort()
-
-    index = str(tmp_path / "raced_idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    stop = threading.Event()
-    actions = []
-    pol = MaintenancePolicy(compact_after_batches=1,
-                            min_rows_for_requantize=10**9)
-
-    def maintainer():
-        while not stop.is_set():
-            try:
-                rep = maintain_semantic_index(spark, index, pol)
-                if rep["action"] != "noop":
-                    actions.append(rep["action"])
-            except Exception:
-                pass
-
-    from pyspark import inheritable_thread_target
-    t = threading.Thread(
-        target=inheritable_thread_target(maintainer), daemon=True)
-    t.start()
-    got = []
-    try:
-        for bid, chunk in enumerate(_chunks(df, 6, 120)):
-            for attempt in range(8):
-                try:
-                    s, rows = semantic_dedup_batch_against_index(
-                        chunk, index, bid, eps=_EPS)
-                    ids = [r["vec_id"] for r in
-                           s.select("vec_id").collect()]
-                    append_semantic_batch(rows, index, bid)
-                    rows.unpersist()
-                    break
-                except Exception:
-                    if attempt == 7:
-                        raise
-            got.extend(ids)
-    finally:
-        stop.set()
-        t.join(timeout=120)
-    assert sorted(got) == expected
-    assert actions and set(actions) == {"compact"}
-
-
-def test_append_guard_catches_mid_batch_requantize(spark, tmp_path):
-    """The append-time quantizer guard (path/append-time sibling of
-    the handle's check_fresh): a requantize that commits between a
-    batch's assignment and its index append must FAIL the append
-    loudly — the rows were filed under dead cells and a silent
-    commit would hide them from every future probe. Replay heals:
-    re-running the batch against the new quantizer commits cleanly
-    and its overwrite replaces the mis-filed dir, with correct
-    verdicts."""
-    df = _emb_corpus(spark, 60)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, 2, lloyd_rounds=2)
-    _, rows = semantic_dedup_batch_against_index(
-        df.filter(F.col("vec_id") < 30), index, 0, eps=_EPS)
-    append_semantic_batch(rows, index, 0)
-    rows.unpersist()
-
-    # batch 1 assigns with the CURRENT quantizer...
-    chunk = df.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 60))
-    s1, rows1 = semantic_dedup_batch_against_index(chunk, index, 1,
-                                                   eps=_EPS)
-    n1 = s1.count()
-    # ...then a requantize commits before the append lands
-    requantize_semantic_index(spark, index, n_clusters=_K,
-                              lloyd_rounds=2)
-    with pytest.raises(RuntimeError, match="quantizer.*changed"):
-        append_semantic_batch(rows1, index, 1)
-    rows1.unpersist()
-
-    # replay: recompute against the new quantizer, commit cleanly
-    s1b, rows1b = semantic_dedup_batch_against_index(chunk, index, 1,
-                                                     eps=_EPS)
-    assert s1b.count() == n1  # verdicts replay identically
-    append_semantic_batch(rows1b, index, 1)
-    rows1b.unpersist()
-    # the healed index drops a twin of a batch-1 doc
-    twin = (df.filter(F.col("vec_id") == 35)
-            .withColumn("vec_id", F.lit(7000)))
-    s, r = semantic_dedup_batch_against_index(twin, index, 9,
-                                              eps=_EPS)
-    assert s.count() == 0
-    r.unpersist()
-
-    # handle mode carries the guard too (open-time snapshot)
-    from radio_data_pipeline_spark.streaming.semantic import (
-        open_semantic_index)
-
-    h = open_semantic_index(spark, index)
-    try:
-        _, rh = semantic_dedup_batch_against_index(twin, h, 10,
-                                                   eps=_EPS)
-        assert getattr(rh, "_rdps_quantizer_guard", None) is not None
-        rh.unpersist()
-    finally:
-        h.close()
-
-    # a TRANSFORMED rows frame sheds the attribute (new Python
-    # object) — the explicit quantizer_guard parameter restores the
-    # defense for such callers
-    s2, rows2 = semantic_dedup_batch_against_index(twin, index, 11,
-                                                   eps=_EPS)
-    g = rows2._rdps_quantizer_guard
-    transformed = rows2.filter(F.col("id") >= 0)  # attribute gone
-    assert getattr(transformed, "_rdps_quantizer_guard", None) is None
-    requantize_semantic_index(spark, index, n_clusters=2,
-                              lloyd_rounds=2)
-    with pytest.raises(RuntimeError, match="quantizer.*changed"):
-        append_semantic_batch(transformed, index, 11,
-                              quantizer_guard=g)
-    # STRUCTURAL channel (r9 ADVICE): a guard-LESS transformed append
-    # to a kernel-probed path is refused with instructions — the
-    # defense no longer degrades to convention silently. The refusal
-    # must fire BEFORE the write (round-10 review): a post-write
-    # refusal would leave exactly the unguarded rows it exists to
-    # block standing committed in the index.
-    import os as _os
-    with pytest.raises(ValueError, match="shedding"):
-        append_semantic_batch(transformed, index, 13)
-    assert not _os.path.exists(f"{index}/ingest_batch=13"), \
-        "refused append must not have committed"
-    # explicit opt-out for genuinely kernel-free appends still works
-    from radio_data_pipeline_spark.streaming.semantic import (
-        SKIP_QUANTIZER_GUARD)
-    append_semantic_batch(transformed.limit(0), index, 12,
-                          quantizer_guard=SKIP_QUANTIZER_GUARD)
-    rows2.unpersist()
-
-
-def test_zero_row_append_does_not_break_readers(spark, tmp_path):
-    """A zero-row semantic append (a multi-signal batch whose every
-    doc the band gate dropped) commits a _SUCCESS-only ingest dir;
-    the serving handle, the path-mode kernel, and the compactor must
-    all tolerate it (the compactor deletes it)."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        open_semantic_index, semantic_index_signals)
-
-    df = _emb_corpus(spark, 30)
-    index = str(tmp_path / "idx")
-    init_semantic_index(df, index, _K, lloyd_rounds=2)
-    _, rows = semantic_dedup_batch_against_index(df, index, 0,
-                                                 eps=_EPS)
-    append_semantic_batch(rows, index, 0)
-    # the filter sheds the kernel's guard attribute; the explicit
-    # parameter keeps the appends' requantize defense (a guard-less
-    # transformed append is refused — see the structural-guard test)
-    append_semantic_batch(rows.filter(F.lit(False)), index, 1,
-                          quantizer_guard=rows._rdps_quantizer_guard)
-    rows.unpersist()
-    assert semantic_index_signals(spark, index)["live_batches"] == 2
-
-    twin = df.withColumn("vec_id", F.col("vec_id") + 100)
-    # path mode root read tolerates the data-less dir
-    s2, rows2 = semantic_dedup_batch_against_index(twin, index, 2,
-                                                   eps=_EPS)
-    assert s2.count() == 0  # every twin matches its indexed original
-    rows2.unpersist()
-
-    h = open_semantic_index(spark, index)
-    try:
-        s3, rows3 = semantic_dedup_batch_against_index(twin, h, 3,
-                                                       eps=_EPS)
-        assert s3.count() == 0
-        rows3.unpersist()
-    finally:
-        h.close()
-
-    assert compact_semantic_index(spark, index) == 2
-    sig = semantic_index_signals(spark, index)
-    assert sig["live_batches"] == 0 and sig["generations"] == 1
-    assert sig["rows"] == 30
-
-
-def test_signals_on_uninitialized_path_fail_loud(spark, tmp_path):
-    """A path with no _quantizer dir is NOT a semantic index: the
-    driver-side fast path must raise (parity with the Spark
-    fallback's PATH_NOT_FOUND), never return k=0 — a silent zero
-    would make maintain_semantic_index report noop forever on a
-    typo'd index path instead of surfacing it."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        semantic_index_signals)
-
-    with pytest.raises(FileNotFoundError, match="_quantizer"):
-        semantic_index_signals(spark, str(tmp_path / "not_an_index"))
 
 
 def test_band_signals_rows_fast_path_matches_spark(spark, tmp_path):
@@ -1422,95 +199,3 @@ def test_band_signals_rows_fast_path_matches_spark(spark, tmp_path):
     assert "rows" not in band_index_signals(spark, index)
     sig = band_index_signals(spark, index, with_rows=True)
     assert sig["rows"] == spark.read.parquet(index).count()
-
-
-def test_stream_semantic_ingest_in_stream_maintenance_requantizes(
-        spark, tmp_path):
-    """stream_semantic_ingest(maintenance_policy=..., handle=None):
-    a policy requantize fires MID-STREAM (path mode re-reads the
-    quantizer per batch, so later batches serve the retrained index
-    with no reopen choreography), the quantizer ends the run at the
-    auto-scaled k, and exact duplicates are still dropped across the
-    retrain (identical vectors always share a cell, old or new)."""
-    from radio_data_pipeline_spark.streaming.semantic import (
-        MaintenancePolicy, read_semantic_quantizer)
-
-    df = _emb_corpus(spark, 120)
-    index = str(tmp_path / "m_idx")
-    init_semantic_index(df.limit(30), index, 2, lloyd_rounds=2)
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "survivors")
-    cp = str(tmp_path / "cp")
-    schema = "vec_id long, embedding array<double>"
-    # tiny target + low bar: the occupancy trigger fires mid-run
-    pol = MaintenancePolicy(compact_after_batches=10**9,
-                            requantize_over_occupancy=1.0,
-                            target_cluster_rows=16,
-                            min_rows_for_requantize=1,
-                            lloyd_rounds=2)
-
-    for phase, (lo, hi) in enumerate([(0, 40), (40, 80), (80, 120)]):
-        (df.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-         .coalesce(1).write.mode("overwrite")
-         .parquet(str(src / f"f{phase}")))
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        q = stream_semantic_ingest(stream, index, out, checkpoint=cp,
-                                   eps=_EPS, maintenance_policy=pol)
-        q.awaitTermination()
-
-    _, meta = read_semantic_quantizer(spark, index)
-    from radio_data_pipeline_spark.streaming.semantic import (
-        semantic_index_signals)
-    sig = semantic_index_signals(spark, index)
-    assert sig["k"] > 2  # the policy retrain raised k from the seed 2
-    assert sig["rows"] == 120
-    # every processed id landed exactly once in survivors-or-index
-    surv = {r["vec_id"] for r in spark.read.parquet(out).collect()}
-    assert surv.issubset(set(range(120)))
-    # exact duplicates still drop across the retrain: replay the
-    # first chunk as a fresh batch through the kernel
-    s, rows = semantic_dedup_batch_against_index(
-        df.filter(F.col("vec_id") < 40), index, 999, eps=_EPS)
-    assert s.count() == 0
-    rows.unpersist()
-
-
-def test_stream_semantic_ingest_handle_plus_requantize_fails_loud(
-        spark, tmp_path):
-    """A caller-owned handle + a policy that requantizes mid-stream
-    must FAIL THE QUERY with the documented error — never serve the
-    dead quantizer, never swap the caller's handle silently."""
-    from pyspark.errors.exceptions.captured import (
-        StreamingQueryException)
-
-    from radio_data_pipeline_spark.streaming.semantic import (
-        MaintenancePolicy, open_semantic_index)
-
-    df = _emb_corpus(spark, 120)
-    index = str(tmp_path / "m_idx")
-    init_semantic_index(df.limit(30), index, 2, lloyd_rounds=2)
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "survivors")
-    cp = str(tmp_path / "cp")
-    schema = "vec_id long, embedding array<double>"
-    pol = MaintenancePolicy(compact_after_batches=10**9,
-                            requantize_over_occupancy=1.0,
-                            target_cluster_rows=16,
-                            min_rows_for_requantize=1,
-                            lloyd_rounds=2)
-
-    (df.filter(F.col("vec_id") < 60).coalesce(1)
-     .write.mode("overwrite").parquet(str(src / "f0")))
-    h = open_semantic_index(spark, index)
-    try:
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        q = stream_semantic_ingest(stream, index, out, checkpoint=cp,
-                                   eps=_EPS, handle=h,
-                                   maintenance_policy=pol)
-        with pytest.raises(StreamingQueryException,
-                           match="requantized mid-stream"):
-            q.awaitTermination()
-    finally:
-        h.close()
