@@ -160,9 +160,9 @@ def band_table(df: DataFrame, text_col: str = "text",
                band_size: int = 2, k: int = 3) -> DataFrame:
     """LSH band rows ``(id, band_id, band_hash)`` — one row per
     (document, band), the shared blocking structure under
-    minhash_lsh_pairs, greedy_band_survivors, and the persisted band
-    index (streaming/dedup.py). NULL-hash rows (shingle-less docs —
-    fewer than k words) are excluded: such docs can never pair.
+    minhash_lsh_pairs and greedy_band_survivors. NULL-hash rows
+    (shingle-less docs — fewer than k words) are excluded: such docs
+    can never pair.
     Cost: fully map-side — the projection-form signatures plus an
     explode to n_bands rows per doc; no shuffle."""
     assert n_hashes % band_size == 0

@@ -343,9 +343,7 @@ def minhash_lsh_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "greedy_band_survivors): a doc is dropped iff any LSH band is "
         "shared with a smaller-id doc. Window-min per bucket — linear "
         "in bucket size, so mass-duplicate clusters cost rows, not "
-        "pairs, and no bucket cap is needed. The batch semantics the "
-        "streaming incremental ingest (streaming/dedup.py) is proven "
-        "equivalent to under id-ordered arrival.",
+        "pairs, and no bucket cap is needed.",
     tags=("dedup", "minhash", "lsh"),
 )
 def near_dup_survivors_greedy_q(spark: SparkSession,

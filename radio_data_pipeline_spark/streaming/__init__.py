@@ -1,7 +1,9 @@
 """Structured Streaming surface (SURVEY.md §2.8 — absent from the
 reference, provided Spark-natively): watermarked event-time windows,
-streaming dedup, and the calibration state machine as a stateful
-streaming operator."""
+event dedup, stream-stream joins and exactly-once sinks over the
+events table. The SDFITS reduction is file-to-file and has no
+streaming form here; the streaming SDFITS reader is
+`sources/fits_datasource.py`."""
 
 from radio_data_pipeline_spark.streaming.events import (
     EVENTS_RAW_SCHEMA,
@@ -15,16 +17,10 @@ from radio_data_pipeline_spark.streaming.events import (
     tumbling_event_counts,
     view_purchase_pairs,
 )
-from radio_data_pipeline_spark.streaming.segmentation import (
-    CalScanState,
-    find_calibrations_stream,
-)
 
 __all__ = [
     "EVENTS_RAW_SCHEMA",
-    "CalScanState",
     "dedup_events",
-    "find_calibrations_stream",
     "read_events_stream",
     "run_available_now",
     "session_event_counts",

@@ -49,9 +49,9 @@ def test_representative_queries_green_on_local_cluster():
 
 def test_round6_library_paths_green_on_local_cluster():
     """Library paths no registered query exercises — the two-level
-    semantic_dedup assignment, salted_sessionize, and the widened
-    band-index kernel + compaction — must also hold when closures
-    serialize and Python workers run in separate executor JVMs."""
+    semantic_dedup assignment and salted_sessionize — must also hold
+    when closures serialize and Python workers run in separate
+    executor JVMs."""
     proc = subprocess.run(
         [sys.executable,
          os.path.join(REPO, "tools", "run_cluster_library_check.py")],

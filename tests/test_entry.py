@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
+
 import __spark_entry__ as entry_mod
 
 
@@ -98,3 +100,28 @@ def test_sample_window_pins_critical_families_in_first_50():
     for name in no_oracle:
         assert {"mapInPandas", "multimodal", "radio"} \
                & set(specs[name].tags), name
+
+
+def test_deferred_release_capped(spark):
+    """r8 ADVICE (medium): _DEFERRED_RELEASE is a capped FIFO — a
+    consumer that never calls release_deferred() (the driver gate)
+    cannot accumulate persisted frames without bound across repeated
+    builds; eviction unpersists the oldest frame."""
+    from radio_data_pipeline_spark.plans.registry import (
+        _DEFERRED_CAP, _DEFERRED_RELEASE, defer_unpersist,
+        release_deferred)
+
+    release_deferred()  # start clean
+    frames = []
+    for i in range(_DEFERRED_CAP + 3):
+        df = spark.range(5).withColumn("i", F.lit(i)).persist()
+        df.count()
+        frames.append(defer_unpersist(df))
+    assert len(_DEFERRED_RELEASE) == _DEFERRED_CAP
+    # the evicted (oldest) frames are unpersisted, the rest cached
+    assert all(f.storageLevel.useMemory is False for f in frames[:3])
+    assert all(f.storageLevel.useMemory for f in frames[3:])
+    # evicted frames still compute correctly (lineage recompute)
+    assert frames[0].count() == 5
+    assert release_deferred() == _DEFERRED_CAP
+    assert not _DEFERRED_RELEASE

@@ -311,6 +311,35 @@ def test_sdfits_streaming_source(spark, tmp_path):
     assert len({r["path"] for r in collected}) == 3
 
 
+def test_sdfits_stream_fails_on_zero_length_file(spark, tmp_path):
+    # The streaming reader opens every listed file itself, so a 0-byte
+    # file reaches the codec and fails the query with the codec's own
+    # verdict; it is not silently skipped (a plain binaryFile stream
+    # plans no split for it, the gap read_sdfits guards in batch).
+    from pyspark.errors import StreamingQueryException
+
+    from radio_data_pipeline_spark.sources.fits_datasource import (
+        register_sdfits,
+    )
+    register_sdfits(spark)
+    src = tmp_path / "stream"
+    src.mkdir()
+    (src / "good.fits").write_bytes(
+        write_sdfits(_obs_pdf(n_science=4), HEADER, HISTORY))
+    (src / "empty.fits").write_bytes(b"")
+    with pytest.raises(FitsFormatError) as verdict:
+        parse_sdfits(b"")
+
+    q = (spark.readStream.format("sdfits").load(str(src / "*.fits"))
+         .writeStream.format("noop")
+         .option("checkpointLocation", str(tmp_path / "cp"))
+         .trigger(availableNow=True).start())
+    with pytest.raises(StreamingQueryException) as failed:
+        q.awaitTermination()
+    assert "FitsFormatError" in str(failed.value)
+    assert str(verdict.value) in str(failed.value)
+
+
 def test_sdfits_stream_offset_stays_flat(tmp_path):
     # the offset must be a watermark + frontier, not consumed history:
     # its serialized size must NOT grow as the corpus grows 3x

@@ -1,28 +1,16 @@
-"""Structured Streaming tests: availableNow parity with the batch
-forms, and incremental-vs-batch equivalence of the calibration scan.
+"""Structured Streaming tests: availableNow parity of the event-time
+queries with their batch forms, and the crash-recovery contracts of
+the exactly-once training-shard sink and the constraint gate.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
-from radio_data_pipeline_spark.operators.segmentation import (
-    find_calibration_indices,
-    find_calibrations,
-)
 from radio_data_pipeline_spark.sources.parquet import load_table
-from radio_data_pipeline_spark.sources.synthetic import (
-    ObsSpec,
-    make_observation_set,
-)
 from radio_data_pipeline_spark.streaming import (
-    CalScanState,
     dedup_events,
-    find_calibrations_stream,
     read_events_stream,
     run_available_now,
     session_event_counts,
@@ -30,58 +18,9 @@ from radio_data_pipeline_spark.streaming import (
     tumbling_event_counts,
 )
 
-import numpy as np
-
 
 def _sorted_rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
-
-
-# --------------------------------------------------------------------------
-# Incremental state machine == batch pass (pure python, no Spark)
-# --------------------------------------------------------------------------
-
-rows_strategy = st.lists(
-    st.tuples(st.integers(0, 1), st.integers(0, 1)), min_size=1, max_size=80)
-
-
-@settings(max_examples=300, deadline=None)
-@given(rows=rows_strategy, cc=st.integers(1, 4),
-       n_chunks=st.integers(1, 5))
-def test_cal_scan_incremental_matches_batch(rows, cc, n_chunks):
-    cal = np.array([r[0] for r in rows])
-    swp = np.array([r[1] for r in rows])
-    modes = [""] * len(rows)
-    expected = find_calibration_indices(cal, swp, modes, "track", cc)
-
-    machine = CalScanState()
-    bounds = np.linspace(0, len(rows), n_chunks + 1).astype(int)
-    for lo, hi in zip(bounds[:-1], bounds[1:]):
-        machine.feed(cal[lo:hi], swp[lo:hi], modes[lo:hi], "track", cc)
-    got = machine.result()
-    # batch returns data_start=None only via the fallback path where it
-    # then sets 0 explicitly; normalize both to ints
-    exp = (expected[0] if expected[0] is not None else 0,
-           expected[1], expected[2])
-    assert (got[0], got[1], got[2]) == exp
-
-
-def test_cal_scan_result_is_prefix_consistent():
-    # result() after feeding a prefix == batch answer on that prefix
-    spec = ObsSpec(obs_id=7, n_science=30, false_start=True, onoff=True)
-    from radio_data_pipeline_spark.sources.synthetic import make_observation
-    pdf = make_observation(spec)
-    cal = pdf["CALSTATE"].to_numpy()
-    swp = pdf["SWPVALID"].to_numpy()
-    modes = pdf["OBSMODE"].tolist()
-    machine = CalScanState()
-    for i in range(len(pdf)):
-        machine.step(int(cal[i]), int(swp[i]), modes[i], "onoff", 4)
-        exp = find_calibration_indices(cal[:i + 1], swp[:i + 1],
-                                       modes[:i + 1], "onoff", 4)
-        got = machine.result()
-        assert got[1] == exp[1] and got[2] == exp[2]
-        assert got[0] == (exp[0] if exp[0] is not None else 0)
 
 
 # --------------------------------------------------------------------------
@@ -150,94 +89,6 @@ def test_stream_stream_join_matches_batch(spark, sf_smoke, events_stream):
     cols = ["user_id", "view_id", "purchase_id", "delay_s"]
     assert _sorted_rows(got, cols) == _sorted_rows(exp, cols)
     assert got.count() > 0
-
-
-# --------------------------------------------------------------------------
-# Stateful streaming segmentation == batch operator
-# --------------------------------------------------------------------------
-
-def test_streaming_segmentation_matches_batch(spark, tmp_path):
-    specs = [ObsSpec(obs_id=0), ObsSpec(obs_id=1, false_start=True),
-             ObsSpec(obs_id=2, pre_cal=False)]
-    pdf = make_observation_set(specs)
-    cols = ["obs_id", "row_idx", "IFNUM", "PLNUM", "CALSTATE", "SWPVALID",
-            "OBSMODE"]
-    src = str(tmp_path / "obs_stream")
-    batch_df = spark.createDataFrame(pdf[cols])
-    batch_df.write.parquet(src)
-
-    stream = (spark.readStream.schema(batch_df.schema).parquet(src))
-    out = find_calibrations_stream(stream, channel_count=4,
-                                   header_obsmode="track")
-    q = (out.writeStream.format("memory").queryName("t_seg")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table("t_seg").toPandas()
-    # latest update per stream (max rows_seen) is the final answer
-    got = (got.sort_values("rows_seen")
-           .groupby(["obs_id", "IFNUM", "PLNUM"], as_index=False).last())
-
-    exp = find_calibrations(batch_df, channel_count=4,
-                            header_obsmode="track").toPandas()
-
-    merged = got.merge(exp, on=["obs_id", "IFNUM", "PLNUM"],
-                       suffixes=("_s", "_b"))
-    assert len(merged) == len(exp) == 12
-    assert (merged["data_start_idx_s"] == merged["data_start_idx_b"]).all()
-    assert (merged["post_cal_start_idx_s"]
-            == merged["post_cal_start_idx_b"]).all()
-    b_off = merged["off_start_idx_b"]
-    s_off = merged["off_start_idx_s"]
-    assert ((s_off == b_off) | (s_off.isna() & b_off.isna())).all()
-
-
-def test_streaming_segmentation_recovers_from_checkpoint(spark, tmp_path):
-    # state must survive a full query stop/restart: phase 1 ingests the
-    # first half of an observation, phase 2 a new file with the rest;
-    # the recovered state machine must end exactly where a single batch
-    # pass over everything ends
-    from radio_data_pipeline_spark.sources.synthetic import make_observation
-
-    pdf = make_observation(ObsSpec(obs_id=5, n_science=40))
-    cols = ["obs_id", "row_idx", "IFNUM", "PLNUM", "CALSTATE", "SWPVALID",
-            "OBSMODE"]
-    pdf = pdf[cols]
-    half = len(pdf) // 2
-    src = tmp_path / "src"
-    src.mkdir()
-    cp = str(tmp_path / "checkpoint")
-    schema = spark.createDataFrame(pdf).schema
-
-    collected: list = []
-
-    def run_phase(part: pd.DataFrame, fname: str) -> None:
-        spark.createDataFrame(part).coalesce(1).write.mode("append") \
-            .parquet(str(src / fname))
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        out = find_calibrations_stream(stream, channel_count=1,
-                                       header_obsmode="track")
-
-        def sink(batch_df, batch_id):
-            collected.extend(batch_df.collect())
-
-        q = (out.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", cp)
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    run_phase(pdf.iloc[:half], "part1")
-    rows_after_1 = [r for r in collected]
-    assert rows_after_1 and max(r["rows_seen"] for r in rows_after_1) == half
-
-    run_phase(pdf.iloc[half:], "part2")
-    final = max(collected, key=lambda r: r["rows_seen"])
-    assert final["rows_seen"] == len(pdf)
-
-    exp = find_calibration_indices(
-        pdf["CALSTATE"].to_numpy(), pdf["SWPVALID"].to_numpy(),
-        pdf["OBSMODE"].tolist(), "track", 1)
-    assert final["data_start_idx"] == (exp[0] if exp[0] is not None else 0)
-    assert final["post_cal_start_idx"] == exp[1]
 
 
 def test_training_shards_exactly_once_after_midwrite_crash(spark, tmp_path):

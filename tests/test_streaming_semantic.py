@@ -3,8 +3,7 @@ semantic_dedup_batch_against_index): the quantizer is trained once and
 frozen, each micro-batch is deduped within itself and against the
 in-memory (id, v, cell) rows of every earlier batch, and the verdicts
 equal batch semantic_dedup of the full corpus under id-ordered arrival
-with the same trained centroids. The last test checks the band index's
-(streaming/dedup.py) footer row-count signal."""
+with the same trained centroids."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -178,24 +177,3 @@ def test_incremental_registered_query_releases_caches(spark):
                       if "localcheckpoint" not in n.lower()]
     assert not non_checkpoint, names
 
-
-def test_band_signals_rows_fast_path_matches_spark(spark, tmp_path):
-    """band_index_signals(with_rows=True) footer sum equals the Spark
-    count (and stays opt-in: the default dict has no rows key)."""
-    from radio_data_pipeline_spark.streaming.dedup import (
-        append_batch_bands, band_index_signals,
-        dedup_batch_against_index)
-
-    rows = [(i, f"alpha bravo charlie delta echo {i} foxtrot golf")
-            for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    index = str(tmp_path / "b_idx")
-    for bid in range(2):
-        chunk = df.filter((F.col("doc_id") >= bid * 20)
-                          & (F.col("doc_id") < (bid + 1) * 20))
-        _, bands = dedup_batch_against_index(chunk, index, bid)
-        append_batch_bands(bands, index, bid)
-        bands.unpersist()
-    assert "rows" not in band_index_signals(spark, index)
-    sig = band_index_signals(spark, index, with_rows=True)
-    assert sig["rows"] == spark.read.parquet(index).count()

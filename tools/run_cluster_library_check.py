@@ -1,12 +1,11 @@
 #!/usr/bin/env python
 """Cluster-mode (separate-JVM) check of library paths NO registered
-query exercises: the two-level semantic_dedup assignment, the salted
-sessionization helper, and the widened-prefix band-index kernel with
-compaction. run_cluster_parity.py sweeps every REGISTERED query under
-local-cluster; these round-6 additions are library-level (the
-registered semantic_dedup_stats pins k=4 = flat path; the band index
-has no oracle query at prefix_len=3), so without this they would only
-ever run inside the threaded local[N] suite.
+query exercises: the two-level semantic_dedup assignment and the
+salted sessionization helper. run_cluster_parity.py sweeps every
+REGISTERED query under local-cluster; these round-6 additions are
+library-level (the registered semantic_dedup_stats pins k=4 = flat
+path), so without this they would only ever run inside the threaded
+local[N] suite.
 
 Usage: python tools/run_cluster_library_check.py [master]
 """
@@ -15,7 +14,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,11 +29,6 @@ from radio_data_pipeline_spark.operators.skew import (  # noqa: E402
     salted_sessionize,
 )
 from radio_data_pipeline_spark.session import get_spark  # noqa: E402
-from radio_data_pipeline_spark.streaming.dedup import (  # noqa: E402
-    append_batch_bands,
-    compact_band_index,
-    dedup_batch_against_index,
-)
 
 MASTER = sys.argv[1] if len(sys.argv) > 1 else "local-cluster[2,4,2048]"
 
@@ -79,35 +72,10 @@ def check_salted_sessionize(spark) -> None:
     print("salted_sessionize equivalence: ok", flush=True)
 
 
-def check_band_index(spark) -> None:
-    with tempfile.TemporaryDirectory() as d:
-        index = os.path.join(d, "idx")
-        dup = "kilo lima mike november oscar papa quebec romeo"
-        b0 = spark.createDataFrame(
-            [(0, dup), (1, "alfa bravo charlie delta echo foxtrot")],
-            "doc_id long, text string")
-        s0, bands0 = dedup_batch_against_index(b0, index, 0, prefix_len=3)
-        assert s0.count() == 2
-        append_batch_bands(bands0, index, 0)
-        bands0.unpersist()
-        b1 = spark.createDataFrame([(9, dup)], "doc_id long, text string")
-        s1, bands1 = dedup_batch_against_index(b1, index, 1, prefix_len=3)
-        assert s1.count() == 0  # cross-batch match through the layout
-        append_batch_bands(bands1, index, 1)
-        bands1.unpersist()
-        assert compact_band_index(spark, index) == 2
-        b2 = spark.createDataFrame([(12, dup)], "doc_id long, text string")
-        s2, bands2 = dedup_batch_against_index(b2, index, 2, prefix_len=3)
-        assert s2.count() == 0  # still matches after compaction
-        bands2.unpersist()
-    print("band index (prefix_len=3) + compaction: ok", flush=True)
-
-
 def main() -> None:
     spark = get_spark("cluster-library-check", master=MASTER)
     check_two_level(spark)
     check_salted_sessionize(spark)
-    check_band_index(spark)
     print(f"CLUSTER LIBRARY CHECK: all ok on {MASTER}", flush=True)
     spark.stop()
 
