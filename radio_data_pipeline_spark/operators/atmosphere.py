@@ -7,14 +7,15 @@ axis (vectorized pandas UDF) -> element-wise gain application via
 zip_with. Everything is per-row independent, so the whole stage is
 shuffle-free and scales embarrassingly.
 
-The `itur` library the reference uses (atmosphere_correction.py:47-57)
-is not available here; the UDF computes the PUBLISHED simplified
-gaseous-attenuation algorithm of Rec. ITU-R P.676 (the early-Annex-2 /
-CCIR-676 approximation: oxygen + water-vapour specific-attenuation
-polynomials, equivalent heights, cosecant slant path) behind an
-import-try so `itur`'s line-by-line model slots in unchanged when
-present. Golden tests pin the implementation against independently
-computed values of the published formulas (test_atmosphere_multimodal).
+The reference calls the `itur` library (atmosphere_correction.py:47-57);
+the UDF always computes the PUBLISHED simplified gaseous-attenuation
+algorithm of Rec. ITU-R P.676 (the early-Annex-2 / CCIR-676
+approximation: oxygen + water-vapour specific-attenuation polynomials,
+equivalent heights, cosecant slant path), whether or not `itur` is
+installed, so the product does not depend on the environment. Golden
+tests pin the implementation against independently computed values of
+the published formulas (test_atmosphere_multimodal); where `itur` is
+installed, test_optional_extras compares the kernel against it.
 """
 
 from __future__ import annotations
@@ -27,14 +28,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - itur not installed in this environment
-    import itur  # type: ignore
-    HAVE_ITUR = True
-except Exception:  # pragma: no cover
-    itur = None
-    HAVE_ITUR = False
-
 
 def buck_vapor_density_expr(temp_c: Column, humidity_pct: Column) -> Column:
     """Water-vapor density rho [g/m^3] from the Buck saturation vapor
@@ -159,8 +152,7 @@ def transmission_udf(frequencies_ghz: list[float]):
     every row of an observation stream)."""
     import numpy as np
 
-    freqs = list(frequencies_ghz)
-    freqs_arr = np.asarray(freqs, dtype=float)
+    freqs_arr = np.asarray(frequencies_ghz, dtype=float)
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def _transmission(elev_deg: pd.Series, tambient_c: pd.Series,
@@ -176,18 +168,11 @@ def transmission_udf(frequencies_ghz: list[float]):
             e_s = (1.0007 + 3.46e-6) * 6.1121 * math.exp(
                 17.502 * t_c / (t_c + 240.97))
             rho = 216.7 * ((h / 100.0) * e_s) / t_k
-            if HAVE_ITUR:  # pragma: no cover
-                import astropy.units as u  # type: ignore
-                att = itur.models.itu676.gaseous_attenuation_slant_path(
-                    freqs * u.GHz, elev, rho, p, t_k, mode="approx").value
-                trans = [10 ** (-a / 10.0) for a in att]
-            else:
-                # published P.676 simplified algorithm, numpy-
-                # vectorized over the channel axis (per-row weather
-                # scalars, per-observation frequency vector)
-                att = p676_slant_attenuation(freqs_arr, elev, rho, p, t_k)
-                trans = (10.0 ** (-att / 10.0)).tolist()
-            out.append(trans)
+            # published P.676 simplified algorithm, numpy-vectorized
+            # over the channel axis (per-row weather scalars,
+            # per-observation frequency vector)
+            att = p676_slant_attenuation(freqs_arr, elev, rho, p, t_k)
+            out.append((10.0 ** (-att / 10.0)).tolist())
         return pd.Series(out)
 
     return _transmission

@@ -14,11 +14,14 @@ NAXIS=0) and one BINTABLE extension with TFORM codes L/B/I/J/K/E/D/A
 and fixed repeat counts (vector 'nD' DATA column, fixed-width 'nA'
 strings). Big-endian row-major data as the standard requires.
 
-Scale design: files are decoded executor-side inside mapInPandas over
-`spark.read.format("binaryFile")` — one task per file, no driver
-bottleneck; a 100 TB corpus of observations parallelizes by file. The
-decoded header travels as one JSON string per file (a few KB), not as
-per-row columns.
+Scale design: one row decode (decode_sdfits) serves both Spark
+readers, executor-side and one task per file — read_sdfits inside
+mapInPandas over `spark.read.format("binaryFile")`, read_sdfits_stream
+in a Python stream source that plans one partition per new file — so
+there is no driver bottleneck and a 100 TB corpus of observations
+parallelizes by file. Both give a file the same rows, path, obs_id and
+corruption verdict. The decoded header travels as one JSON string per
+file (a few KB), not as per-row columns.
 """
 
 from __future__ import annotations
@@ -31,6 +34,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceStreamReader,
+    InputPartition,
+)
 
 BLOCK = 2880
 CARD = 80
@@ -493,8 +501,8 @@ def corrupt_drop_end(buf: bytes) -> bytes:
 
 def observation_struct_fields():
     """The canonical observation columns (SURVEY.md §1.4) as Spark
-    StructFields — the single source of truth shared by read_sdfits
-    and the 'sdfits' DataSource so the two readers cannot drift."""
+    StructFields — the single source of truth for the decoded schema
+    that read_sdfits and read_sdfits_stream both emit."""
     from pyspark.sql import types as T
     return [
         T.StructField("DATE_OBS", T.StringType()),
@@ -513,6 +521,68 @@ def observation_struct_fields():
         T.StructField("DURATION", T.DoubleType()),
         T.StructField("EXPOSURE", T.DoubleType()),
     ]
+
+
+def _decoded_schema():
+    """decode_sdfits's frame as a Spark schema (before obs_id)."""
+    from pyspark.sql import types as T
+    return T.StructType([
+        T.StructField("path", T.StringType()),
+        T.StructField("corrupt_error", T.StringType()),
+        T.StructField("row_idx", T.LongType()),
+        *observation_struct_fields(),
+    ])
+
+
+_INT32_COLS = ("IFNUM", "PLNUM", "CALSTATE", "SWPVALID")
+
+
+def decode_sdfits(path: str, content: bytes,
+                  permissive: bool) -> pd.DataFrame:
+    """The package's one SDFITS row decode (S1 + S2), shared by the
+    batch scan and the stream: one file's bytes -> one frame in
+    _decoded_schema, one row per table row (row_idx 0..n-1).
+
+    A file that fails to decode raises in failfast mode; in permissive
+    mode it becomes ONE tombstone row (row_idx = -1, corrupt_error =
+    the codec's message, observation columns null). Any exception
+    counts — damaged cards raise KeyError/ValueError/UnicodeDecodeError
+    from deep in the codec, not just FitsFormatError — and so does the
+    column coercion: a structurally valid file whose CALSTATE holds
+    NaN/strings must quarantine, not kill the corpus scan."""
+    names = [f.name for f in observation_struct_fields()]
+    try:
+        t = parse_sdfits(content).table
+        out = pd.DataFrame({
+            "path": path,
+            "corrupt_error": None,
+            "row_idx": np.arange(len(t), dtype=np.int64),
+        })
+        for name in names:
+            if name not in t.columns:
+                out[name] = None
+            elif name in _INT32_COLS:
+                out[name] = t[name].astype("int32")
+            else:
+                out[name] = t[name]
+        return out
+    except Exception as exc:
+        if not permissive:
+            raise
+        tomb = pd.DataFrame({
+            "path": [path],
+            "corrupt_error": [str(exc)],
+            "row_idx": np.array([-1], dtype=np.int64),
+        })
+        for name in names:
+            tomb[name] = None
+        return tomb
+
+
+def _is_permissive(mode: str) -> bool:
+    if mode.lower() not in ("failfast", "permissive"):
+        raise ValueError(f"unknown mode {mode!r}")
+    return mode.lower() == "permissive"
 
 
 def _zero_length_files(spark, path_glob: str) -> list[str]:
@@ -543,9 +613,8 @@ def _zero_length_files(spark, path_glob: str) -> list[str]:
 
 
 def _empty_file_verdict() -> str:
-    """The codec's own FitsFormatError message for b'' — the
-    tombstone for a zero-length file carries the exact verdict
-    parse_sdfits would have produced had the scan delivered it."""
+    """The codec's own FitsFormatError message for b'' — the verdict
+    a zero-length file gets in every reader."""
     try:
         parse_sdfits(b"")
     except FitsFormatError as exc:
@@ -554,17 +623,22 @@ def _empty_file_verdict() -> str:
         "parse_sdfits accepted a zero-length file")  # pragma: no cover
 
 
-def read_sdfits(spark, path_glob: str, dense_ids: bool = False,
-                mode: str = "failfast"):
-    """S1 as a distributed scan: binaryFile -> executor-side decode.
-    Returns a DataFrame in the canonical observation schema plus
-    (path, obs_id). obs_id defaults to xxhash64(path) — computed
-    map-side with no shuffle, so a corpus of millions of files never
-    funnels through one task; dense_ids=True instead assigns 0..n-1
-    by path via sources/layout.dense_index (two-pass partition-offset
-    build: sort parallelism = #buckets, never a single-partition
-    window, so dense ids stay safe even on a multi-million-file
-    corpus).
+def _zero_length_error(empty_paths: list[str]) -> FitsFormatError:
+    """The failfast error for 0-byte files in a batch scan, raised at
+    planning time exactly as a decode failure would be at run time."""
+    return FitsFormatError(
+        f"zero-length file(s) in scan: {empty_paths[:3]}"
+        f"{'...' if len(empty_paths) > 3 else ''} "
+        f"({len(empty_paths)} total) — {_empty_file_verdict()}")
+
+
+def read_sdfits(spark, path_glob: str, mode: str = "failfast"):
+    """S1 as a distributed scan: binaryFile -> decode_sdfits in
+    mapInPandas, one task per file. Returns a DataFrame in the
+    canonical observation schema plus (path, corrupt_error, row_idx,
+    obs_id). obs_id = xxhash64(path) — computed map-side with no
+    shuffle, so a corpus of millions of files never funnels through
+    one task.
 
     mode='failfast' (default): structural corruption (S2) fails the
     decoding task, matching the reference's verify('exception') hard
@@ -573,103 +647,144 @@ def read_sdfits(spark, path_glob: str, dense_ids: bool = False,
     corpus scan survives bad files and the quarantine list is
     `df.filter("row_idx = -1")`."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    files = spark.read.format("binaryFile").load(path_glob)
-
-    if mode.lower() not in ("failfast", "permissive"):
-        raise ValueError(f"unknown mode {mode!r}")
-    permissive = mode.lower() == "permissive"
+    permissive = _is_permissive(mode)
+    files = spark.read.format("binaryFile").load(path_glob) \
+        .select("path", "content")
 
     # zero-length files never reach the decode task (the scan plans no
     # splits for them — see _zero_length_files): failfast raises at
-    # planning time exactly as a decode failure would at run time;
-    # permissive unions one tombstone per empty file below
+    # planning time; permissive feeds them to the decode as b'' so
+    # each becomes the same tombstone a corrupt file gets
     empty_paths = _zero_length_files(spark, path_glob)
     if empty_paths and not permissive:
-        raise FitsFormatError(
-            f"zero-length file(s) in scan: {empty_paths[:3]}"
-            f"{'...' if len(empty_paths) > 3 else ''} "
-            f"({len(empty_paths)} total) — {_empty_file_verdict()}")
-
-    out_schema = T.StructType([
-        T.StructField("path", T.StringType()),
-        T.StructField("corrupt_error", T.StringType()),
-        T.StructField("row_idx", T.LongType()),
-        *observation_struct_fields(),
-    ])
-    names = [f.name for f in out_schema.fields[3:]]
+        raise _zero_length_error(empty_paths)
+    if empty_paths:
+        files = files.unionByName(spark.createDataFrame(
+            [(p, bytearray()) for p in empty_paths], files.schema))
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                try:
-                    obs = parse_sdfits(bytes(row["content"]))
-                # permissive quarantine must survive ANY decode
-                # failure (damaged cards raise KeyError/ValueError/
-                # UnicodeDecodeError from deep in the codec, not just
-                # FitsFormatError)
-                except Exception as exc:
-                    if not permissive:
-                        raise
-                    tomb = pd.DataFrame({
-                        "path": [row["path"]],
-                        "corrupt_error": [str(exc)],
-                        "row_idx": np.array([-1], dtype=np.int64),
-                    })
-                    for name in names:
-                        tomb[name] = None
-                    yield tomb
-                    continue
-                try:
-                    t = obs.table
-                    out = pd.DataFrame({
-                        "path": row["path"],
-                        "corrupt_error": None,
-                        "row_idx": np.arange(len(t), dtype=np.int64),
-                    })
-                    for name in names:
-                        if name in t.columns:
-                            col = t[name]
-                            if name in ("IFNUM", "PLNUM", "CALSTATE",
-                                        "SWPVALID"):
-                                col = col.astype("int32")
-                            out[name] = col
-                        else:
-                            out[name] = None
-                # the coercion loop is part of the decode for the
-                # permissive contract: a structurally valid file whose
-                # CALSTATE column holds NaN/strings must quarantine,
-                # not kill the corpus scan
-                except Exception as exc:
-                    if not permissive:
-                        raise
-                    out = pd.DataFrame({
-                        "path": [row["path"]],
-                        "corrupt_error": [str(exc)],
-                        "row_idx": np.array([-1], dtype=np.int64),
-                    })
-                    for name in names:
-                        out[name] = None
-                yield out
+            for path, content in zip(pdf["path"], pdf["content"]):
+                yield decode_sdfits(path, bytes(content), permissive)
 
-    decoded = files.select("path", "content").mapInPandas(
-        decode, schema=out_schema)
-    paths_for_ids = files.select("path")
-    if empty_paths:
-        verdict = _empty_file_verdict()
-        tomb = spark.createDataFrame(
-            [(p, verdict, -1) + (None,) * len(names)
-             for p in empty_paths], out_schema)
-        decoded = decoded.unionByName(tomb)
-        paths_for_ids = paths_for_ids.unionByName(
-            tomb.select("path"))
-    if not dense_ids:
-        return decoded.withColumn("obs_id", F.xxhash64("path"))
-    from radio_data_pipeline_spark.sources.layout import dense_index
-    ids = dense_index(paths_for_ids.distinct(), "path",
-                      pos_col="obs_id")
-    return decoded.join(F.broadcast(ids), "path")
+    return files.mapInPandas(decode, schema=_decoded_schema()) \
+        .withColumn("obs_id", F.xxhash64("path"))
+
+
+class _SdfitsStreamReader(DataSourceStreamReader):
+    """Streaming SDFITS ingest: each micro-batch picks up observation
+    files that appeared under the glob since the last offset. Offsets
+    are planned on the driver from a listing (metadata only); each new
+    file is one partition, read and decoded on an executor.
+
+    Offset = modification-time watermark + frontier set, NOT the full
+    consumed-path history, so its size is bounded by the files inside
+    one grace window regardless of corpus size (pinned by
+    tests/test_fits.py):
+
+    - ``wm_floor``: every file with mtime strictly below this is
+      consumed;
+    - ``recent``: the consumed files with mtime >= wm_floor (the
+      frontier — new files can still land inside the grace window with
+      interleaving mtimes, e.g. clock skew between writers).
+
+    consumed(offset) = {mtime < wm_floor} ∪ recent, so
+    ``partitions(start, end)`` is exactly consumed(end) −
+    consumed(start) from the listing — deterministic on replay because
+    obs_id is a pure path hash and files are immutable once they
+    appear (the append-only contract every file stream source
+    assumes).
+
+    Paths are driver/executor-visible filesystem globs (local or
+    shared mounts); the decoded ``path`` is the ``file:`` URI that
+    binaryFile gives, so ids match read_sdfits."""
+
+    #: files whose mtime is within this many seconds of the newest
+    #: mtime stay in the frontier set — tolerance for writers whose
+    #: clocks lag the newest file
+    GRACE_S = 5.0
+
+    def __init__(self, path_glob: str, permissive: bool):
+        self._glob = path_glob
+        self._permissive = permissive
+
+    def _list(self) -> list[tuple[str, float]]:
+        import glob
+        import os
+
+        out = []
+        for p in sorted(glob.glob(self._glob)):
+            try:
+                out.append((p, os.stat(p).st_mtime))
+            except OSError:
+                continue  # listed-then-vanished race
+        return out
+
+    @staticmethod
+    def _consumed(offset: dict, path: str, mtime: float) -> bool:
+        return mtime < offset["wm_floor"] or path in set(offset["recent"])
+
+    def initialOffset(self) -> dict:
+        return {"wm_floor": -1.0, "recent": []}
+
+    def latestOffset(self) -> dict:
+        files = self._list()
+        if not files:
+            return self.initialOffset()
+        floor = max(mt for _, mt in files) - self.GRACE_S
+        return {"wm_floor": floor,
+                "recent": sorted(p for p, mt in files if mt >= floor)}
+
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        return [InputPartition(p) for p, mt in self._list()
+                if self._consumed(end, p, mt)
+                and not self._consumed(start, p, mt)]
+
+    def read(self, partition: InputPartition):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        with open(partition.value, "rb") as fh:
+            content = fh.read()
+        frame = decode_sdfits("file:" + partition.value, content,
+                              self._permissive)
+        yield pa.RecordBatch.from_pandas(
+            frame, schema=to_arrow_schema(_decoded_schema()),
+            preserve_index=False)
+
+
+class _SdfitsStreamSource(DataSource):
+    @classmethod
+    def name(cls) -> str:
+        return "sdfits"
+
+    def schema(self):
+        return _decoded_schema()
+
+    def streamReader(self, schema) -> _SdfitsStreamReader:
+        return _SdfitsStreamReader(
+            self.options["path"], _is_permissive(self.options["mode"]))
+
+
+def read_sdfits_stream(spark, path_glob: str, mode: str = "failfast"):
+    """read_sdfits as a stream: every file that appears under the glob
+    is decoded once, on an executor, by the same decode_sdfits, into
+    the same columns (path, corrupt_error, row_idx, observation
+    columns, obs_id = xxhash64(path)). A file therefore gets the same
+    rows, ids and corruption verdict from either reader; a 0-byte file
+    reaches the decode as b'' and is tombstoned (permissive) or fails
+    the query (failfast) like any other corrupt file."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    _is_permissive(mode)
+    spark.dataSource.register(_SdfitsStreamSource)
+    # absolute, so "file:" + path is the URI binaryFile gives
+    return (spark.readStream.format("sdfits").option("mode", mode)
+            .load(os.path.abspath(path_glob))
+            .withColumn("obs_id", F.xxhash64("path")))
 
 
 def read_sdfits_headers(spark, path_glob: str):
@@ -682,10 +797,7 @@ def read_sdfits_headers(spark, path_glob: str):
     # silently omit an empty file instead of failing on it
     empty_paths = _zero_length_files(spark, path_glob)
     if empty_paths:
-        raise FitsFormatError(
-            f"zero-length file(s) in scan: {empty_paths[:3]}"
-            f"{'...' if len(empty_paths) > 3 else ''} "
-            f"({len(empty_paths)} total) — {_empty_file_verdict()}")
+        raise _zero_length_error(empty_paths)
 
     files = spark.read.format("binaryFile").load(path_glob)
     schema = T.StructType([

@@ -2,8 +2,8 @@
 reference, provided Spark-natively): watermarked event-time windows,
 event dedup, stream-stream joins and exactly-once sinks over the
 events table. The SDFITS reduction is file-to-file and has no
-streaming form here; the streaming SDFITS reader is
-`sources/fits_datasource.py`."""
+streaming form here; SDFITS files stream whole through
+`sources.fits.read_sdfits_stream`."""
 
 from radio_data_pipeline_spark.streaming.events import (
     EVENTS_RAW_SCHEMA,

@@ -1,7 +1,8 @@
 """SDFITS codec + Spark source tests (reference S1/S2/S3/O22 parity):
-pure-numpy round-trip, structural verify, corruption injection, and
-the binaryFile -> mapInPandas distributed scan feeding the
-segmentation operator.
+pure-numpy round-trip, structural verify, corruption injection, the
+binaryFile -> mapInPandas distributed scan feeding the segmentation
+operator, and the file stream, which must give the same rows, ids and
+corruption verdicts as the batch scan.
 """
 
 from __future__ import annotations
@@ -13,11 +14,13 @@ import pytest
 from radio_data_pipeline_spark.sources.fits import (
     BLOCK,
     FitsFormatError,
+    _SdfitsStreamReader,
     corrupt_drop_end,
     parse_header,
     parse_sdfits,
     read_sdfits,
     read_sdfits_headers,
+    read_sdfits_stream,
     write_sdfits,
 )
 from radio_data_pipeline_spark.sources.synthetic import (
@@ -79,14 +82,18 @@ def test_truncated_data_is_caught():
 
 
 def test_read_sdfits_spark_source(spark, tmp_path):
-    # three observation files -> one distributed scan with dense obs_id
+    # three observation files -> one distributed scan, one obs_id each
+    n_rows = 0
     for i, kw in enumerate([{}, {"false_start": True}, {"pre_cal": False}]):
         pdf = _obs_pdf(n_science=16, **kw)
+        n_rows += len(pdf)
         (tmp_path / f"obs{i}.fits").write_bytes(
             write_sdfits(pdf, HEADER, HISTORY))
-    df = read_sdfits(spark, str(tmp_path / "*.fits"), dense_ids=True)
+    df = read_sdfits(spark, str(tmp_path / "*.fits"))
+    assert df.count() == n_rows
     assert df.select("obs_id").distinct().count() == 3
-    first = df.filter("obs_id = 0 AND row_idx = 0").collect()[0]
+    first = df.filter("path LIKE '%/obs0.fits' AND row_idx = 0") \
+        .collect()[0]
     assert first["CALSTATE"] == 1 and len(first["DATA"]) == 64
 
     # headers travel as per-file JSON
@@ -208,27 +215,6 @@ def test_reduce_sdfits_runs_in_few_spark_jobs(spark, tmp_path):
     assert len(jobs) <= 8, f"{len(jobs)} Spark jobs for one file"
 
 
-def test_sdfits_datasource_format(spark, tmp_path):
-    # the Spark-4 Python DataSource: spark.read.format("sdfits")
-    from radio_data_pipeline_spark.sources.fits_datasource import (
-        register_sdfits,
-    )
-    for i in range(2):
-        pdf = _obs_pdf(n_science=12)
-        (tmp_path / f"ds{i}.fits").write_bytes(
-            write_sdfits(pdf, HEADER, HISTORY))
-    register_sdfits(spark)
-    df = (spark.read.format("sdfits")
-          .load(str(tmp_path / "ds*.fits")))
-    assert df.count() == 2 * len(pdf)
-    assert df.select("obs_id").distinct().count() == 2
-    row = df.filter("obs_id = 1 AND row_idx = 0").collect()[0]
-    assert row["CALSTATE"] == 1 and len(row["DATA"]) == 64
-    # column pruning + filters work through the python source
-    n_cal = df.filter("CALSTATE = 1").select("row_idx").count()
-    assert n_cal == 2 * 2 * 8  # two files x (pre+post) x n_cal rows
-
-
 def test_logical_column_decodes_ascii_tf():
     # FITS logicals are 'T'/'F' bytes; 'F' (0x46, nonzero) must be False
     from radio_data_pipeline_spark.sources.fits import (
@@ -270,58 +256,57 @@ def test_headers_only_parse_matches_full():
         parse_sdfits_headers_only(corrupt_drop_end(buf))
 
 
+def _drain_stream(spark, glob: str, cp: str, mode: str = "failfast",
+                  ) -> list:
+    """Run one availableNow query over the stream; return its rows."""
+    rows: list = []
+    q = (read_sdfits_stream(spark, glob, mode=mode).writeStream
+         .foreachBatch(lambda batch_df, _id: rows.extend(batch_df.collect()))
+         .option("checkpointLocation", cp)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return rows
+
+
+def _sorted_rows(rows) -> list:
+    return sorted((tuple(r) for r in rows), key=lambda t: (t[0], t[2]))
+
+
 def test_sdfits_streaming_source(spark, tmp_path):
     # streaming SDFITS ingest: new files become micro-batches; offsets
-    # survive a restart via the checkpoint
-    from radio_data_pipeline_spark.sources.fits_datasource import (
-        register_sdfits,
-    )
-    register_sdfits(spark)
+    # survive a restart via the checkpoint, and every row (path and
+    # obs_id included) equals the batch scan's
     src = tmp_path / "stream"
     src.mkdir()
     cp = str(tmp_path / "cp")
     sizes = []
-    collected: list = []
-
-    def drain() -> None:
-        stream = (spark.readStream.format("sdfits")
-                  .load(str(src / "*.fits")))
-
-        def sink(batch_df, batch_id):
-            collected.extend(batch_df.collect())
-
-        q = (stream.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", cp)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
     for i in range(2):
         pdf = _obs_pdf(n_science=10)
         sizes.append(len(pdf))
         (src / f"s{i}.fits").write_bytes(write_sdfits(pdf, HEADER, HISTORY))
-    drain()
+    collected = _drain_stream(spark, str(src / "*.fits"), cp)
     assert len(collected) == sum(sizes)
 
     # a third file appears; the restarted query reads ONLY it
     pdf = _obs_pdf(n_science=6)
     (src / "s2.fits").write_bytes(write_sdfits(pdf, HEADER, HISTORY))
-    before = len(collected)
-    drain()
-    assert len(collected) - before == len(pdf)
-    assert len({r["path"] for r in collected}) == 3
+    second = _drain_stream(spark, str(src / "*.fits"), cp)
+    assert len(second) == len(pdf)
+    assert {r["path"] for r in second} == {f"file:{src / 's2.fits'}"}
+
+    batch = read_sdfits(spark, str(src / "*.fits"))
+    assert collected[0].__fields__ == batch.columns
+    assert _sorted_rows(collected + second) == \
+        _sorted_rows(batch.collect())
 
 
 def test_sdfits_stream_fails_on_zero_length_file(spark, tmp_path):
-    # The streaming reader opens every listed file itself, so a 0-byte
-    # file reaches the codec and fails the query with the codec's own
-    # verdict; it is not silently skipped (a plain binaryFile stream
-    # plans no split for it, the gap read_sdfits guards in batch).
+    # The stream opens every listed file itself, so a 0-byte file
+    # reaches the codec and, in failfast mode, fails the query with
+    # the codec's own verdict; it is not silently skipped (a plain
+    # binaryFile stream plans no split for it).
     from pyspark.errors import StreamingQueryException
 
-    from radio_data_pipeline_spark.sources.fits_datasource import (
-        register_sdfits,
-    )
-    register_sdfits(spark)
     src = tmp_path / "stream"
     src.mkdir()
     (src / "good.fits").write_bytes(
@@ -330,14 +315,38 @@ def test_sdfits_stream_fails_on_zero_length_file(spark, tmp_path):
     with pytest.raises(FitsFormatError) as verdict:
         parse_sdfits(b"")
 
-    q = (spark.readStream.format("sdfits").load(str(src / "*.fits"))
-         .writeStream.format("noop")
-         .option("checkpointLocation", str(tmp_path / "cp"))
-         .trigger(availableNow=True).start())
     with pytest.raises(StreamingQueryException) as failed:
-        q.awaitTermination()
+        _drain_stream(spark, str(src / "*.fits"), str(tmp_path / "cp"))
     assert "FitsFormatError" in str(failed.value)
     assert str(verdict.value) in str(failed.value)
+
+
+def test_sdfits_stream_permissive_tombstones_corrupt_files(spark, tmp_path):
+    # permissive stream: a 0-byte file and an END-less file are one
+    # tombstone each, carrying the codec's verdict; the good file
+    # decodes all its rows
+    src = tmp_path / "stream"
+    src.mkdir()
+    good = write_sdfits(_obs_pdf(n_science=8), HEADER, HISTORY)
+    (src / "good.fits").write_bytes(good)
+    (src / "empty.fits").write_bytes(b"")
+    (src / "no_end.fits").write_bytes(corrupt_drop_end(good))
+    verdicts = {}
+    for name, buf in [("empty.fits", b""),
+                      ("no_end.fits", corrupt_drop_end(good))]:
+        with pytest.raises(FitsFormatError) as exc:
+            parse_sdfits(buf)
+        verdicts[f"file:{src / name}"] = str(exc.value)
+
+    rows = _drain_stream(spark, str(src / "*.fits"), str(tmp_path / "cp"),
+                         mode="permissive")
+    tombs = [r for r in rows if r["row_idx"] == -1]
+    assert {r["path"]: r["corrupt_error"] for r in tombs} == verdicts
+    assert len(tombs) == 2
+    data = [r for r in rows if r["row_idx"] >= 0]
+    assert {r["path"] for r in data} == {f"file:{src / 'good.fits'}"}
+    assert sorted(r["row_idx"] for r in data) == \
+        list(range(len(parse_sdfits(good).table)))
 
 
 def test_sdfits_stream_offset_stays_flat(tmp_path):
@@ -346,15 +355,10 @@ def test_sdfits_stream_offset_stays_flat(tmp_path):
     import json
     import os
 
-    from radio_data_pipeline_spark.sources.fits_datasource import (
-        SdfitsStreamReader,
-        _path_obs_id,
-    )
-
     src = tmp_path / "flat"
     src.mkdir()
-    reader = SdfitsStreamReader({"path": str(src / "*.fits"),
-                                 "watermark_grace_s": "5"})
+    reader = _SdfitsStreamReader(str(src / "*.fits"), permissive=False)
+    assert reader.GRACE_S == 5.0
     buf = write_sdfits(_obs_pdf(n_science=3), HEADER, HISTORY)
 
     def add(i: int, mtime: float) -> str:
@@ -362,6 +366,10 @@ def test_sdfits_stream_offset_stays_flat(tmp_path):
         p.write_bytes(buf)
         os.utime(p, (mtime, mtime))
         return str(p)
+
+    def advance(offset: dict) -> tuple[set, dict]:
+        end = reader.latestOffset()
+        return {p.value for p in reader.partitions(offset, end)}, end
 
     offset = reader.initialOffset()
     sizes = []
@@ -371,9 +379,7 @@ def test_sdfits_stream_offset_stays_flat(tmp_path):
         # each batch adds 20 files well past the previous grace window
         for i in range(20):
             add(batch * 20 + i, t0 + batch * 100.0 + i)
-        rows, offset = reader.read(offset)
-        rows = list(rows)
-        paths = {r[0] for r in rows}
+        paths, offset = advance(offset)
         assert len(paths) == 20, "each file consumed exactly once"
         assert not (paths & seen_paths), "no re-reads"
         seen_paths |= paths
@@ -384,31 +390,29 @@ def test_sdfits_stream_offset_stays_flat(tmp_path):
     # late file INSIDE the grace window of the current watermark is
     # still picked up (the frontier's reason to exist)
     late = add(999, t0 + 2 * 100.0 + 19 - 1.0)
-    rows, offset = reader.read(offset)
-    assert {r[0] for r in rows} == {late}
+    paths, offset = advance(offset)
+    assert paths == {late}
 
-    # empty re-read: no rows, offset unchanged
-    rows, offset2 = reader.read(offset)
-    assert list(rows) == [] and offset2 == offset
+    # empty re-read: no partitions, offset unchanged
+    paths, offset2 = advance(offset)
+    assert paths == set() and offset2 == offset
 
-    # obs_id is a pure path function: stable with no history
-    assert all(r[1] == _path_obs_id(r[0]) for r in
-               reader.readBetweenOffsets(reader.initialOffset(), offset))
+    # replay needs no history: the slice from the initial offset is
+    # every file exactly once (ids are xxhash64(path), pinned equal to
+    # the batch scan's in test_sdfits_streaming_source)
+    replay = [p.value for p in
+              reader.partitions(reader.initialOffset(), offset)]
+    assert sorted(replay) == sorted(seen_paths | {late})
 
 
 def test_sdfits_stream_replay_between_offsets(tmp_path):
-    # readBetweenOffsets must reproduce exactly the slice between two
-    # checkpoints from the watermark algebra alone
+    # partitions(start, end) must reproduce exactly the slice between
+    # two checkpoints from the watermark algebra alone
     import os
-
-    from radio_data_pipeline_spark.sources.fits_datasource import (
-        SdfitsStreamReader,
-    )
 
     src = tmp_path / "replay"
     src.mkdir()
-    reader = SdfitsStreamReader({"path": str(src / "*.fits"),
-                                 "watermark_grace_s": "2"})
+    reader = _SdfitsStreamReader(str(src / "*.fits"), permissive=False)
     buf = write_sdfits(_obs_pdf(n_science=2), HEADER, HISTORY)
 
     def add(name: str, mtime: float) -> str:
@@ -417,17 +421,18 @@ def test_sdfits_stream_replay_between_offsets(tmp_path):
         os.utime(p, (mtime, mtime))
         return str(p)
 
+    def between(start: dict, end: dict) -> set:
+        return {p.value for p in reader.partitions(start, end)}
+
     o0 = reader.initialOffset()
     add("a.fits", 100.0)
     add("b.fits", 101.0)
-    _, o1 = reader.read(o0)
+    o1 = reader.latestOffset()
     c = add("c.fits", 200.0)
     d = add("d.fits", 200.5)
-    _, o2 = reader.read(o1)
-    replayed = {r[0] for r in reader.readBetweenOffsets(o1, o2)}
-    assert replayed == {c, d}
-    assert {r[0] for r in reader.readBetweenOffsets(o0, o1)} == \
-        {str(src / "a.fits"), str(src / "b.fits")}
+    o2 = reader.latestOffset()
+    assert between(o1, o2) == {c, d}
+    assert between(o0, o1) == {str(src / "a.fits"), str(src / "b.fits")}
 
 
 def test_permissive_mode_quarantines_corrupt_files(spark, tmp_path):
@@ -711,7 +716,7 @@ def test_zero_length_file_tombstoned_not_lost(spark, tmp_path):
     quarantine contract it dodges. Permissive must emit exactly one
     tombstone carrying the codec's own b'' verdict; failfast must
     raise at planning time; the header scan (failfast-only) must
-    raise too; dense_ids must still cover the tombstoned path."""
+    raise too."""
     good = write_sdfits(_obs_pdf(n_science=8), HEADER, HISTORY)
     (tmp_path / "good.fits").write_bytes(good)
     (tmp_path / "empty.fits").write_bytes(b"")
@@ -734,14 +739,6 @@ def test_zero_length_file_tombstoned_not_lost(spark, tmp_path):
                     mode="failfast").collect()
     with pytest.raises(FitsFormatError, match="zero-length"):
         read_sdfits_headers(spark, str(tmp_path / "*.fits")).collect()
-
-    # dense_ids: the tombstoned path participates in the 0..n-1 space
-    dense = read_sdfits(spark, str(tmp_path / "*.fits"),
-                        dense_ids=True, mode="permissive")
-    ids = {r["path"].rsplit("/", 1)[-1]: r["obs_id"]
-           for r in dense.select("path", "obs_id").distinct().collect()}
-    assert set(ids) == {"good.fits", "empty.fits"}
-    assert sorted(ids.values()) == [0, 1]
 
 
 def test_permissive_scan_fuzz_decode_or_one_tombstone(spark, tmp_path):
