@@ -22,7 +22,6 @@ from radio_data_pipeline_spark.operators.segmentation import (  # noqa: F401
     label_segments,
 )
 from radio_data_pipeline_spark.operators.calibration import (  # noqa: F401
-    ols_fit,
     rcr_fit_segments,
     calibration_height,
     apply_gain_calibration,

@@ -1,10 +1,13 @@
 """Atmosphere correction — reference atmosphere_correction.py
 (SURVEY.md §2.5 M8-M10).
 
-Pipeline: per-row weather -> water-vapor density (Buck equation, pure
-column math) -> ITU-R P.676 gaseous attenuation over the frequency
-axis (vectorized pandas UDF) -> element-wise gain application via
-zip_with. Everything is per-row independent, so the whole stage is
+Pipeline: per-row weather -> water-vapor density (Buck equation) ->
+ITU-R P.676 gaseous attenuation over the frequency axis -> element-wise
+division via zip_with. A pandas UDF computes the density and the
+rows x channels transmission of each Arrow batch as NumPy broadcasts
+(weather as column vectors against the frequency axis).
+``buck_vapor_density_expr`` is the same Buck equation as a column
+expression. Everything is per-row independent, so the whole stage is
 shuffle-free and scales embarrassingly.
 
 The reference calls the `itur` library (atmosphere_correction.py:47-57);
@@ -20,9 +23,7 @@ installed, test_optional_extras compares the kernel against it.
 
 from __future__ import annotations
 
-import math
-from typing import Iterator
-
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -67,10 +68,9 @@ def p676_gamma_oxygen(f_ghz, pressure_hpa: float, temp_k: float):
     the recommendation's corrections: quadratic pressure dependence
     (collision broadening) and -1.0 %/degC temperature coefficient.
 
-    Vectorized over ``f_ghz`` (numpy array or scalar).
+    Vectorized over ``f_ghz`` (numpy array or scalar); the weather
+    arguments broadcast against it.
     """
-    import numpy as np
-
     f = np.asarray(f_ghz, dtype=float)
     # f < 57 GHz branch
     lo = (7.19e-3 + 6.09 / (f ** 2 + 0.227)
@@ -99,15 +99,13 @@ def p676_gamma_water(f_ghz, rho: float, temp_k: float):
     325.15 GHz line terms over an f^2 * rho envelope, with the
     recommendation's -0.6 %/degC temperature correction.
     ``rho`` is water-vapour density [g/m^3]."""
-    import numpy as np
-
     f = np.asarray(f_ghz, dtype=float)
     gamma = (0.050 + 0.0021 * rho
              + 3.6 / ((f - 22.2) ** 2 + 8.5)
              + 10.6 / ((f - 183.3) ** 2 + 9.0)
              + 8.9 / ((f - 325.4) ** 2 + 26.3)) * f ** 2 * rho * 1e-4
     t_c = temp_k - 273.15
-    return gamma * max(1.0 - 0.006 * (t_c - 15.0), 0.0)
+    return gamma * np.maximum(1.0 - 0.006 * (t_c - 15.0), 0.0)
 
 
 def p676_equivalent_heights(f_ghz):
@@ -115,8 +113,6 @@ def p676_equivalent_heights(f_ghz):
     the same simplified algorithm: constant 6 km dry height below the
     oxygen complex, water height 1.6 km (clear air) with resonant
     enhancements at the three vapour lines."""
-    import numpy as np
-
     f = np.asarray(f_ghz, dtype=float)
     h_o = np.full_like(f, 6.0)
     h_w = 1.6 * (1.0 + 3.0 / ((f - 22.2) ** 2 + 5.0)
@@ -125,61 +121,55 @@ def p676_equivalent_heights(f_ghz):
     return h_o, h_w
 
 
-def p676_slant_attenuation(f_ghz, elev_deg: float, rho: float,
-                           pressure_hpa: float, temp_k: float):
+def p676_slant_attenuation(f_ghz, elev_deg, rho, pressure_hpa, temp_k):
     """Total slant-path gaseous attenuation [dB] by the cosecant law
     (elevation clamped to 5 deg, below which the flat-atmosphere
     cosecant model is invalid): A = (gamma_o*h_o + gamma_w*h_w) /
     sin(elev). This is the published approximation the reference
     reaches through `itur`'s mode='approx' path
-    (atmosphere_correction.py:55)."""
-    import numpy as np
-
+    (atmosphere_correction.py:55). The weather arguments are scalars,
+    or (rows, 1) columns that give a rows x channels result."""
     h_o, h_w = p676_equivalent_heights(f_ghz)
     zenith = (p676_gamma_oxygen(f_ghz, pressure_hpa, temp_k) * h_o
               + p676_gamma_water(f_ghz, rho, temp_k) * h_w)
-    airmass = 1.0 / max(math.sin(math.radians(max(elev_deg, 5.0))), 1e-6)
-    return np.asarray(zenith) * airmass
+    airmass = 1.0 / np.maximum(np.sin(np.radians(np.maximum(elev_deg, 5.0))),
+                               1e-6)
+    return zenith * airmass
 
 
 def transmission_udf(frequencies_ghz: list[float]):
     """Build a pandas UDF computing the per-row atmospheric
-    transmission vector 10^(-A/10) over the (broadcast) frequency axis
-    — reference M9 (atmosphere_correction.py:47-57).
+    transmission vector 10^(-A/10) over the frequency axis — reference
+    M9 (atmosphere_correction.py:47-57).
 
-    mapInPandas/pandas_udf keeps this Arrow-batched; the frequency
-    axis is a closure constant (it is header metadata, identical for
-    every row of an observation stream)."""
-    import numpy as np
-
+    Each Arrow batch is one p676_slant_attenuation call: the batch's
+    weather enters as (rows, 1) columns and the frequency axis (header
+    metadata, a closure constant) as (channels,), so the result is the
+    rows x channels transmission with no per-row Python loop."""
     freqs_arr = np.asarray(frequencies_ghz, dtype=float)
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def _transmission(elev_deg: pd.Series, tambient_c: pd.Series,
                       pressure_hpa: pd.Series, humidity_pct: pd.Series,
                       ) -> pd.Series:
-        out = []
-        for elev, t_c, p, h in zip(elev_deg, tambient_c, pressure_hpa,
-                                   humidity_pct):
-            t_k = t_c + 273.15
-            # reference's Buck-1981 coefficients (see
-            # buck_vapor_density_expr); above-freezing branch only —
-            # per-row weather here comes from validated telemetry
-            e_s = (1.0007 + 3.46e-6) * 6.1121 * math.exp(
-                17.502 * t_c / (t_c + 240.97))
-            rho = 216.7 * ((h / 100.0) * e_s) / t_k
-            # published P.676 simplified algorithm, numpy-vectorized
-            # over the channel axis (per-row weather scalars,
-            # per-observation frequency vector)
-            att = p676_slant_attenuation(freqs_arr, elev, rho, p, t_k)
-            out.append((10.0 ** (-att / 10.0)).tolist())
-        return pd.Series(out)
+        elev, t_c, p, h = (s.to_numpy(dtype=float)[:, None] for s in
+                           (elev_deg, tambient_c, pressure_hpa,
+                            humidity_pct))
+        t_k = t_c + 273.15
+        # reference's Buck-1981 coefficients (see
+        # buck_vapor_density_expr); above-freezing branch only, because
+        # validation drops rows with a negative TAMBIENT
+        e_s = (1.0007 + 3.46e-6) * 6.1121 * np.exp(
+            17.502 * t_c / (t_c + 240.97))
+        rho = 216.7 * ((h / 100.0) * e_s) / t_k
+        att = p676_slant_attenuation(freqs_arr, elev, rho, p, t_k)
+        return pd.Series(list(10.0 ** (-att / 10.0)))
 
     return _transmission
 
 
-def apply_atmosphere_correction(df: DataFrame, frequencies_mhz: list[float],
-                                data_col: str = "DATA") -> DataFrame:
+def apply_atmosphere_correction(df: DataFrame,
+                                frequencies_mhz: list[float]) -> DataFrame:
     """Reference M10 (atmosphere_correction.py:59-86): DATA /=
     transmission element-wise, per-row weather. Frequencies arrive in
     MHz and are converted to GHz exactly as the reference does
@@ -191,8 +181,8 @@ def apply_atmosphere_correction(df: DataFrame, frequencies_mhz: list[float],
             F.col("HUMIDITY")),
     )
     corrected = with_t.withColumn(
-        data_col,
-        F.zip_with(F.col(data_col), F.col("_transmission"),
+        "DATA",
+        F.zip_with(F.col("DATA"), F.col("_transmission"),
                    lambda d, t: d / t),
     )
     return corrected.drop("_transmission")

@@ -1,17 +1,21 @@
 """Gain-calibration operators — reference M1-M6 (continuum.py:46-187,
 SURVEY.md §2.5).
 
-Two layers:
-- distributed closed-form OLS (``ols_fit``) via covar_pop/var_pop
-  aggregates — the scale path, one shuffle keyed by segment;
-- per-segment Robust Chauvenet Rejection (``rcr_fit_segments``) via
-  applyInPandas — calibration segments are tiny (dozens of rows), so
-  the sequential robust-rejection loop runs inside one Arrow batch per
-  segment. The reference uses the compiled `rcr` library (Maples et
-  al. 2018 ApJS, continuum.py:85-94); that library is unavailable
-  here, so the same published algorithm's rejection loop (Chauvenet
-  criterion around a robust sigma) is implemented in NumPy — a
-  documented substitution, pinned by golden tests.
+Each rule has one NumPy body: the robust fit of one cal half
+(``fit_segment``: M1-M4), the calibration height (``height_from_fits``:
+M5) and the gain division (``gain_calibrate``: M6). The corpus
+continuum kernel runs them per stream, ``rcr_fit_segments`` and
+``apply_gain_calibration`` run them over Spark frames, and
+``calibration_heights_df`` / ``apply_gain_calibration_distributed``
+restate M5/M6 as joins, kept as the reference the fused continuum is
+tested against.
+
+The reference uses the compiled `rcr` library (Maples et al. 2018
+ApJS, continuum.py:85-94); that library is unavailable here, so the
+same published algorithm's rejection loop (Chauvenet criterion around
+a robust sigma) is implemented in NumPy — a documented substitution,
+pinned by golden tests. Calibration segments are tiny (dozens of
+rows), so the sequential loop runs inside one Arrow batch.
 
 Gain application (M6) implements the INTENDED time-interpolation
 semantics: the reference's z>=1.96 branch rebinds the loop variable
@@ -33,25 +37,6 @@ from pyspark.sql import types as T
 
 
 # ------------------------------------------------------------------
-# M1/M2: closed-form OLS as aggregates (distributed scale path)
-# ------------------------------------------------------------------
-
-def ols_fit(df: DataFrame, group_cols: list[str], x_col: str, y_col: str,
-            ) -> DataFrame:
-    """slope = covar_pop(x,y)/var_pop(x); intercept = avg(y) -
-    slope*avg(x). Equivalent to scipy.linregress point estimates
-    (continuum.py:82) but computed in one distributed aggregation."""
-    x, y = F.col(x_col), F.col(y_col)
-    slope = F.covar_pop(x, y) / F.var_pop(x)
-    return df.groupBy(*group_cols).agg(
-        slope.alias("slope"),
-        (F.avg(y) - slope * F.avg(x)).alias("intercept"),
-        F.count(F.lit(1)).alias("n"),
-        F.avg(x).alias("x_mean"),
-    )
-
-
-# ------------------------------------------------------------------
 # M3: Robust Chauvenet Rejection around a linear model (per segment)
 # ------------------------------------------------------------------
 
@@ -63,10 +48,11 @@ def _chauvenet_threshold(n: int) -> float:
 
 
 def rcr_linear_fit(x: np.ndarray, y: np.ndarray,
-                   max_iter: int = 50) -> tuple[float, float, np.ndarray]:
+                   ) -> tuple[float, float, np.ndarray]:
     """Robust linear fit: iterate OLS -> robust location (median of
     residuals) -> robust sigma (scaled MAD about that location) ->
-    Chauvenet rejection of |resid - mu| > z*sigma, to a fixpoint.
+    Chauvenet rejection of |resid - mu| > z*sigma, to a fixpoint (at
+    most 50 rounds).
 
     Mirrors the role of rcr.FunctionalForm + performBulkRejection
     (continuum.py:85-94) using the published algorithm's ingredients
@@ -83,7 +69,7 @@ def rcr_linear_fit(x: np.ndarray, y: np.ndarray,
     """
     keep = np.ones(len(x), dtype=bool)
     slope = intercept = 0.0
-    for _ in range(max_iter):
+    for _ in range(50):
         xs, ys = x[keep], y[keep]
         if len(xs) < 3:
             break
@@ -281,44 +267,17 @@ def gain_calibrate(t: np.ndarray, y: np.ndarray, pre: CalibrationHeight,
 
 def apply_gain_calibration(science: DataFrame,
                            pre: CalibrationHeight,
-                           post: CalibrationHeight,
-                           t_col: str = "t",
-                           y_col: str = "intensity") -> DataFrame:
-    """Divide the science intensities by the calibration height
-    (continuum.py:173-187), with the INTENDED interpolation semantics:
+                           post: CalibrationHeight) -> DataFrame:
+    """M6 (continuum.py:173-187) on one stream's science continuum
+    (t, intensity, ...): ``gain_calibrate`` over the whole frame as
+    one group, so the first/last science times come from the same
+    pass and no driver action runs."""
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.assign(intensity=gain_calibrate(
+            pdf["t"].to_numpy(dtype=float),
+            pdf["intensity"].to_numpy(dtype=float), pre, post))
 
-    - both heights present and z = |pre-post|/sqrt(s_pre^2+s_post^2)
-      >= 1.96: divide by the height linearly interpolated in time
-      between the first and last science samples (the reference's
-      loop-variable no-op is documented above);
-    - both present, z < 1.96: divide by the mean height;
-    - one present: divide by it; none: unchanged.
-
-    The first/last science times are two scalar aggregates (min/max) —
-    a driver round-trip of two doubles, matching SURVEY §3's "two
-    small collects" note.
-    """
-    y = F.col(y_col)
-    if pre.delta is not None and post.delta is not None:
-        denom = math.sqrt(pre.uncertainty ** 2 + post.uncertainty ** 2)
-        # perfect (zero-residual) fits give denom == 0; the z test is
-        # then undefined and we fall through to the mean-height branch
-        # — the same outcome as the distributed form, where x/0 is
-        # null and null >= 1.96 is null (falsy)
-        z = abs(pre.delta - post.delta) / denom if denom > 0 else None
-        if z is not None and z >= 1.96:
-            t1, t2 = science.agg(F.min(t_col), F.max(t_col)).first()
-            if t2 == t1:
-                return science.withColumn(y_col, y / F.lit(pre.delta))
-            frac = (F.col(t_col) - F.lit(t1)) / F.lit(t2 - t1)
-            height = F.lit(pre.delta) + F.lit(post.delta - pre.delta) * frac
-            return science.withColumn(y_col, y / height)
-        return science.withColumn(y_col, y / F.lit((pre.delta + post.delta) / 2))
-    if pre.delta is not None:
-        return science.withColumn(y_col, y / F.lit(pre.delta))
-    if post.delta is not None:
-        return science.withColumn(y_col, y / F.lit(post.delta))
-    return science
+    return science.groupBy().applyInPandas(run, science.schema)
 
 
 # ------------------------------------------------------------------
@@ -362,10 +321,7 @@ def calibration_heights_df(fits: DataFrame) -> DataFrame:
 
 
 def apply_gain_calibration_distributed(science: DataFrame,
-                                       heights: DataFrame,
-                                       t_col: str = "t",
-                                       y_col: str = "intensity",
-                                       ) -> DataFrame:
+                                       heights: DataFrame) -> DataFrame:
     """M6 with per-stream heights joined in instead of collected to
     the driver. Branch semantics identical to apply_gain_calibration;
     the science time bounds come from a per-stream aggregate joined
@@ -385,7 +341,7 @@ def apply_gain_calibration_distributed(science: DataFrame,
                      F.col("uncertainty"))).alias("post_u"),
     )
     bounds = science.groupBy(*STREAM_COLS).agg(
-        F.min(t_col).alias("_t1"), F.max(t_col).alias("_t2"))
+        F.min("t").alias("_t1"), F.max("t").alias("_t2"))
     enriched = (science
                 .join(pivoted, STREAM_COLS, "left")
                 .join(bounds, STREAM_COLS, "left"))
@@ -396,7 +352,7 @@ def apply_gain_calibration_distributed(science: DataFrame,
     z = F.try_divide(F.abs(pre_d - post_d),
                      F.sqrt(F.col("pre_u") ** 2 + F.col("post_u") ** 2))
     frac = F.when(F.col("_t2") == F.col("_t1"), F.lit(0.0)).otherwise(
-        (F.col(t_col) - F.col("_t1")) / (F.col("_t2") - F.col("_t1")))
+        (F.col("t") - F.col("_t1")) / (F.col("_t2") - F.col("_t1")))
     interp = pre_d + (post_d - pre_d) * frac
     both = pre_d.isNotNull() & post_d.isNotNull()
     height = (
@@ -405,7 +361,7 @@ def apply_gain_calibration_distributed(science: DataFrame,
          .when(pre_d.isNotNull(), pre_d)
          .when(post_d.isNotNull(), post_d)
     )
-    y = F.col(y_col)
+    y = F.col("intensity")
     calibrated = F.when(height.isNotNull(), y / height).otherwise(y)
-    return (enriched.withColumn(y_col, calibrated)
+    return (enriched.withColumn("intensity", calibrated)
             .drop("pre_d", "pre_u", "post_d", "post_u", "_t1", "_t2"))

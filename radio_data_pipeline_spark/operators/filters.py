@@ -80,10 +80,11 @@ def time_range_predicate_us(ts_us: Column,
     return pred
 
 
-def filter_time_ranges(df: DataFrame, ts_col: str = "DATE_OBS",
+def filter_time_ranges(df: DataFrame,
                        include: Sequence[TimeRange] | None = None,
                        exclude: Sequence[TimeRange] | None = None) -> DataFrame:
-    return df.filter(time_range_predicate(F.col(ts_col), include, exclude))
+    return df.filter(time_range_predicate(F.col("DATE_OBS"), include,
+                                          exclude))
 
 
 def frequency_channel_mask(frequencies: Sequence[float],
@@ -114,7 +115,6 @@ def frequency_channel_mask(frequencies: Sequence[float],
 def filter_frequency_ranges(df: DataFrame, frequencies: Sequence[float],
                             include: Sequence[FreqRange] | None = None,
                             exclude: Sequence[FreqRange] | None = None,
-                            data_col: str = "DATA",
                             ) -> tuple[DataFrame, list[float]]:
     """Slice every row's DATA vector to the surviving channels and
     return the cropped frequency axis.
@@ -128,18 +128,18 @@ def filter_frequency_ranges(df: DataFrame, frequencies: Sequence[float],
     if sum(length for _, length in runs) == len(keep):  # nothing dropped
         return df, list(frequencies)
     if not runs:
-        out = df.withColumn(data_col, F.expr("array()")
-                            .cast(df.schema[data_col].dataType))
+        out = df.withColumn("DATA", F.expr("array()")
+                            .cast(df.schema["DATA"].dataType))
     else:
         # concat of slice() per surviving run: the expression tree is
         # O(#runs) (one per crop window), NOT O(#channels) — the same
         # literal-array blowup fix as the spectrum frequency axis
         # (pipeline.py / BENCH_SCALING.md §4); slices stay positional
         # and inside codegen, no explode, no shuffle
-        parts = [F.slice(F.col(data_col), start + 1, length)
+        parts = [F.slice(F.col("DATA"), start + 1, length)
                  for start, length in runs]
         out = df.withColumn(
-            data_col, parts[0] if len(parts) == 1 else F.concat(*parts))
+            "DATA", parts[0] if len(parts) == 1 else F.concat(*parts))
     cropped = [f for f, k in zip(frequencies, keep) if k]
     return out, cropped
 

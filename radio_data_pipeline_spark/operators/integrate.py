@@ -20,8 +20,6 @@ def array_sum(col: Column) -> Column:
 
 
 def integrate_continuum(df: DataFrame, epoch_ts: str | None = None,
-                        data_col: str = "DATA",
-                        ts_col: str = "DATE_OBS",
                         keep_cols: list[str] | None = None) -> DataFrame:
     """Reference A1 (utils.py:105-118, mode 'continuum'): per row,
     t = DATE_OBS - header.DATE in seconds and intensity = sum(DATA).
@@ -38,12 +36,13 @@ def integrate_continuum(df: DataFrame, epoch_ts: str | None = None,
         *keep_cols,
         # cast via timestamp so both TimestampType columns and ISO-8601
         # strings (the FITS decode output) normalize identically (M11)
-        (F.col(ts_col).cast("timestamp").cast("double") - t0).alias("t"),
-        array_sum(F.col(data_col)).alias("intensity"),
+        (F.col("DATE_OBS").cast("timestamp").cast("double") - t0)
+        .alias("t"),
+        array_sum(F.col("DATA")).alias("intensity"),
     )
 
 
-def integrate_spectrum(df: DataFrame, data_col: str = "DATA",
+def integrate_spectrum(df: DataFrame,
                        group_cols: list[str] | None = None) -> DataFrame:
     """Reference A2 (utils.py:120-124, mode 'spectrum'): element-wise
     sum of DATA vectors across rows -> one row per channel position.
@@ -57,7 +56,7 @@ def integrate_spectrum(df: DataFrame, data_col: str = "DATA",
     """
     group_cols = group_cols or []
     exploded = df.select(
-        *group_cols, F.posexplode(F.col(data_col)).alias("pos", "val"))
+        *group_cols, F.posexplode("DATA").alias("pos", "val"))
     return (
         exploded.groupBy(*group_cols, "pos")
         .agg(F.sum(F.coalesce(F.col("val").cast("double"), F.lit(0.0)))
@@ -66,18 +65,11 @@ def integrate_spectrum(df: DataFrame, data_col: str = "DATA",
     )
 
 
-def on_off_spectrum(df: DataFrame, on_pred: Column,
-                    data_col: str = "DATA") -> DataFrame:
+def on_off_spectrum(df: DataFrame, on_pred: Column) -> DataFrame:
     """Reference M7 (spectrum.py:63-67): spectrum(ON) - spectrum(OFF)
-    element-wise. Implemented as ONE aggregation with a signed
-    contribution instead of two passes + a join: sum(val * (+1|-1)) per
-    channel — half the shuffle volume of the two-aggregation form."""
+    element-wise, as ONE integrate_spectrum over DATA times a +1/-1
+    row sign instead of two aggregations and a join. A NULL element
+    counts as 0 on either side."""
     sign = F.when(on_pred, F.lit(1.0)).otherwise(F.lit(-1.0))
-    exploded = df.select(
-        sign.alias("_sign"), F.posexplode(F.col(data_col)).alias("pos", "val"))
-    return (
-        exploded.groupBy("pos")
-        .agg(F.sum(F.coalesce(F.col("val").cast("double"), F.lit(0.0))
-                   * F.col("_sign")).alias("intensity"))
-        .orderBy("pos")
-    )
+    return integrate_spectrum(
+        df.withColumn("DATA", F.transform("DATA", lambda v: v * sign)))

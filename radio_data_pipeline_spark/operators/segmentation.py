@@ -129,8 +129,7 @@ _RESULT_SCHEMA = T.StructType([
 
 
 def find_calibrations(df: DataFrame, channel_count: int | None = None,
-                      header_obsmode: str = "track",
-                      order_col: str = "row_idx") -> DataFrame:
+                      header_obsmode: str = "track") -> DataFrame:
     """O13/O14 over every observation stream at once.
 
     channel_count=None computes the reference's definition — the
@@ -142,7 +141,7 @@ def find_calibrations(df: DataFrame, channel_count: int | None = None,
     df = _with_channel_count(df, channel_count)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
+        pdf = pdf.sort_values("row_idx")
         ds, pc, off = find_calibration_indices(
             pdf["CALSTATE"].to_numpy(),
             pdf["SWPVALID"].to_numpy(),
@@ -161,7 +160,7 @@ def find_calibrations(df: DataFrame, channel_count: int | None = None,
 
     cols = [c for c in df.columns
             if c in {*GROUP_COLS, "CALSTATE", "SWPVALID", "OBSMODE",
-                     order_col, "_cc"}]
+                     "row_idx", "_cc"}]
     return (df.select(*cols)
             .groupBy(*GROUP_COLS)
             .applyInPandas(run, schema=_RESULT_SCHEMA))
@@ -180,8 +179,7 @@ def _with_channel_count(df: DataFrame, channel_count: int | None) -> DataFrame:
 
 def find_calibrations_compiled(df: DataFrame,
                                channel_count: int | None = None,
-                               header_obsmode: str = "track",
-                               order_col: str = "row_idx") -> DataFrame:
+                               header_obsmode: str = "track") -> DataFrame:
     """O13/O14 compiled to pure window functions — NO Python stage.
 
     The general state machine is not window-compilable: the
@@ -215,7 +213,7 @@ def find_calibrations_compiled(df: DataFrame,
     """
     from pyspark.sql import Window
 
-    w_ord = Window.partitionBy(*GROUP_COLS).orderBy(order_col)
+    w_ord = Window.partitionBy(*GROUP_COLS).orderBy("row_idx")
     w_all = Window.partitionBy(*GROUP_COLS)
 
     df = _with_channel_count(df, channel_count)
@@ -282,8 +280,7 @@ def find_calibrations_compiled(df: DataFrame,
 
 def find_calibrations_hybrid(df: DataFrame,
                              channel_count: int | None = None,
-                             header_obsmode: str = "track",
-                             order_col: str = "row_idx") -> DataFrame:
+                             header_obsmode: str = "track") -> DataFrame:
     """O13 at scale: window-compiled fast path for every stream where
     the discard counter cannot fire, per-stream fallback to the
     applyInPandas state machine for the rest (no-spike rescans and
@@ -310,8 +307,7 @@ def find_calibrations_hybrid(df: DataFrame,
     ContextCleaner when the result is garbage-collected.
     """
     compiled = find_calibrations_compiled(
-        df, channel_count, header_obsmode, order_col) \
-        .localCheckpoint(eager=True)
+        df, channel_count, header_obsmode).localCheckpoint(eager=True)
     fast = (compiled.filter(F.col("_eligible"))
             .select("obs_id", "IFNUM", "PLNUM", "data_start_idx",
                     "post_cal_start_idx", "off_start_idx"))
@@ -321,13 +317,11 @@ def find_calibrations_hybrid(df: DataFrame,
         return fast
     slow = find_calibrations(
         df.join(slow_keys, GROUP_COLS, "left_semi"),
-        channel_count=channel_count, header_obsmode=header_obsmode,
-        order_col=order_col)
+        channel_count=channel_count, header_obsmode=header_obsmode)
     return fast.unionByName(slow)
 
 
-def label_segments(df: DataFrame, indices: DataFrame,
-                   order_col: str = "row_idx") -> DataFrame:
+def label_segments(df: DataFrame, indices: DataFrame) -> DataFrame:
     """O15 (continuum.py:161-171): label each row pre_cal / science /
     post_cal using the per-stream indices. Row position within the
     stream comes from a window row_number (explicit ordering — the
@@ -336,7 +330,7 @@ def label_segments(df: DataFrame, indices: DataFrame,
     and at millions of streams the join rides the stream-key
     partitioning the window already established."""
     from pyspark.sql import Window
-    w = Window.partitionBy(*GROUP_COLS).orderBy(order_col)
+    w = Window.partitionBy(*GROUP_COLS).orderBy("row_idx")
     pos = F.row_number().over(w) - 1
     labeled = (
         df.withColumn("_pos", pos)

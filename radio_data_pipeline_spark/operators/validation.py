@@ -50,13 +50,13 @@ OBSERVATION_SCHEMA = T.StructType([
 ])
 
 
-def mask_nan_values(df: DataFrame, data_col: str = "DATA") -> DataFrame:
+def mask_nan_values(df: DataFrame) -> DataFrame:
     """Reference F6 (validate.py:25-37): mask (not drop) NaN elements
     of the DATA vector. NaN -> NULL so downstream array sums skip them
     exactly like NumPy masked sums do."""
     return df.withColumn(
-        data_col,
-        F.transform(F.col(data_col),
+        "DATA",
+        F.transform("DATA",
                     lambda x: F.when(F.isnan(x), F.lit(None)).otherwise(x)),
     )
 
@@ -75,15 +75,15 @@ def physical_filter(df: DataFrame, columns: list[str] | None = None) -> DataFram
     return df.filter(pred)
 
 
-def valid_timestamp_flag(df: DataFrame, ts_col: str = "DATE_OBS",
-                         flag_col: str = "_ts_valid") -> DataFrame:
+def valid_timestamp_flag(df: DataFrame) -> DataFrame:
     """Reference M11 validation (validate.py:39-49): the reference only
-    *prints* unparseable DATE-OBS values; we surface a boolean flag so
-    callers can count/quarantine bad rows without a driver round-trip."""
-    col = F.col(ts_col)
-    if dict(df.dtypes)[ts_col] in ("timestamp", "timestamp_ntz"):
-        return df.withColumn(flag_col, col.isNotNull())
-    return df.withColumn(flag_col, F.try_to_timestamp(col).isNotNull())
+    *prints* unparseable DATE-OBS values; we surface a boolean
+    `_ts_valid` flag so callers can count/quarantine bad rows without a
+    driver round-trip."""
+    col = F.col("DATE_OBS")
+    if dict(df.dtypes)["DATE_OBS"] in ("timestamp", "timestamp_ntz"):
+        return df.withColumn("_ts_valid", col.isNotNull())
+    return df.withColumn("_ts_valid", F.try_to_timestamp(col).isNotNull())
 
 
 def crop_channels(df: DataFrame, start: int, stop: int,
@@ -110,8 +110,7 @@ def validate_observation(df: DataFrame,
     return out
 
 
-def physical_filter_observed(df: DataFrame,
-                             columns: list[str] | None = None):
+def physical_filter_observed(df: DataFrame):
     """`physical_filter` plus pipeline observability: returns
     (filtered_df, Observation) where the Observation reports — from
     the SAME pass that executes the query, at zero extra cost —
@@ -125,7 +124,7 @@ def physical_filter_observed(df: DataFrame,
     """
     from pyspark.sql import Observation
 
-    cols = [c for c in (columns or PHYSICAL_COLUMNS) if c in df.columns]
+    cols = [c for c in PHYSICAL_COLUMNS if c in df.columns]
     bad = None
     for c in cols:
         neg = (F.col(c) < 0) & F.col(c).isNotNull()
@@ -140,4 +139,4 @@ def physical_filter_observed(df: DataFrame,
         # report 0 dropped, not None (monitoring does `> 0` checks)
         F.coalesce(F.sum(bad.cast("long")), F.lit(0))
         .alias("n_negative"))
-    return physical_filter(observed, columns), obs
+    return physical_filter(observed), obs

@@ -164,8 +164,7 @@ def reduce_observation(validated: DataFrame, header: ObservationHeader,
     """
     data = validated
     if include_time or exclude_time:
-        data = filter_time_ranges(data, "DATE_OBS", include_time,
-                                  exclude_time)
+        data = filter_time_ranges(data, include_time, exclude_time)
     freqs = header.frequencies(ifnum)
     if include_freq or exclude_freq:
         data, freqs = filter_frequency_ranges(data, freqs, include_freq,

@@ -585,31 +585,42 @@ def _is_permissive(mode: str) -> bool:
     return mode.lower() == "permissive"
 
 
-def _zero_length_files(spark, path_glob: str) -> list[str]:
-    """Paths of 0-byte files the glob matches (one directory level,
-    matching binaryFile's non-recursive default). Spark's file scan
-    plans NO splits for zero-length files, so a file truncated to 0
-    bytes — truncation's limit case, found by the round-11 scan-level
-    Hypothesis fuzz — never reaches the decode task: without this
-    listing it silently vanishes from the corpus scan in BOTH modes
-    (no tombstone, no failfast error — silent data loss). Driver-side
-    and metadata-only: one Hadoop globStatus over the same pattern the
-    datasource resolves (FileStatus.getLen, no file reads), the same
-    class of work InMemoryFileIndex already does to plan the scan."""
+def _binary_files(spark, path_glob: str, permissive: bool):
+    """(path, content) of every file the glob matches, for the decode.
+
+    One Hadoop globStatus lists the matched paths and, one directory
+    level down (binaryFile's non-recursive default), their 0-byte
+    files — metadata only, the same class of work InMemoryFileIndex
+    does to plan the scan. binaryFile then loads the matched paths,
+    not the pattern: Spark's metadata-directory probe stats a single
+    load path literally, and on a glob that logs a WARN with a
+    FileNotFoundException stack trace on every call. A pattern that
+    matches nothing is loaded as given, so it raises Spark's
+    path-not-found error.
+
+    Spark's file scan plans NO splits for zero-length files, so a file
+    truncated to 0 bytes would never reach the decode task and would
+    silently vanish from the scan in both modes. failfast raises at
+    planning time; permissive feeds each such file to the decode as
+    b'' so it becomes the same tombstone a corrupt file gets."""
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path(path_glob)
     fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    out = []
+    matched, empty_paths = [], []
     for s in (fs.globStatus(jpath) or []):
-        if s.isFile():
-            if s.getLen() == 0:
-                out.append(fs.makeQualified(s.getPath()).toString())
-        elif s.isDirectory():
-            for c in fs.listStatus(s.getPath()):
-                if c.isFile() and c.getLen() == 0:
-                    out.append(
-                        fs.makeQualified(c.getPath()).toString())
-    return sorted(out)
+        matched.append(fs.makeQualified(s.getPath()).toString())
+        files = fs.listStatus(s.getPath()) if s.isDirectory() else [s]
+        empty_paths += [fs.makeQualified(c.getPath()).toString()
+                        for c in files if c.isFile() and c.getLen() == 0]
+    empty_paths.sort()
+    if empty_paths and not permissive:
+        raise _zero_length_error(empty_paths)
+    files = spark.read.format("binaryFile").load(matched or path_glob) \
+        .select("path", "content")
+    if empty_paths:
+        files = files.unionByName(spark.createDataFrame(
+            [(p, bytearray()) for p in empty_paths], files.schema))
+    return files
 
 
 def _empty_file_verdict() -> str:
@@ -649,19 +660,7 @@ def read_sdfits(spark, path_glob: str, mode: str = "failfast"):
     from pyspark.sql import functions as F
 
     permissive = _is_permissive(mode)
-    files = spark.read.format("binaryFile").load(path_glob) \
-        .select("path", "content")
-
-    # zero-length files never reach the decode task (the scan plans no
-    # splits for them — see _zero_length_files): failfast raises at
-    # planning time; permissive feeds them to the decode as b'' so
-    # each becomes the same tombstone a corrupt file gets
-    empty_paths = _zero_length_files(spark, path_glob)
-    if empty_paths and not permissive:
-        raise _zero_length_error(empty_paths)
-    if empty_paths:
-        files = files.unionByName(spark.createDataFrame(
-            [(p, bytearray()) for p in empty_paths], files.schema))
+    files = _binary_files(spark, path_glob, permissive)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -789,17 +788,10 @@ def read_sdfits_stream(spark, path_glob: str, mode: str = "failfast"):
 
 def read_sdfits_headers(spark, path_glob: str):
     """Per-file header + HISTORY as JSON — the broadcast-dict feed for
-    the P1/P2 driver-side parsers (utils.py:9-103)."""
-    import pandas as pd  # noqa: F811
+    the P1/P2 driver-side parsers (utils.py:9-103). A 0-byte file
+    fails the scan, as in read_sdfits failfast."""
     from pyspark.sql import types as T
 
-    # same zero-length hole as read_sdfits failfast: the scan would
-    # silently omit an empty file instead of failing on it
-    empty_paths = _zero_length_files(spark, path_glob)
-    if empty_paths:
-        raise _zero_length_error(empty_paths)
-
-    files = spark.read.format("binaryFile").load(path_glob)
     schema = T.StructType([
         T.StructField("path", T.StringType()),
         T.StructField("header_json", T.StringType()),
@@ -808,16 +800,12 @@ def read_sdfits_headers(spark, path_glob: str):
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                # header-only parse: never decodes the data unit
-                header, history = parse_sdfits_headers_only(
-                    bytes(row["content"]))
-                rows.append({
-                    "path": row["path"],
-                    "header_json": json.dumps(header),
-                    "history_json": json.dumps(history),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            # header-only parse: never decodes the data unit
+            parsed = [parse_sdfits_headers_only(bytes(c))
+                      for c in pdf["content"]]
+            yield pdf[["path"]].assign(
+                header_json=[json.dumps(h) for h, _ in parsed],
+                history_json=[json.dumps(h) for _, h in parsed])
 
-    return files.select("path", "content").mapInPandas(decode, schema=schema)
+    return _binary_files(spark, path_glob, permissive=False) \
+        .mapInPandas(decode, schema=schema)

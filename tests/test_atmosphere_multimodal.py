@@ -132,6 +132,35 @@ class TestAtmosphere:
         t_lo = rows[1]["t"]
         assert all(lo < hi for lo, hi in zip(t_lo, t_hi))
 
+    def test_transmission_matches_per_row_scalar_kernel(self, spark):
+        # each row's transmission equals the scalar P.676 call with
+        # that row's weather and Buck density, whatever else shares
+        # its Arrow batch; 2 deg is below the 5 deg cosecant clamp
+        from radio_data_pipeline_spark.operators.atmosphere import (
+            p676_slant_attenuation,
+            transmission_udf,
+        )
+        weather = [(45.0, 15.0, 1000.0, 40.0), (2.0, 25.0, 950.0, 80.0),
+                   (5.0, 25.0, 950.0, 80.0), (70.0, 0.5, 1020.0, 10.0),
+                   (12.5, 30.0, 880.0, 60.0)]
+        freqs = [1.4, 22.2, 60.0, 118.0, 183.0]
+        df = spark.createDataFrame(
+            [(i, *w) for i, w in enumerate(weather)],
+            ["i", "ELEVATIO", "TAMBIENT", "PRESSURE", "HUMIDITY"])
+        udf = transmission_udf(freqs)
+        got = {r["i"]: r["t"] for r in df.select(
+            "i", udf("ELEVATIO", "TAMBIENT", "PRESSURE", "HUMIDITY")
+            .alias("t")).collect()}
+        for i, (elev, t_c, p, h) in enumerate(weather):
+            e_s = (1.0007 + 3.46e-6) * 6.1121 * math.exp(
+                17.502 * t_c / (t_c + 240.97))
+            rho = 216.7 * ((h / 100.0) * e_s) / (t_c + 273.15)
+            att = p676_slant_attenuation(np.asarray(freqs), elev, rho, p,
+                                         t_c + 273.15)
+            np.testing.assert_allclose(got[i], 10.0 ** (-att / 10.0),
+                                       rtol=1e-12)
+        np.testing.assert_allclose(got[1], got[2], rtol=1e-12)
+
 
 class TestRealCodecs:
     def test_wav_roundtrip_vs_stdlib(self):

@@ -105,6 +105,33 @@ def test_read_sdfits_spark_source(spark, tmp_path):
     assert json.loads(hdrs[0]["history_json"]) == HISTORY
 
 
+def test_glob_and_directory_reads_agree(spark, tmp_path):
+    """A `<dir>/*.fits` glob and a `<dir>` read list the same files,
+    so both readers give the same rows, path and obs_id either way."""
+    n_rows = 0
+    for i, n in enumerate([8, 12]):
+        pdf = _obs_pdf(n_science=n)
+        n_rows += len(pdf)
+        (tmp_path / f"obs{i}.fits").write_bytes(
+            write_sdfits(pdf, HEADER, HISTORY))
+    glob, directory = str(tmp_path / "*.fits"), str(tmp_path)
+
+    def rows(path):
+        return sorted(read_sdfits(spark, path).collect(),
+                      key=lambda r: (r["path"], r["row_idx"]))
+
+    def headers(path):
+        return sorted(read_sdfits_headers(spark, path).collect())
+
+    by_glob = rows(glob)
+    assert len(by_glob) == n_rows
+    assert by_glob == rows(directory)
+    assert len({(r["path"], r["obs_id"]) for r in by_glob}) == 2
+    assert headers(glob) == headers(directory)
+    assert [h["path"] for h in headers(glob)] == \
+        sorted({r["path"] for r in by_glob})
+
+
 def test_read_sdfits_feeds_segmentation(spark, tmp_path):
     # E2E: FITS bytes -> distributed decode -> calibration indices
     from radio_data_pipeline_spark.operators.segmentation import (

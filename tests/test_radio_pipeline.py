@@ -160,6 +160,61 @@ def test_onoff_sign_is_positional_and_all_nan_channel_is_null(spark):
     np.testing.assert_allclose(got[keep], expected[keep], rtol=1e-9)
 
 
+def test_on_off_spectrum_is_on_minus_off_with_null_as_zero(spark):
+    from radio_data_pipeline_spark.operators.integrate import (
+        integrate_spectrum,
+        on_off_spectrum,
+    )
+    df = spark.createDataFrame(
+        [([1.0, 2.0, None], "onoff:on"), ([3.0, None, 5.0], "onoff:on"),
+         ([0.5, 1.0, 2.0], "onoff:off"), ([None, 4.0, 1.0], "onoff:off")],
+        "DATA array<double>, OBSMODE string")
+    is_on = ~F.col("OBSMODE").contains("onoff:off")
+    got = [(r["pos"], r["intensity"]) for r in
+           on_off_spectrum(df, is_on).collect()]
+    # ON = [4, 2, 5], OFF = [0.5, 5, 3]
+    assert got == [(0, 3.5), (1, -3.0), (2, 2.0)]
+    on = integrate_spectrum(df.filter(is_on)).collect()
+    off = integrate_spectrum(df.filter(~is_on)).collect()
+    assert [v for _, v in got] == \
+        [a["intensity"] - b["intensity"] for a, b in zip(on, off)]
+
+
+def test_apply_gain_calibration_branches(spark):
+    from radio_data_pipeline_spark.operators.calibration import (
+        CalibrationHeight as H,
+        apply_gain_calibration,
+    )
+    science = spark.createDataFrame(
+        [(7, 0.0, 100.0), (7, 10.0, 110.0), (7, 20.0, 120.0),
+         (7, 30.0, 130.0)], "obs_id long, t double, intensity double")
+    none = H(None, None)
+    cases = {
+        # z = 10 / sqrt(2) >= 1.96: height 10 -> 20 linearly in t
+        "interpolate": (H(10.0, 1.0), H(20.0, 1.0), [10.0, 8.25, 7.2, 6.5]),
+        # z = 2 / sqrt(50) < 1.96: the mean height 11
+        "mean": (H(10.0, 5.0), H(12.0, 5.0),
+                 [100 / 11, 10.0, 120 / 11, 130 / 11]),
+        # zero denominator: z undefined, the mean height 15
+        "zero_denominator": (H(10.0, 0.0), H(20.0, 0.0),
+                             [100 / 15, 110 / 15, 8.0, 130 / 15]),
+        "pre_only": (H(10.0, 1.0), none, [10.0, 11.0, 12.0, 13.0]),
+        "post_only": (none, H(20.0, 1.0), [5.0, 5.5, 6.0, 6.5]),
+        "none": (none, none, [100.0, 110.0, 120.0, 130.0]),
+    }
+    for name, (pre, post, expected) in cases.items():
+        out = apply_gain_calibration(science, pre, post)
+        assert out.columns == science.columns, name
+        rows = sorted(out.collect(), key=lambda r: r["t"])
+        assert [r["obs_id"] for r in rows] == [7] * 4, name
+        assert [r["t"] for r in rows] == [0.0, 10.0, 20.0, 30.0], name
+        np.testing.assert_allclose([r["intensity"] for r in rows],
+                                   expected, rtol=1e-12, err_msg=name)
+    empty = science.filter(F.col("t") < 0)
+    assert apply_gain_calibration(empty, H(10.0, 1.0),
+                                  H(20.0, 1.0)).collect() == []
+
+
 def _ss_median_rcr(x, y, max_iter=50):
     """Independent reference implementation of the published RCR
     rejection the reference library applies (rcr.SS_MEDIAN_DL core,
