@@ -2,13 +2,15 @@
 (utils.py:126-214, SURVEY.md §2.4): the ordered, stateful core of the
 pipeline.
 
-Spark strategy (SURVEY §7 step 5): the state machine runs per
-observation stream via ``applyInPandas`` — each (obs_id, IFNUM, PLNUM)
-group is one telescope observation (thousands of rows, never more than
-fits in one task), sorted in-group by row_idx, scanned sequentially.
-The shuffle is keyed by the observation id, so a 100 TB corpus of
-millions of observations parallelizes perfectly; no single group ever
-approaches executor memory.
+Spark strategy (SURVEY §7 step 5): one algorithm, the NumPy state
+machine ``find_calibration_indices``, run once per observation by
+``segment_observation``: each obs_id group is one SDFITS file
+(thousands of rows, never more than fits in one task), split into its
+(IFNUM, PLNUM) streams, each sorted by row_idx and scanned
+sequentially. The continuum kernel (pipeline.py) and
+``find_calibrations`` (one ``groupBy("obs_id").applyInPandas``) both
+call it, so the only shuffle is keyed by the observation id and a
+corpus of millions of observations parallelizes across tasks.
 
 Documented divergences from the reference (intended semantics, pinned
 by tests):
@@ -118,6 +120,28 @@ def find_calibration_indices(calstate: np.ndarray, swpvalid: np.ndarray,
     return data_start, post_cal, off_start
 
 
+def segment_observation(pdf: pd.DataFrame, header_obsmode: str,
+                        channel_count: int | None = None):
+    """One observation's rows -> (stream rows, (data_start,
+    post_cal_start, off_start)) per (IFNUM, PLNUM) stream: rows in
+    row_idx order, streams in (IFNUM, PLNUM) order, the indices from
+    find_calibration_indices.
+
+    channel_count=None takes the reference's definition, the product
+    len(unique IFNUM) * len(unique PLNUM) over the observation
+    (continuum.py:24-28); it exceeds the count of observed streams when
+    some (IFNUM, PLNUM) combinations are missing.
+    """
+    if channel_count is None:
+        channel_count = pdf["IFNUM"].nunique() * pdf["PLNUM"].nunique()
+    pdf = pdf.sort_values(["IFNUM", "PLNUM", "row_idx"])
+    for _, s in pdf.groupby(["IFNUM", "PLNUM"], sort=False):
+        modes = s["OBSMODE"].tolist() if "OBSMODE" in s else [""] * len(s)
+        yield s, find_calibration_indices(
+            s["CALSTATE"].to_numpy(), s["SWPVALID"].to_numpy(), modes,
+            header_obsmode, channel_count)
+
+
 _RESULT_SCHEMA = T.StructType([
     T.StructField("obs_id", T.LongType()),
     T.StructField("IFNUM", T.IntegerType()),
@@ -125,200 +149,69 @@ _RESULT_SCHEMA = T.StructType([
     T.StructField("data_start_idx", T.IntegerType()),
     T.StructField("post_cal_start_idx", T.IntegerType()),
     T.StructField("off_start_idx", T.IntegerType()),
+    T.StructField("_eligible", T.BooleanType()),
 ])
+
+
+def _stream_indices(df: DataFrame, channel_count: int | None,
+                    header_obsmode: str) -> DataFrame:
+    """One row per stream: the three indices plus `_eligible`, true
+    when the scan accepted the stream's first post-spike science row
+    (CALSTATE=0 & SWPVALID=1 after the first CALSTATE=1 row) as
+    data_start, i.e. it had no false-start restart and no rescan
+    fallback."""
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for s, (ds, pc, off) in segment_observation(pdf, header_obsmode,
+                                                    channel_count):
+            cal = s["CALSTATE"].to_numpy()
+            swp = s["SWPVALID"].to_numpy()
+            first = np.flatnonzero(np.logical_or.accumulate(cal == 1)
+                                   & (cal == 0) & (swp == 1))
+            rows.append((s["obs_id"].iloc[0], s["IFNUM"].iloc[0],
+                         s["PLNUM"].iloc[0], ds, pc, off,
+                         bool(first.size and first[0] == ds)))
+        # object columns keep a None index as null, not a float NaN
+        return pd.DataFrame(rows, columns=_RESULT_SCHEMA.fieldNames(),
+                            dtype=object)
+
+    cols = [c for c in df.columns
+            if c in {*GROUP_COLS, "CALSTATE", "SWPVALID", "OBSMODE",
+                     "row_idx"}]
+    return (df.select(*cols)
+            .groupBy("obs_id")
+            .applyInPandas(run, schema=_RESULT_SCHEMA))
 
 
 def find_calibrations(df: DataFrame, channel_count: int | None = None,
                       header_obsmode: str = "track") -> DataFrame:
-    """O13/O14 over every observation stream at once.
+    """O13/O14 over every observation stream at once: (obs_id, IFNUM,
+    PLNUM, data_start_idx, post_cal_start_idx, off_start_idx), one
+    row per stream.
 
-    channel_count=None computes the reference's definition — the
-    PRODUCT len(unique IFNUM) * len(unique PLNUM) per obs
-    (continuum.py:26-28), which differs from the count of observed
-    (IFNUM, PLNUM) pairs when stream combinations are missing — with
-    one tiny aggregate; the result joins back by obs_id (broadcast).
+    One groupBy(obs_id).applyInPandas runs segment_observation on each
+    observation, so channel_count=None is counted inside the group.
     """
-    df = _with_channel_count(df, channel_count)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("row_idx")
-        ds, pc, off = find_calibration_indices(
-            pdf["CALSTATE"].to_numpy(),
-            pdf["SWPVALID"].to_numpy(),
-            pdf["OBSMODE"].tolist() if "OBSMODE" in pdf else [""] * len(pdf),
-            header_obsmode,
-            int(pdf["_cc"].iloc[0]),
-        )
-        return pd.DataFrame([{
-            "obs_id": pdf["obs_id"].iloc[0],
-            "IFNUM": pdf["IFNUM"].iloc[0],
-            "PLNUM": pdf["PLNUM"].iloc[0],
-            "data_start_idx": ds,
-            "post_cal_start_idx": pc,
-            "off_start_idx": off,
-        }])
-
-    cols = [c for c in df.columns
-            if c in {*GROUP_COLS, "CALSTATE", "SWPVALID", "OBSMODE",
-                     "row_idx", "_cc"}]
-    return (df.select(*cols)
-            .groupBy(*GROUP_COLS)
-            .applyInPandas(run, schema=_RESULT_SCHEMA))
-
-
-def _with_channel_count(df: DataFrame, channel_count: int | None) -> DataFrame:
-    """Attach the reference's channel_count (product of distinct IFNUM
-    and PLNUM counts per obs, continuum.py:26-28) as `_cc`."""
-    if channel_count is None:
-        counts = (df.groupBy("obs_id")
-                  .agg((F.countDistinct("IFNUM") *
-                        F.countDistinct("PLNUM")).alias("_cc")))
-        return df.join(counts, "obs_id")
-    return df.withColumn("_cc", F.lit(channel_count))
+    return _stream_indices(df, channel_count, header_obsmode) \
+        .drop("_eligible")
 
 
 def find_calibrations_compiled(df: DataFrame,
                                channel_count: int | None = None,
                                header_obsmode: str = "track") -> DataFrame:
-    """O13/O14 compiled to pure window functions — NO Python stage.
-
-    The general state machine is not window-compilable: the
-    false-start discard (utils.py:166-173) resets ``data_start`` and
-    restarts the search, so the accepted segment depends on a
-    data-dependent number of restarts — an iterated fold, not a fixed
-    window composition. But on streams where the discard can never
-    fire (the overwhelmingly common clean-observation case), every
-    state collapses to a window expression:
-
-    - cal_started  = running max of CALSTATE;
-    - data_start   = min pos with cal_started & CALSTATE=0 & SWPVALID=1;
-    - break pos    = min pos >= data_start with SWPVALID=0 & CALSTATE=1;
-    - post_cal     = start of the SWPVALID=0 run containing the break
-      (or the trailing run when no break), if that run has >= 2 rows
-      by then — gaps-and-islands via a running max over non-zero rows;
-    - off_start    = min pos whose OBSMODE contains 'onoff:off'.
-
-    Output adds `_eligible`: false when the stream has no pre-cal
-    spike (the reference's rescan fallback path) or when any
-    SWPVALID=0 row at pos in [data_start, break] sees a science-row
-    count <= 3*channel_count — exactly the rows where the Python
-    machine's discard counter (and hence a restart) can fire. Callers
-    route ineligible streams to `find_calibrations` (the oracle);
-    `find_calibrations_hybrid` does precisely that.
-
-    Scale: one shuffle keyed by the observation stream; every window
-    below shares that partitioning, so the whole operator adds zero
-    exchanges over the applyInPandas form while staying entirely
-    JVM-side (plan pinned by tests/test_plans_explain.py).
-    """
-    from pyspark.sql import Window
-
-    w_ord = Window.partitionBy(*GROUP_COLS).orderBy("row_idx")
-    w_all = Window.partitionBy(*GROUP_COLS)
-
-    df = _with_channel_count(df, channel_count)
-    cal = F.col("CALSTATE")
-    swp = F.col("SWPVALID")
-
-    staged = (
-        df.withColumn("_pos", F.row_number().over(w_ord) - 1)
-        .withColumn("_cal_started", F.max(cal).over(w_ord))
-        .withColumn("_n", F.count(F.lit(1)).over(w_all))
-        # start of the current SWPVALID=0 run (zero rows only)
-        .withColumn("_last_valid",
-                    F.max(F.when(swp != 0, F.col("_pos"))).over(w_ord))
-        .withColumn("_run_start",
-                    F.when(swp == 0,
-                           F.coalesce(F.col("_last_valid") + 1, F.lit(0))))
-    )
-    staged = staged.withColumn(
-        "_ds",
-        F.min(F.when((F.col("_cal_started") == 1) & (cal == 0) & (swp == 1),
-                     F.col("_pos"))).over(w_all))
-    staged = staged.withColumn(
-        "_brk",
-        F.min(F.when((F.col("_pos") >= F.col("_ds")) & (swp == 0)
-                     & (cal == 1), F.col("_pos"))).over(w_all))
-    staged = (
-        staged
-        .withColumn(
-            "_sci_cnt",
-            F.sum(F.when((F.col("_pos") >= F.col("_ds")) & (cal == 0)
-                         & (swp == 1), 1).otherwise(0)).over(w_ord))
-        .withColumn("_end", F.coalesce(F.col("_brk"), F.col("_n") - 1))
-    )
-    staged = (
-        staged
-        .withColumn(
-            "_discard_here",
-            ((F.col("_pos") >= F.col("_ds"))
-             & (F.col("_pos") <= F.col("_end")) & (swp == 0)
-             & (F.col("_sci_cnt") <= 3 * F.col("_cc"))).cast("int"))
-        .withColumn(
-            "_pc_raw",
-            F.max(F.when((F.col("_pos") == F.col("_end")) & (swp == 0)
-                         & (F.col("_pos") > F.col("_run_start")),
-                         F.col("_run_start"))).over(w_all))
-    )
-    off = (F.min(F.when(F.col("OBSMODE").contains("onoff:off"),
-                        F.col("_pos"))).over(w_all)
-           if header_obsmode == "onoff" else F.lit(None).cast("int"))
-    staged = staged.withColumn("_off", off)
-
-    return (
-        staged.groupBy(*GROUP_COLS)
-        .agg(
-            F.first("_ds").cast("int").alias("data_start_idx"),
-            F.coalesce(F.first("_pc_raw"), F.first("_n") - 1)
-             .cast("int").alias("post_cal_start_idx"),
-            F.first("_off").cast("int").alias("off_start_idx"),
-            ((F.first("_ds").isNotNull())
-             & (F.max("_discard_here") == 0)).alias("_eligible"),
-        )
-    )
+    """find_calibrations plus the per-stream `_eligible` flag (see
+    _stream_indices): the streams that a window-only form could
+    segment. Kept for the benchmark's layer trace, which counts the
+    ineligible streams."""
+    return _stream_indices(df, channel_count, header_obsmode)
 
 
 def find_calibrations_hybrid(df: DataFrame,
                              channel_count: int | None = None,
                              header_obsmode: str = "track") -> DataFrame:
-    """O13 at scale: window-compiled fast path for every stream where
-    the discard counter cannot fire, per-stream fallback to the
-    applyInPandas state machine for the rest (no-spike rescans and
-    false-start patterns). Equivalence to the pure Python machine is
-    pinned by tests/test_segmentation.py across both regimes.
-
-    No longer on the corpus path: continuum_pipeline_distributed runs
-    find_calibration_indices inside its per-observation kernel and
-    spectrum_pipeline_distributed takes the off transition from a
-    window. Kept as the reference of the fused-vs-operators test in
-    tests/test_radio_pipeline.py and of the benchmark's layer trace.
-
-    The fallback join is keyed on the stream id the segmentation
-    shuffle already established, and the Python stage sees ONLY the
-    ineligible streams — on a clean 100 TB corpus that is ~zero rows.
-
-    Adaptive short-circuit: the compiled result (ONE row per stream) is
-    localCheckpoint'ed and the ineligible-stream count read from it —
-    one bounded driver action, same accepted pattern as
-    connected_components' convergence check. When every stream is
-    eligible (the common case) the Python branch is dropped from the
-    plan entirely instead of scheduling an empty applyInPandas stage +
-    a second scan. The checkpoint blocks are released by the
-    ContextCleaner when the result is garbage-collected.
-    """
-    compiled = find_calibrations_compiled(
-        df, channel_count, header_obsmode).localCheckpoint(eager=True)
-    fast = (compiled.filter(F.col("_eligible"))
-            .select("obs_id", "IFNUM", "PLNUM", "data_start_idx",
-                    "post_cal_start_idx", "off_start_idx"))
-    slow_keys = compiled.filter(~F.col("_eligible")) \
-        .select(*GROUP_COLS)
-    if slow_keys.limit(1).count() == 0:
-        return fast
-    slow = find_calibrations(
-        df.join(slow_keys, GROUP_COLS, "left_semi"),
-        channel_count=channel_count, header_obsmode=header_obsmode)
-    return fast.unionByName(slow)
+    """find_calibrations under the name the benchmark's layer trace
+    and the fused-vs-operators test use."""
+    return find_calibrations(df, channel_count, header_obsmode)
 
 
 def label_segments(df: DataFrame, indices: DataFrame) -> DataFrame:

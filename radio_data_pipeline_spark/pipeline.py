@@ -40,20 +40,18 @@ from radio_data_pipeline_spark.operators.filters import (
 from radio_data_pipeline_spark.operators.header import ObservationHeader
 from radio_data_pipeline_spark.operators.integrate import integrate_continuum
 from radio_data_pipeline_spark.operators.segmentation import (
-    find_calibration_indices,
+    segment_observation,
 )
 
 
-def _reduce_stream_continuum(s: pd.DataFrame, header_obsmode: str,
-                             channel_count: int) -> pd.DataFrame:
+def _reduce_stream_continuum(s: pd.DataFrame, data_start: int,
+                             post_cal: int) -> pd.DataFrame:
     """One stream's gain-calibrated science continuum, rows in file
-    order: segmentation (O13/O15) -> per-(segment, CALSTATE) robust
-    fits of the SWPVALID==0 cal rows (M2-M4) -> calibration heights
-    (M5) -> gain division (M6)."""
+    order, from its segmentation indices (O13/O15): per-(segment,
+    CALSTATE) robust fits of the SWPVALID==0 cal rows (M2-M4) ->
+    calibration heights (M5) -> gain division (M6)."""
     cal = s["CALSTATE"].to_numpy()
     swp = s["SWPVALID"].to_numpy()
-    data_start, post_cal, _off = find_calibration_indices(
-        cal, swp, s["OBSMODE"].tolist(), header_obsmode, channel_count)
     pos = np.arange(len(s))
     t = s["t"].to_numpy(dtype=float)
     y = s["intensity"].to_numpy(dtype=float)
@@ -101,11 +99,10 @@ def continuum_pipeline_distributed(df: DataFrame,
                            for c in (*STREAM_COLS, "t", "intensity")])
 
     def per_observation(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([*STREAM_COLS, "row_idx"])
-        channel_count = pdf["IFNUM"].nunique() * pdf["PLNUM"].nunique()
         return pd.concat(
-            [_reduce_stream_continuum(s, header_obsmode, channel_count)
-             for _, s in pdf.groupby(["IFNUM", "PLNUM"], sort=False)],
+            [_reduce_stream_continuum(s, data_start, post_cal)
+             for s, (data_start, post_cal, _off)
+             in segment_observation(pdf, header_obsmode)],
             ignore_index=True)
 
     return rows.groupBy("obs_id").applyInPandas(per_observation, schema)

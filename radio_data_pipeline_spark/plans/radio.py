@@ -84,11 +84,12 @@ def _corpus(spark: SparkSession) -> DataFrame:
         ["obs_id", "IFNUM", "PLNUM"]),
     doc="Calibration-segment detection (reference utils.py:126-214) "
         "over the committed 4-observation x 4-stream corpus fixture: "
-        "the applyInPandas state machine keyed on the observation "
-        "stream. The oracle pins the exact per-stream indices "
-        "(VALUES; the machine is sequential, not SQL-expressible); "
-        "independent correctness comes from the Hypothesis "
-        "equivalence battery (batch == incremental == compiled).",
+        "the NumPy state machine, run once per observation by one "
+        "applyInPandas keyed on obs_id. The oracle pins the exact "
+        "per-stream indices (VALUES; the machine is sequential, not "
+        "SQL-expressible); independent correctness comes from the "
+        "hand-built golden patterns and the seeded random battery of "
+        "multi-stream observations in tests/test_segmentation.py.",
     tags=("radio", "mapInPandas", "stateful"),
 )
 def radio_segmentation_indices(spark: SparkSession, sf_dir: str) -> DataFrame:

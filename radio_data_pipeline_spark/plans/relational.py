@@ -17,6 +17,7 @@ Scale notes are attached per query; the common themes:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1197,10 +1198,8 @@ def events_lgamma_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (0.9189385332046727  # 0.5*ln(2*pi)
                 + (xp + 0.5) * np.log(t) - t + np.log(a))
 
-    # note: no type hints — this module uses `from __future__ import
-    # annotations`, which stringifies them so pyspark cannot resolve
-    # the locally-imported pd name; the explicit ser->ser form below
-    # is hint-free
+    # note: no type hints — a hint-free pandas_udf is a scalar
+    # Series -> Series UDF
     def _lgamma(v):
         return pd.Series(_gammaln(v.to_numpy(dtype=np.float64) + 1.0))
 
@@ -1476,10 +1475,9 @@ def user_event_type_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_udaf_iqr_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    def _iqr(v):
+    def _iqr(v: pd.Series) -> float:
         # BOTH SQL NULL and genuine float NaN arrive as NaN in the
         # Arrow->numpy cast (indistinguishable here), so the
         # operator's definition is "IQR over finite values": drop
@@ -1492,15 +1490,16 @@ def events_udaf_iqr_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             return None  # all-NULL group: quantile_cont yields NULL
         return float(np.percentile(a, 75) - np.percentile(a, 25))
 
-    def _n(v):
+    def _n(v: pd.Series) -> int:
         return len(v)
 
     # Spark refuses to mix a GROUPED_AGG pandas UDF with JVM
     # aggregates in one Aggregate node, so the row count is a second
-    # pandas aggregate rather than count(1)
-    from pyspark.sql.functions import PandasUDFType
-    iqr_udf = pandas_udf(_iqr, "double", PandasUDFType.GROUPED_AGG)
-    n_udf = pandas_udf(_n, "long", PandasUDFType.GROUPED_AGG)
+    # pandas aggregate rather than count(1). The Series -> scalar
+    # type hints make both GROUPED_AGG UDFs; they resolve through the
+    # module-level pandas import
+    iqr_udf = pandas_udf(_iqr, "double")
+    n_udf = pandas_udf(_n, "long")
 
     ev = _t(spark, sf_dir, "events")
     return (
