@@ -20,7 +20,8 @@ def array_sum(col: Column) -> Column:
 
 
 def integrate_continuum(df: DataFrame, epoch_ts: str | None = None,
-                        keep_cols: list[str] | None = None) -> DataFrame:
+                        keep_cols: list[str | Column] | None = None,
+                        ) -> DataFrame:
     """Reference A1 (utils.py:105-118, mode 'continuum'): per row,
     t = DATE_OBS - header.DATE in seconds and intensity = sum(DATA).
 

@@ -13,9 +13,14 @@ with no driver round-trip:
   Spectrum(...).spectrum() (spectrum.py:46-71).
 
 ``reduce_observation`` is the one-observation form (main.py:20-47):
-the same two kernels on one validated file, with the time and
-frequency crops applied before them and one stream selected after;
-``reduce_sdfits`` reads and validates the file first.
+the time and frequency crops as Spark predicates, then ONE
+mapInPandas over the observation's single partition that runs the
+same continuum body and the spectrum as a NumPy column sum, collected
+once — one Spark job and no shuffle. ``reduce_sdfits`` reads the
+header on the driver from the file's leading blocks and validates the
+file first. A NumPy spectrum behind the corpus form's groupBy shuffle
+is measured slower than the posexplode (ROADMAP item 1), so the
+spectrum's form follows the entry point.
 """
 
 from __future__ import annotations
@@ -70,6 +75,41 @@ def _reduce_stream_continuum(s: pd.DataFrame, data_start: int,
         intensity=gain_calibrate(t[science], y[science], *heights))
 
 
+def _spectrum_sum(s: pd.DataFrame, off_start: int | None) -> np.ndarray:
+    """One stream's spectrum (A2/M7) in NumPy: the channel sum of the
+    rows that carry DATA, rows at or after off_start (positional, as
+    spectrum_pipeline_distributed) negated. A NULL element counts as
+    nothing and a channel NULL in every row sums to NaN (NULL); no row
+    with DATA gives no channels."""
+    data = s["DATA"].to_numpy()
+    has = s["DATA"].notna().to_numpy()
+    if not has.any():
+        return np.empty(0)
+    sign = np.ones(len(s))
+    if off_start is not None:
+        sign[off_start:] = -1.0
+    values = np.vstack(data[has]) * sign[has, None]
+    total = np.nansum(values, axis=0)
+    total[np.isnan(values).all(axis=0)] = np.nan
+    return total
+
+
+def _per_observation(pdf: pd.DataFrame, header_obsmode: str,
+                     spectrum_stream: tuple[int, int] | None = None,
+                     ) -> tuple[pd.DataFrame, np.ndarray | None]:
+    """One observation's integrated rows -> (the gain-calibrated
+    continuum of every stream, the spectrum of `spectrum_stream` or
+    None): one segmentation pass serves both. The body of the corpus
+    continuum kernel and of reduce_observation's kernel."""
+    continua, spectrum = [], None
+    for s, (data_start, post_cal, off) in segment_observation(
+            pdf, header_obsmode):
+        continua.append(_reduce_stream_continuum(s, data_start, post_cal))
+        if (s["IFNUM"].iloc[0], s["PLNUM"].iloc[0]) == spectrum_stream:
+            spectrum = _spectrum_sum(s, off)
+    return pd.concat(continua, ignore_index=True), spectrum
+
+
 def continuum_pipeline_distributed(df: DataFrame,
                                    header_obsmode: str = "track",
                                    ) -> DataFrame:
@@ -97,15 +137,8 @@ def continuum_pipeline_distributed(df: DataFrame,
                        "OBSMODE"])
     schema = T.StructType([rows.schema[c]
                            for c in (*STREAM_COLS, "t", "intensity")])
-
-    def per_observation(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.concat(
-            [_reduce_stream_continuum(s, data_start, post_cal)
-             for s, (data_start, post_cal, _off)
-             in segment_observation(pdf, header_obsmode)],
-            ignore_index=True)
-
-    return rows.groupBy("obs_id").applyInPandas(per_observation, schema)
+    return rows.groupBy("obs_id").applyInPandas(
+        lambda pdf: _per_observation(pdf, header_obsmode)[0], schema)
 
 
 def spectrum_pipeline_distributed(df: DataFrame,
@@ -147,17 +180,27 @@ def reduce_observation(validated: DataFrame, header: ObservationHeader,
                        include_freq=None, exclude_freq=None,
                        ) -> dict[str, DataFrame]:
     """One validated observation -> {"continuum", "spectrum"} for the
-    (ifnum, plnum) stream, both lazy, no driver round-trip.
+    (ifnum, plnum) stream, computed by ONE Spark job at call time and
+    returned as small local DataFrames.
 
     The time (F3) and frequency (F4) crops apply to every stream of
-    the file before either kernel. The continuum kernel runs over all
-    streams, so channel_count stays the file's distinct-IFNUM x
-    distinct-PLNUM product (continuum.py:24-28), and the stream is
-    selected (F1) after it: (obs_id, t, intensity) with t in seconds
-    since the header DATE. The spectrum is (pos, frequency,
-    intensity), ordered by pos; in onoff mode rows at or after the
-    stream's first 'onoff:off' row count as OFF (spectrum.py:64-65),
-    and a channel with no non-NULL value sums to NULL.
+    the file before the kernel. The continuum runs over all streams,
+    so channel_count stays the file's distinct-IFNUM x distinct-PLNUM
+    product (continuum.py:24-28), and the stream is selected (F1)
+    after it: (obs_id, t, intensity) with t in seconds since the
+    header DATE. The spectrum is (pos, frequency, intensity), ordered
+    by pos; in onoff mode rows at or after the stream's first
+    'onoff:off' row count as OFF (spectrum.py:64-65), and a channel
+    with no non-NULL value sums to NULL.
+
+    Shape: one select carries the narrow stream columns, t and the
+    channel sum (integrate_continuum's expressions), the header epoch
+    t0 as a constant column, and DATA only on the selected stream's
+    CALSTATE=0 & SWPVALID=0 rows, so Arrow moves only the vectors the
+    spectrum sums. coalesce(1) puts the observation in one task
+    without a shuffle, and one mapInPandas runs _per_observation
+    on it, one output row per obs_id. The products are collected once
+    because a lazy form would re-run the decode for each of them.
     """
     data = validated
     if include_time or exclude_time:
@@ -166,25 +209,48 @@ def reduce_observation(validated: DataFrame, header: ObservationHeader,
     if include_freq or exclude_freq:
         data, freqs = filter_frequency_ranges(data, freqs, include_freq,
                                               exclude_freq)
-    stream = (F.col("IFNUM") == ifnum) & (F.col("PLNUM") == plnum)
-    t0 = F.lit(header.date).cast("timestamp").cast("double")
-    continuum = (continuum_pipeline_distributed(data, header.obsmode)
-                 .filter(stream)
-                 .select("obs_id", (F.col("t") - t0).alias("t"),
-                         "intensity"))
-    # frequency axis as a broadcast (pos, frequency) join, NOT an
-    # N-channel literal array expression: at HIRES widths (16k+
-    # channels) a literal F.array(...) is a giant expression tree —
-    # the measured codegen-blowup failure mode (BENCH_SCALING.md §4).
-    freq_df = validated.sparkSession.createDataFrame(
-        [(i, float(f)) for i, f in enumerate(freqs)],
-        "pos int, frequency double")
-    spectrum = (spectrum_pipeline_distributed(data.filter(stream),
-                                              header.obsmode)
-                .join(F.broadcast(freq_df), "pos")
-                .select("pos", "frequency", "intensity")
-                .orderBy("pos"))
-    return {"continuum": continuum, "spectrum": spectrum}
+    spectrum_rows = ((F.col("IFNUM") == ifnum) & (F.col("PLNUM") == plnum)
+                     & (F.col("CALSTATE") == 0) & (F.col("SWPVALID") == 0))
+    rows = integrate_continuum(data, keep_cols=[
+        *STREAM_COLS, "row_idx", "CALSTATE", "SWPVALID", "OBSMODE",
+        F.lit(header.date).cast("timestamp").cast("double").alias("t0"),
+        F.when(spectrum_rows, F.col("DATA")).alias("DATA")])
+
+    def kernel(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        for obs_id, obs in pd.concat(batches).groupby("obs_id"):
+            cont, spectrum = _per_observation(obs, header.obsmode,
+                                              (ifnum, plnum))
+            cont = cont[(cont["IFNUM"] == ifnum) & (cont["PLNUM"] == plnum)]
+            yield pd.DataFrame({
+                "obs_id": [obs_id],
+                "t": [cont["t"].to_numpy() - obs["t0"].iloc[0]],
+                "intensity": [cont["intensity"].to_numpy()],
+                "spectrum": [np.empty(0) if spectrum is None
+                             else spectrum[:len(freqs)]]})
+
+    out = (rows.coalesce(1)
+           .mapInPandas(kernel, "obs_id long, t array<double>, "
+                        "intensity array<double>, spectrum array<double>")
+           .collect())
+    continuum = pd.DataFrame(
+        [(r["obs_id"], t, y) for r in out
+         for t, y in zip(r["t"], r["intensity"])],
+        columns=["obs_id", "t", "intensity"])
+    spectrum = pd.DataFrame(
+        [(pos, freqs[pos], y) for r in out
+         for pos, y in enumerate(r["spectrum"])],
+        columns=["pos", "frequency", "intensity"]
+    ).sort_values("pos", kind="stable")
+    spark = validated.sparkSession
+    return {
+        "continuum": spark.createDataFrame(
+            continuum, "obs_id long, t double, intensity double"),
+        "spectrum": spark.createDataFrame(
+            spectrum, "pos int, frequency double, intensity double"),
+    }
 
 
 def reduce_sdfits(spark, path: str, ifnum: int = 0, plnum: int = 0,
@@ -192,34 +258,29 @@ def reduce_sdfits(spark, path: str, ifnum: int = 0, plnum: int = 0,
                   include_freq=None, exclude_freq=None,
                   ) -> dict[str, DataFrame]:
     """The reference's full entry point (main.py:20-47) for one SDFITS
-    file: header pass -> scan (S1/S2) -> validation ->
+    file: header read -> scan (S1/S2) -> validation ->
     reduce_observation.
 
-    Returns {"validated": ..., "continuum": ..., "spectrum": ...}, all
-    lazy; the header pass is the one eager step. `path` must
-    match exactly one file (ValueError otherwise): the products are
-    one observation's, like the reference — reduce a corpus with
-    continuum_pipeline_distributed / spectrum_pipeline_distributed.
-    channel_count (the false-start threshold) is counted after the
-    time crop, so it differs from the whole file's only when the crop
-    removes every row of some IFNUM or PLNUM value."""
+    Returns {"validated": ..., "continuum": ..., "spectrum": ...}:
+    one Spark job at call time computes the two products, and
+    validated stays lazy. The header is read on the driver from the
+    file's leading blocks (read_sdfits_header), with no Spark job.
+    `path` must match exactly one file (ValueError otherwise): the
+    products are one observation's, like the reference — reduce a
+    corpus with continuum_pipeline_distributed /
+    spectrum_pipeline_distributed. channel_count (the false-start
+    threshold) is counted after the time crop, so it differs from the
+    whole file's only when the crop removes every row of some IFNUM or
+    PLNUM value."""
     from radio_data_pipeline_spark.operators.validation import (
         validate_observation,
     )
     from radio_data_pipeline_spark.sources.fits import (
         read_sdfits,
-        read_sdfits_headers,
+        read_sdfits_header,
     )
-    import json
 
-    hdr_rows = read_sdfits_headers(spark, path).collect()
-    if len(hdr_rows) != 1:
-        raise ValueError(f"reduce_sdfits reduces one SDFITS file; "
-                         f"{path!r} matched {len(hdr_rows)}")
-    header = ObservationHeader.from_fits(
-        json.loads(hdr_rows[0]["header_json"]),
-        json.loads(hdr_rows[0]["history_json"]))
-
+    header = ObservationHeader.from_fits(*read_sdfits_header(spark, path))
     raw = read_sdfits(spark, path)
     validated = validate_observation(raw, channel_window=header.channel_window)
     return {"validated": validated,

@@ -21,7 +21,8 @@ in a Python stream source that plans one partition per new file — so
 there is no driver bottleneck and a 100 TB corpus of observations
 parallelizes by file. Both give a file the same rows, path, obs_id and
 corruption verdict. The decoded header travels as one JSON string per
-file (a few KB), not as per-row columns.
+file (a few KB), not as per-row columns; read_sdfits_header reads one
+file's header on the driver from its leading blocks, with no Spark job.
 """
 
 from __future__ import annotations
@@ -585,15 +586,36 @@ def _is_permissive(mode: str) -> bool:
     return mode.lower() == "permissive"
 
 
+def _list_files(spark, path_glob: str, permissive: bool):
+    """(fs, matched, files, empty) for a path or glob, from one Hadoop
+    globStatus: the qualified paths the glob matches, the FileStatus of
+    every file a binaryFile scan of them reads (a matched file, or the
+    files one directory level down: binaryFile's non-recursive
+    default), and the sorted qualified paths of the 0-byte ones.
+    Metadata only, the same class of work InMemoryFileIndex does to
+    plan the scan. failfast raises _zero_length_error for a 0-byte
+    file here, at planning time."""
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path_glob)
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    matched, files = [], []
+    for s in (fs.globStatus(jpath) or []):
+        matched.append(fs.makeQualified(s.getPath()).toString())
+        found = fs.listStatus(s.getPath()) if s.isDirectory() else [s]
+        files += [c for c in found if c.isFile()]
+    empty = sorted(fs.makeQualified(c.getPath()).toString()
+                   for c in files if c.getLen() == 0)
+    if empty and not permissive:
+        raise _zero_length_error(empty)
+    return fs, matched, files, empty
+
+
 def _binary_files(spark, path_glob: str, permissive: bool):
     """(path, content) of every file the glob matches, for the decode.
 
-    One Hadoop globStatus lists the matched paths and, one directory
-    level down (binaryFile's non-recursive default), their 0-byte
-    files — metadata only, the same class of work InMemoryFileIndex
-    does to plan the scan. binaryFile then loads the matched paths,
-    not the pattern: Spark's metadata-directory probe stats a single
-    load path literally, and on a glob that logs a WARN with a
+    binaryFile loads the matched paths of _list_files, not the
+    pattern: Spark's metadata-directory probe stats a single load path
+    literally, and on a glob that logs a WARN with a
     FileNotFoundException stack trace on every call. A pattern that
     matches nothing is loaded as given, so it raises Spark's
     path-not-found error.
@@ -603,18 +625,8 @@ def _binary_files(spark, path_glob: str, permissive: bool):
     silently vanish from the scan in both modes. failfast raises at
     planning time; permissive feeds each such file to the decode as
     b'' so it becomes the same tombstone a corrupt file gets."""
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path_glob)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    matched, empty_paths = [], []
-    for s in (fs.globStatus(jpath) or []):
-        matched.append(fs.makeQualified(s.getPath()).toString())
-        files = fs.listStatus(s.getPath()) if s.isDirectory() else [s]
-        empty_paths += [fs.makeQualified(c.getPath()).toString()
-                        for c in files if c.isFile() and c.getLen() == 0]
-    empty_paths.sort()
-    if empty_paths and not permissive:
-        raise _zero_length_error(empty_paths)
+    _fs, matched, _files, empty_paths = _list_files(spark, path_glob,
+                                                    permissive)
     files = spark.read.format("binaryFile").load(matched or path_glob) \
         .select("path", "content")
     if empty_paths:
@@ -809,3 +821,37 @@ def read_sdfits_headers(spark, path_glob: str):
 
     return _binary_files(spark, path_glob, permissive=False) \
         .mapInPandas(decode, schema=schema)
+
+
+def read_sdfits_header(spark, path_glob: str) -> tuple[dict, list[str]]:
+    """The primary header and HISTORY of the one SDFITS file
+    `path_glob` matches (a file, or a directory holding one file), read
+    on the driver through the Hadoop FileSystem that lists it — no
+    Spark job.
+
+    Reads the file's leading 2880-byte blocks, doubling the read until
+    parse_sdfits_headers_only finds both END cards, so a normal file
+    costs a few KB however large its table is. A glob matching other
+    than one file raises ValueError; a 0-byte file raises the
+    failfast scan's zero-length error, and a file whose headers have no
+    END card the codec's own FitsFormatError, the same errors a
+    read_sdfits_headers scan raises."""
+    fs, _matched, files, _empty = _list_files(spark, path_glob,
+                                              permissive=False)
+    if len(files) != 1:
+        raise ValueError(f"expected one SDFITS file; {path_glob!r} "
+                         f"matched {len(files)}")
+    size = files[0].getLen()
+    stream = fs.open(files[0].getPath())
+    try:
+        buf = b""
+        while True:
+            chunk = bytes(stream.readNBytes(max(len(buf), BLOCK)))
+            buf += chunk
+            try:
+                return parse_sdfits_headers_only(buf)
+            except FitsFormatError:
+                if not chunk or len(buf) >= size:
+                    raise
+    finally:
+        stream.close()

@@ -216,9 +216,11 @@ def test_reduce_sdfits_rejects_multi_file_glob(spark, tmp_path):
 
 
 def test_reduce_sdfits_runs_in_few_spark_jobs(spark, tmp_path):
-    # one 4-stream file, both products collected: a reintroduced
-    # driver round-trip (count, fit collect, eager checkpoint) adds
-    # jobs here
+    # one 4-stream file, both products collected: the call runs the
+    # one kernel job (the header is read on the driver) and each
+    # product's collect one job of its local table; a reintroduced
+    # driver round-trip (header scan, count, fit collect, eager
+    # checkpoint) or a lazy product that re-decodes adds jobs here
     from radio_data_pipeline_spark.pipeline import reduce_sdfits
     spec = ObsSpec(obs_id=0, n_science=24)
     pdf = pd.concat([make_observation(spec, i, p)
@@ -233,13 +235,58 @@ def test_reduce_sdfits_runs_in_few_spark_jobs(spark, tmp_path):
     sc.setJobGroup(group, group)
     try:
         products = reduce_sdfits(spark, path)
+        call_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         cont = products["continuum"].toPandas()
         spect = products["spectrum"].toPandas()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(cont) == spec.n_science and len(spect) == 64
+    assert call_jobs == 1, f"{call_jobs} Spark jobs inside reduce_sdfits"
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 8, f"{len(jobs)} Spark jobs for one file"
+    assert len(jobs) <= 3, f"{len(jobs)} Spark jobs for one file"
+
+
+def test_reduce_sdfits_header_read_errors_start_no_spark_job(spark,
+                                                             tmp_path):
+    # the header is read on the driver: a 0-byte file and an END-less
+    # file fail before any Spark job, with the errors the header scan
+    # raised; a directory holding one file reduces like the file
+    from radio_data_pipeline_spark.pipeline import reduce_sdfits
+    from radio_data_pipeline_spark.sources.fits import (
+        _zero_length_error,
+        parse_sdfits_headers_only,
+    )
+    good = write_sdfits(_obs_pdf(n_science=12), HEADER, HISTORY)
+    (tmp_path / "empty.fits").write_bytes(b"")
+    corrupt = corrupt_drop_end(good)
+    (tmp_path / "corrupt.fits").write_bytes(corrupt)
+    with pytest.raises(FitsFormatError) as codec:
+        parse_sdfits_headers_only(corrupt)
+    sc = spark.sparkContext
+    cases = {"empty.fits": str(_zero_length_error(
+                 [f"file:{tmp_path / 'empty.fits'}"])),
+             "corrupt.fits": str(codec.value)}
+    for name, message in cases.items():
+        group = f"header-read-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(FitsFormatError) as err:
+                reduce_sdfits(spark, str(tmp_path / name))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert str(err.value) == message
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    (tmp_path / "one").mkdir()
+    (tmp_path / "one" / "obs.fits").write_bytes(good)
+    by_file = reduce_sdfits(spark, str(tmp_path / "one" / "obs.fits"))
+    by_dir = reduce_sdfits(spark, str(tmp_path / "one"))
+    for product in ("continuum", "spectrum"):
+        pd.testing.assert_frame_equal(by_dir[product].toPandas(),
+                                      by_file[product].toPandas())
+    assert len(by_file["continuum"].toPandas()) == 12
+    assert sorted(by_dir["validated"].collect()) == \
+        sorted(by_file["validated"].collect())
 
 
 def test_logical_column_decodes_ascii_tf():
