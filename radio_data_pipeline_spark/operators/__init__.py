@@ -28,6 +28,5 @@ from radio_data_pipeline_spark.operators.calibration import (  # noqa: F401
 )
 from radio_data_pipeline_spark.operators.atmosphere import (  # noqa: F401
     buck_vapor_density_expr,
-    transmission_udf,
     apply_atmosphere_correction,
 )

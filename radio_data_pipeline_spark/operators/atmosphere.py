@@ -3,12 +3,15 @@
 
 Pipeline: per-row weather -> water-vapor density (Buck equation) ->
 ITU-R P.676 gaseous attenuation over the frequency axis -> element-wise
-division via zip_with. A pandas UDF computes the density and the
-rows x channels transmission of each Arrow batch as NumPy broadcasts
-(weather as column vectors against the frequency axis).
-``buck_vapor_density_expr`` is the same Buck equation as a column
-expression. Everything is per-row independent, so the whole stage is
-shuffle-free and scales embarrassingly.
+division of DATA. All three steps are one NumPy body
+(correct_data_arrow) that one Arrow UDF runs per batch: the batch's
+weather enters as (rows, 1) columns against the frequency axis, so the
+rows x channels transmission is one broadcast, and the list array's
+flat DATA values are divided by it, indexed by (row, position). DATA
+crosses the Python boundary as Arrow buffers both ways, never as
+per-row Python lists. ``buck_vapor_density_expr`` is the same Buck
+equation as a column expression. Everything is per-row independent, so
+the whole stage is shuffle-free and scales embarrassingly.
 
 The reference calls the `itur` library (atmosphere_correction.py:47-57);
 the UDF always computes the PUBLISHED simplified gaseous-attenuation
@@ -24,7 +27,7 @@ installed, test_optional_extras compares the kernel against it.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -137,52 +140,88 @@ def p676_slant_attenuation(f_ghz, elev_deg, rho, pressure_hpa, temp_k):
     return zenith * airmass
 
 
-def transmission_udf(frequencies_ghz: list[float]):
-    """Build a pandas UDF computing the per-row atmospheric
-    transmission vector 10^(-A/10) over the frequency axis — reference
-    M9 (atmosphere_correction.py:47-57).
+def transmission(freqs_ghz: np.ndarray, elev_deg, tambient_c,
+                 pressure_hpa, humidity_pct) -> np.ndarray:
+    """The atmospheric transmission 10^(-A/10) over the frequency axis
+    — reference M9 (atmosphere_correction.py:47-57). The weather
+    arguments are scalars or (rows, 1) columns, which give a rows x
+    channels result."""
+    t_k = tambient_c + 273.15
+    # reference's Buck-1981 coefficients (see buck_vapor_density_expr);
+    # above-freezing branch only, because validation drops rows with a
+    # negative TAMBIENT
+    e_s = (1.0007 + 3.46e-6) * 6.1121 * np.exp(
+        17.502 * tambient_c / (tambient_c + 240.97))
+    rho = 216.7 * ((humidity_pct / 100.0) * e_s) / t_k
+    att = p676_slant_attenuation(freqs_ghz, elev_deg, rho, pressure_hpa, t_k)
+    return 10.0 ** (-att / 10.0)
 
-    Each Arrow batch is one p676_slant_attenuation call: the batch's
-    weather enters as (rows, 1) columns and the frequency axis (header
-    metadata, a closure constant) as (channels,), so the result is the
-    rows x channels transmission with no per-row Python loop."""
-    freqs_arr = np.asarray(frequencies_ghz, dtype=float)
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _transmission(elev_deg: pd.Series, tambient_c: pd.Series,
-                      pressure_hpa: pd.Series, humidity_pct: pd.Series,
-                      ) -> pd.Series:
-        elev, t_c, p, h = (s.to_numpy(dtype=float)[:, None] for s in
-                           (elev_deg, tambient_c, pressure_hpa,
-                            humidity_pct))
-        t_k = t_c + 273.15
-        # reference's Buck-1981 coefficients (see
-        # buck_vapor_density_expr); above-freezing branch only, because
-        # validation drops rows with a negative TAMBIENT
-        e_s = (1.0007 + 3.46e-6) * 6.1121 * np.exp(
-            17.502 * t_c / (t_c + 240.97))
-        rho = 216.7 * ((h / 100.0) * e_s) / t_k
-        att = p676_slant_attenuation(freqs_arr, elev, rho, p, t_k)
-        return pd.Series(list(10.0 ** (-att / 10.0)))
+def correct_data_arrow(data: pa.ListArray, elev_deg: pa.Array,
+                       tambient_c: pa.Array, pressure_hpa: pa.Array,
+                       humidity_pct: pa.Array,
+                       freqs_ghz: np.ndarray) -> pa.ListArray:
+    """Reference M10 (atmosphere_correction.py:59-86) on one Arrow
+    batch: each row's DATA divided element-wise by its transmission.
 
-    return _transmission
+    Element j of row i is divided by transmission[i, j], read from the
+    list array's offsets and flat values, so rows of any length and a
+    sliced batch (non-zero offset) work. A row's result has
+    max(len(row), channels) elements, as SQL zip_with gives: an
+    element with no channel or a channel with no element is NULL. A
+    NULL row stays NULL; a NULL element, and an element whose
+    transmission is NaN (NULL weather) or zero, is NULL; a NaN element
+    stays NaN."""
+    trans = transmission(freqs_ghz, *(
+        a.cast(pa.float64()).to_numpy(zero_copy_only=False)[:, None]
+        for a in (elev_deg, tambient_c, pressure_hpa, humidity_pct)))
+    n, channels = trans.shape
+    rows_valid = data.is_valid().to_numpy(zero_copy_only=False)
+    offsets = data.offsets.to_numpy().astype(np.int64)
+    lengths = np.diff(offsets)
+    out_offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.where(rows_valid, np.maximum(lengths, channels), 0),
+              out=out_offsets[1:])
+
+    # input element k of row i sits at position k - offsets[i]; its
+    # output index and its transmission's flat index are k plus a
+    # per-row shift
+    src = np.arange(offsets[0], offsets[-1])
+    dst = src + np.repeat(out_offsets[:-1] - offsets[:-1], lengths)
+    t_idx = src + np.repeat(np.arange(n) * channels - offsets[:-1], lengths)
+    if not rows_valid.all() or lengths.max(initial=0) > channels:
+        pos = src - np.repeat(offsets[:-1], lengths)
+        keep = np.repeat(rows_valid, lengths) & (pos < channels)
+        src, dst, t_idx = src[keep], dst[keep], t_idx[keep]
+
+    values = data.values
+    t = trans.reshape(-1)[t_idx]
+    ok = ~np.isnan(t) & (t != 0.0)
+    if values.null_count:
+        ok &= values.is_valid().to_numpy(zero_copy_only=False)[src]
+    out = np.full(out_offsets[-1], np.nan)
+    out_valid = np.zeros(out_offsets[-1], dtype=bool)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        out[dst] = values.to_numpy(zero_copy_only=False)[src] / t
+    out_valid[dst] = ok
+    return pa.ListArray.from_arrays(
+        pa.array(out_offsets, pa.int32()), pa.array(out, mask=~out_valid),
+        mask=pa.array(~rows_valid))
 
 
 def apply_atmosphere_correction(df: DataFrame,
                                 frequencies_mhz: list[float]) -> DataFrame:
     """Reference M10 (atmosphere_correction.py:59-86): DATA /=
-    transmission element-wise, per-row weather. Frequencies arrive in
-    MHz and are converted to GHz exactly as the reference does
-    (atmosphere_correction.py:68)."""
-    udf = transmission_udf([f / 1000.0 for f in frequencies_mhz])
-    with_t = df.withColumn(
-        "_transmission",
-        udf(F.col("ELEVATIO"), F.col("TAMBIENT"), F.col("PRESSURE"),
-            F.col("HUMIDITY")),
-    )
-    corrected = with_t.withColumn(
-        "DATA",
-        F.zip_with(F.col("DATA"), F.col("_transmission"),
-                   lambda d, t: d / t),
-    )
-    return corrected.drop("_transmission")
+    transmission element-wise, per-row weather, by correct_data_arrow
+    in one Arrow UDF. Frequencies arrive in MHz and are converted to
+    GHz exactly as the reference does (atmosphere_correction.py:68)."""
+    freqs_ghz = np.asarray(frequencies_mhz, dtype=float) / 1000.0
+
+    @F.arrow_udf(T.ArrayType(T.DoubleType()))
+    def _correct(data: pa.Array, elev: pa.Array, tambient: pa.Array,
+                 pressure: pa.Array, humidity: pa.Array) -> pa.Array:
+        return correct_data_arrow(data, elev, tambient, pressure, humidity,
+                                  freqs_ghz)
+
+    return df.withColumn("DATA", _correct(
+        "DATA", "ELEVATIO", "TAMBIENT", "PRESSURE", "HUMIDITY"))

@@ -66,13 +66,14 @@ def physical_filter(df: DataFrame, columns: list[str] | None = None) -> DataFram
     physical column is negative. The reference filters column-by-column
     sequentially and skips absent columns with a warning; here it is
     one conjunctive predicate over the intersection with the actual
-    schema, which Catalyst pushes into the scan."""
+    schema, which Catalyst pushes into the scan. The predicate is
+    built as one SQL string: one py4j call instead of several per
+    column."""
     columns = PHYSICAL_COLUMNS if columns is None else columns
-    present = [c for c in columns if c in df.columns]
-    pred = F.lit(True)
-    for c in present:
-        pred = pred & (F.col(c).isNull() | (F.col(c) >= 0))
-    return df.filter(pred)
+    present = set(df.columns)
+    return df.filter(F.expr(" AND ".join(
+        ["true"] + [f"(`{c}` IS NULL OR `{c}` >= 0)"
+                    for c in columns if c in present])))
 
 
 def valid_timestamp_flag(df: DataFrame) -> DataFrame:

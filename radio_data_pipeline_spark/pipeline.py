@@ -18,7 +18,10 @@ mapInPandas over the observation's single partition that runs the
 same continuum body and the spectrum as a NumPy column sum, collected
 once — one Spark job and no shuffle. ``reduce_sdfits`` reads the
 header on the driver from the file's leading blocks and validates the
-file first. A NumPy spectrum behind the corpus form's groupBy shuffle
+file first; its validated rows are a lazy local checkpoint that the
+kernel's job fills, so a later action on them (the atmosphere
+correction) reads those blocks instead of decoding the file again.
+A NumPy spectrum behind the corpus form's groupBy shuffle
 is measured slower than the posexplode (ROADMAP item 1), so the
 spectrum's form follows the entry point.
 """
@@ -263,7 +266,14 @@ def reduce_sdfits(spark, path: str, ifnum: int = 0, plnum: int = 0,
 
     Returns {"validated": ..., "continuum": ..., "spectrum": ...}:
     one Spark job at call time computes the two products, and
-    validated stays lazy. The header is read on the driver from the
+    validated stays lazy. validated is a localCheckpoint(eager=False)
+    of the validation, which starts no job of its own: the kernel's job
+    computes it and keeps its blocks on the executors, so a later
+    action on validated reads them and does not decode the file again.
+    The blocks are freed when validated is garbage collected. On a
+    cluster they live on one executor each, so if that executor is
+    lost a later use of validated fails (local checkpoints are not
+    recomputed). The header is read on the driver from the
     file's leading blocks (read_sdfits_header), with no Spark job.
     `path` must match exactly one file (ValueError otherwise): the
     products are one observation's, like the reference — reduce a
@@ -282,7 +292,8 @@ def reduce_sdfits(spark, path: str, ifnum: int = 0, plnum: int = 0,
 
     header = ObservationHeader.from_fits(*read_sdfits_header(spark, path))
     raw = read_sdfits(spark, path)
-    validated = validate_observation(raw, channel_window=header.channel_window)
+    validated = validate_observation(
+        raw, channel_window=header.channel_window).localCheckpoint(eager=False)
     return {"validated": validated,
             **reduce_observation(validated, header, ifnum, plnum,
                                  include_time, exclude_time,

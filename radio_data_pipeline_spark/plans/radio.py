@@ -198,8 +198,8 @@ def radio_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["obs_id", "IFNUM", "PLNUM"]),
     doc="Atmosphere correction M8-M10 (reference atmosphere_correction"
         ".py:59-86) over the corpus fixture: per-row Buck vapor "
-        "density -> attenuation model -> transmission array (Arrow "
-        "pandas UDF) -> element-wise gain division via zip_with. "
+        "density -> attenuation model -> transmission array -> "
+        "element-wise gain division, all in one Arrow UDF. "
         "Returns per-stream corrected/raw intensity ratios (> 1 since "
         "transmission < 1); the oracle pins the exact ratios (VALUES "
         "— the ITU-R attenuation model is iterative table math, not "

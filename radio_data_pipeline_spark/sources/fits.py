@@ -1,5 +1,5 @@
 """SDFITS ingest/egress without astropy: a minimal pure-NumPy FITS
-binary-table codec plus the Spark binaryFile -> mapInPandas source.
+binary-table codec plus the Spark binaryFile -> mapInArrow source.
 
 Reference parity (SURVEY.md §2.1): S1 FITS scan (validate.py:18-23 —
 fits.open into header + Table), S2 structural verify
@@ -16,17 +16,21 @@ strings). Big-endian row-major data as the standard requires.
 
 Scale design: one row decode (decode_sdfits) serves both Spark
 readers, executor-side and one task per file — read_sdfits inside
-mapInPandas over `spark.read.format("binaryFile")`, read_sdfits_stream
+mapInArrow over `spark.read.format("binaryFile")`, read_sdfits_stream
 in a Python stream source that plans one partition per new file — so
 there is no driver bottleneck and a 100 TB corpus of observations
 parallelizes by file. Both give a file the same rows, path, obs_id and
-corruption verdict. The decoded header travels as one JSON string per
-file (a few KB), not as per-row columns; read_sdfits_header reads one
-file's header on the driver from its leading blocks, with no Spark job.
+corruption verdict. The decode hands Spark an Arrow record batch whose
+DATA list column is built from the table's contiguous 2-D block, so no
+per-element Python object is made between the file and the JVM. The
+decoded header travels as one JSON string per file (a few KB), not as
+per-row columns; read_sdfits_header reads one file's header on the
+driver from its leading blocks, with no Spark job.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import re
@@ -35,6 +39,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -226,9 +231,11 @@ def _table_dtype(cards: dict) -> tuple[np.dtype, list[tuple[str, str, int]]]:
     return dt, meta
 
 
-def parse_bintable(buf: bytes, cards: dict, offset: int) -> pd.DataFrame:
-    """Decode the BINTABLE data unit at `offset` into a DataFrame
-    (vector columns become per-row lists)."""
+def _bintable_records(buf: bytes, cards: dict, offset: int,
+                      ) -> tuple[np.ndarray, list[tuple[str, str, int]]]:
+    """The BINTABLE data unit at `offset` as a big-endian structured
+    array over `buf` (no copy), plus each field's (TTYPE, code,
+    repeat)."""
     if str(cards.get("XTENSION", "")).strip() != "BINTABLE":
         raise FitsFormatError("expected BINTABLE extension")
     naxis1, naxis2 = _req_int(cards, "NAXIS1"), _req_int(cards, "NAXIS2")
@@ -243,29 +250,35 @@ def parse_bintable(buf: bytes, cards: dict, offset: int) -> pd.DataFrame:
     need = naxis1 * naxis2
     if offset + need > len(buf):
         raise FitsFormatError("binary table data truncated")
-    arr = np.frombuffer(buf, dtype=dt, count=naxis2, offset=offset)
-    out: dict = {}
-    for name, code, rep in meta:
-        col = arr[name]
-        canon = _CANON_NAME.get(name, name)
-        if code == "A":
-            try:
-                out[canon] = [v.decode("ascii").rstrip() for v in col]
-            except UnicodeDecodeError:
-                raise FitsFormatError(
-                    f"non-ASCII bytes in string column {canon}"
-                ) from None
-        elif code == "L":
-            # FITS logicals are ASCII 'T'/'F' bytes (0x54/0x46), not
-            # 0/1 — `!= 0` would decode every 'F' as True
-            out[canon] = (col == ord("T")) if rep == 1 else \
-                [list(v == ord("T")) for v in col]
-        elif rep == 1:
-            out[canon] = col.astype(col.dtype.newbyteorder("="))
-        else:
-            native = col.astype(col.dtype.newbyteorder("="))
-            out[canon] = [v.tolist() for v in native]
-    return pd.DataFrame(out)
+    return np.frombuffer(buf, dtype=dt, count=naxis2, offset=offset), meta
+
+
+def _column_values(col: np.ndarray, code: str, rep: int, canon: str):
+    """One decoded column: strings for 'A', booleans for 'L', native
+    NumPy numbers for a scalar field, per-row lists for a vector."""
+    if code == "A":
+        try:
+            return [v.decode("ascii").rstrip() for v in col]
+        except UnicodeDecodeError:
+            raise FitsFormatError(
+                f"non-ASCII bytes in string column {canon}") from None
+    if code == "L":
+        # FITS logicals are ASCII 'T'/'F' bytes (0x54/0x46), not
+        # 0/1 — `!= 0` would decode every 'F' as True
+        return (col == ord("T")) if rep == 1 else \
+            [list(v == ord("T")) for v in col]
+    native = col.astype(col.dtype.newbyteorder("="))
+    return native if rep == 1 else [v.tolist() for v in native]
+
+
+def parse_bintable(buf: bytes, cards: dict, offset: int) -> pd.DataFrame:
+    """Decode the BINTABLE data unit at `offset` into a DataFrame
+    (vector columns become per-row lists)."""
+    arr, meta = _bintable_records(buf, cards, offset)
+    return pd.DataFrame({
+        _CANON_NAME.get(name, name):
+            _column_values(arr[name], code, rep, _CANON_NAME.get(name, name))
+        for name, code, rep in meta})
 
 
 @dataclass
@@ -535,14 +548,40 @@ def _decoded_schema():
     ])
 
 
+@functools.cache
+def _decoded_arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return to_arrow_schema(_decoded_schema())
+
+
 _INT32_COLS = ("IFNUM", "PLNUM", "CALSTATE", "SWPVALID")
 
 
+def _data_column(col: np.ndarray, code: str, rep: int, list_type):
+    """The DATA vector field as one Arrow list array: the values are
+    the table's contiguous rows x rep block and row i spans
+    [i*rep, (i+1)*rep). NaN elements become NULL (from_pandas), as the
+    NaN mask downstream expects."""
+    if code in ("A", "L") or rep == 1:
+        raise FitsFormatError(
+            f"DATA is not a numeric vector column (TFORM {rep}{code})")
+    flat = col.astype(np.float64).reshape(-1)
+    offsets = pa.array(np.arange(len(col) + 1, dtype=np.int64) * rep,
+                       type=pa.int32())
+    return pa.ListArray.from_arrays(
+        offsets, pa.array(flat, from_pandas=True), type=list_type)
+
+
 def decode_sdfits(path: str, content: bytes,
-                  permissive: bool) -> pd.DataFrame:
+                  permissive: bool) -> pa.RecordBatch:
     """The package's one SDFITS row decode (S1 + S2), shared by the
-    batch scan and the stream: one file's bytes -> one frame in
-    _decoded_schema, one row per table row (row_idx 0..n-1).
+    batch scan and the stream: one file's bytes -> one Arrow record
+    batch in _decoded_schema, one row per table row (row_idx 0..n-1).
+
+    Columns are built from the table's NumPy fields: DATA with
+    _data_column, the scalars with pyarrow's pandas semantics (NaN ->
+    NULL) after the int32 coercion of the stream keys; a column the
+    file lacks is all NULL.
 
     A file that fails to decode raises in failfast mode; in permissive
     mode it becomes ONE tombstone row (row_idx = -1, corrupt_error =
@@ -551,33 +590,37 @@ def decode_sdfits(path: str, content: bytes,
     from deep in the codec, not just FitsFormatError — and so does the
     column coercion: a structurally valid file whose CALSTATE holds
     NaN/strings must quarantine, not kill the corpus scan."""
-    names = [f.name for f in observation_struct_fields()]
+    schema = _decoded_arrow_schema()
     try:
-        t = parse_sdfits(content).table
-        out = pd.DataFrame({
-            "path": path,
-            "corrupt_error": None,
-            "row_idx": np.arange(len(t), dtype=np.int64),
-        })
-        for name in names:
-            if name not in t.columns:
-                out[name] = None
-            elif name in _INT32_COLS:
-                out[name] = t[name].astype("int32")
-            else:
-                out[name] = t[name]
-        return out
+        _primary, _history, ext, pos = _parse_headers(content)
+        arr, meta = _bintable_records(content, ext, pos)
+        fields = {_CANON_NAME.get(name, name): (name, code, rep)
+                  for name, code, rep in meta}
+        n = len(arr)
+        columns = [pa.array([path] * n, pa.string()),
+                   pa.nulls(n, pa.string()),
+                   pa.array(np.arange(n, dtype=np.int64))]
+        for field in list(schema)[3:]:
+            if field.name not in fields:
+                columns.append(pa.nulls(n, field.type))
+                continue
+            name, code, rep = fields[field.name]
+            if field.name == "DATA":
+                columns.append(_data_column(arr[name], code, rep, field.type))
+                continue
+            values = _column_values(arr[name], code, rep, field.name)
+            if field.name in _INT32_COLS:
+                values = pd.Series(values).astype("int32").to_numpy()
+            columns.append(pa.array(values, field.type, from_pandas=True))
+        return pa.RecordBatch.from_arrays(columns, schema=schema)
     except Exception as exc:
         if not permissive:
             raise
-        tomb = pd.DataFrame({
-            "path": [path],
-            "corrupt_error": [str(exc)],
-            "row_idx": np.array([-1], dtype=np.int64),
-        })
-        for name in names:
-            tomb[name] = None
-        return tomb
+        return pa.RecordBatch.from_arrays(
+            [pa.array([path]), pa.array([str(exc)]),
+             pa.array([-1], pa.int64()),
+             *(pa.nulls(1, f.type) for f in list(schema)[3:])],
+            schema=schema)
 
 
 def _is_permissive(mode: str) -> bool:
@@ -586,12 +629,22 @@ def _is_permissive(mode: str) -> bool:
     return mode.lower() == "permissive"
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: a name beginning with '.', or with '_'
+    and holding no '=' (a partition directory), or ending in
+    '._COPYING_' is not a data file, so binaryFile skips it (a
+    `_SUCCESS` marker, a `.crc` checksum)."""
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
+
+
 def _list_files(spark, path_glob: str, permissive: bool):
     """(fs, matched, files, empty) for a path or glob, from one Hadoop
     globStatus: the qualified paths the glob matches, the FileStatus of
     every file a binaryFile scan of them reads (a matched file, or the
     files one directory level down: binaryFile's non-recursive
-    default), and the sorted qualified paths of the 0-byte ones.
+    default; _hidden names excluded either way), and the sorted
+    qualified paths of the 0-byte ones.
     Metadata only, the same class of work InMemoryFileIndex does to
     plan the scan. failfast raises _zero_length_error for a 0-byte
     file here, at planning time."""
@@ -602,7 +655,8 @@ def _list_files(spark, path_glob: str, permissive: bool):
     for s in (fs.globStatus(jpath) or []):
         matched.append(fs.makeQualified(s.getPath()).toString())
         found = fs.listStatus(s.getPath()) if s.isDirectory() else [s]
-        files += [c for c in found if c.isFile()]
+        files += [c for c in found
+                  if c.isFile() and not _hidden(c.getPath().getName())]
     empty = sorted(fs.makeQualified(c.getPath()).toString()
                    for c in files if c.getLen() == 0)
     if empty and not permissive:
@@ -657,7 +711,7 @@ def _zero_length_error(empty_paths: list[str]) -> FitsFormatError:
 
 def read_sdfits(spark, path_glob: str, mode: str = "failfast"):
     """S1 as a distributed scan: binaryFile -> decode_sdfits in
-    mapInPandas, one task per file. Returns a DataFrame in the
+    mapInArrow, one task per file. Returns a DataFrame in the
     canonical observation schema plus (path, corrupt_error, row_idx,
     obs_id). obs_id = xxhash64(path) — computed map-side with no
     shuffle, so a corpus of millions of files never funnels through
@@ -674,12 +728,14 @@ def read_sdfits(spark, path_glob: str, mode: str = "failfast"):
     permissive = _is_permissive(mode)
     files = _binary_files(spark, path_glob, permissive)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                yield decode_sdfits(path, bytes(content), permissive)
+    def decode(batches: Iterator[pa.RecordBatch],
+               ) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for path, content in zip(batch.column("path").to_pylist(),
+                                     batch.column("content").to_pylist()):
+                yield decode_sdfits(path, content, permissive)
 
-    return files.mapInPandas(decode, schema=_decoded_schema()) \
+    return files.mapInArrow(decode, schema=_decoded_schema()) \
         .withColumn("obs_id", F.xxhash64("path"))
 
 
@@ -753,16 +809,10 @@ class _SdfitsStreamReader(DataSourceStreamReader):
                 and not self._consumed(start, p, mt)]
 
     def read(self, partition: InputPartition):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         with open(partition.value, "rb") as fh:
             content = fh.read()
-        frame = decode_sdfits("file:" + partition.value, content,
-                              self._permissive)
-        yield pa.RecordBatch.from_pandas(
-            frame, schema=to_arrow_schema(_decoded_schema()),
-            preserve_index=False)
+        yield decode_sdfits("file:" + partition.value, content,
+                            self._permissive)
 
 
 class _SdfitsStreamSource(DataSource):

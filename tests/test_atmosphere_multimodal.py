@@ -113,53 +113,104 @@ class TestAtmosphere:
         assert 5.0 < g[2] < 20.0
 
     def test_transmission_shape(self, spark):
-        from radio_data_pipeline_spark.operators.atmosphere import (
-            transmission_udf,
-        )
+        # DATA of ones corrected is 1 / transmission, one value per
+        # channel of the frequency axis
         df = spark.createDataFrame(
-            [(45.0, 15.0, 1000.0, 40.0), (10.0, 15.0, 1000.0, 40.0)],
-            ["ELEVATIO", "TAMBIENT", "PRESSURE", "HUMIDITY"])
-        udf = transmission_udf([1.4, 22.2, 60.0])
-        rows = (df.withColumn("t", udf("ELEVATIO", "TAMBIENT", "PRESSURE",
-                                       "HUMIDITY"))
-                .collect())
-        for r in rows:
-            assert len(r["t"]) == 3
-            for v in r["t"]:
+            [([1.0] * 3, 45.0, 15.0, 1000.0, 40.0),
+             ([1.0] * 3, 10.0, 15.0, 1000.0, 40.0)],
+            "DATA array<double>, ELEVATIO double, TAMBIENT double, "
+            "PRESSURE double, HUMIDITY double")
+        rows = apply_atmosphere_correction(
+            df, [1400.0, 22200.0, 60000.0]).collect()
+        trans = [[1.0 / v for v in r["DATA"]] for r in rows]
+        for t in trans:
+            assert len(t) == 3
+            for v in t:
                 assert 0.0 < v <= 1.0
         # lower elevation -> longer slant path -> lower transmission
-        t_hi = rows[0]["t"]
-        t_lo = rows[1]["t"]
-        assert all(lo < hi for lo, hi in zip(t_lo, t_hi))
+        assert all(lo < hi for lo, hi in zip(trans[1], trans[0]))
 
     def test_transmission_matches_per_row_scalar_kernel(self, spark):
-        # each row's transmission equals the scalar P.676 call with
-        # that row's weather and Buck density, whatever else shares
-        # its Arrow batch; 2 deg is below the 5 deg cosecant clamp
+        # each row's correction equals the scalar P.676 call with that
+        # row's weather and Buck density, whatever else shares its
+        # Arrow batch; 2 deg is below the 5 deg cosecant clamp
         from radio_data_pipeline_spark.operators.atmosphere import (
             p676_slant_attenuation,
-            transmission_udf,
         )
         weather = [(45.0, 15.0, 1000.0, 40.0), (2.0, 25.0, 950.0, 80.0),
                    (5.0, 25.0, 950.0, 80.0), (70.0, 0.5, 1020.0, 10.0),
                    (12.5, 30.0, 880.0, 60.0)]
         freqs = [1.4, 22.2, 60.0, 118.0, 183.0]
         df = spark.createDataFrame(
-            [(i, *w) for i, w in enumerate(weather)],
-            ["i", "ELEVATIO", "TAMBIENT", "PRESSURE", "HUMIDITY"])
-        udf = transmission_udf(freqs)
-        got = {r["i"]: r["t"] for r in df.select(
-            "i", udf("ELEVATIO", "TAMBIENT", "PRESSURE", "HUMIDITY")
-            .alias("t")).collect()}
+            [(i, [1.0] * len(freqs), *w) for i, w in enumerate(weather)],
+            "i int, DATA array<double>, ELEVATIO double, TAMBIENT double, "
+            "PRESSURE double, HUMIDITY double")
+        got = {r["i"]: r["DATA"] for r in apply_atmosphere_correction(
+            df, [f * 1000.0 for f in freqs]).collect()}
         for i, (elev, t_c, p, h) in enumerate(weather):
             e_s = (1.0007 + 3.46e-6) * 6.1121 * math.exp(
                 17.502 * t_c / (t_c + 240.97))
             rho = 216.7 * ((h / 100.0) * e_s) / (t_c + 273.15)
             att = p676_slant_attenuation(np.asarray(freqs), elev, rho, p,
                                          t_c + 273.15)
-            np.testing.assert_allclose(got[i], 10.0 ** (-att / 10.0),
+            np.testing.assert_allclose(got[i], 1.0 / 10.0 ** (-att / 10.0),
                                        rtol=1e-12)
         np.testing.assert_allclose(got[1], got[2], rtol=1e-12)
+
+    def test_correction_keeps_nulls_lengths_and_slices(self, spark):
+        # element j of a row is divided by channel j's transmission; the
+        # result is max(len(row), channels) long, as zip_with gives; a
+        # NULL row, a NULL element and NULL weather give NULL, NaN stays
+        # NaN; a sliced batch (non-zero Arrow offset) and a frame
+        # filtered after its scan give the same rows
+        import pyarrow as pa
+
+        from radio_data_pipeline_spark.operators.atmosphere import (
+            correct_data_arrow,
+            transmission,
+        )
+        freqs_mhz = [1400.0, 22200.0, 60000.0]
+        data = [[1.0, 2.0, 3.0], [1.0, None, 3.0], None, [4.0],
+                [1.0, 2.0, 3.0, 4.0, 5.0], [1.0, 2.0, 3.0],
+                [1.0, float("nan"), 3.0], []]
+        weather = [(45.0, 15.0, 1000.0, 40.0)] * 5 \
+            + [(None, 15.0, 1000.0, 40.0), (30.0, 20.0, 990.0, 60.0),
+               (45.0, 15.0, 1000.0, 40.0)]
+        freqs_ghz = np.asarray(freqs_mhz) / 1000.0
+
+        expected = []
+        for row, w in zip(data, weather):
+            if row is None:
+                expected.append(None)
+                continue
+            t = transmission(freqs_ghz, *(np.nan if x is None else x
+                                          for x in w))
+            expected.append([
+                None if j >= len(row) or j >= len(t) or row[j] is None
+                or np.isnan(t[j]) else row[j] / t[j]
+                for j in range(max(len(row), len(t)))])
+
+        def norm(rows):
+            return [None if r is None else
+                    ["nan" if v is not None and v != v else v for v in r]
+                    for r in rows]
+
+        arr = pa.array(data, pa.list_(pa.float64()))
+        cols = [pa.array(c, pa.float64()) for c in zip(*weather)]
+        got = correct_data_arrow(arr, *cols, freqs_ghz).to_pylist()
+        assert norm(got) == norm(expected)
+        sliced = correct_data_arrow(arr.slice(3, 4),
+                                    *(c.slice(3, 4) for c in cols),
+                                    freqs_ghz).to_pylist()
+        assert norm(sliced) == norm(expected[3:7])
+
+        df = spark.createDataFrame(
+            [(i, d, *w) for i, (d, w) in enumerate(zip(data, weather))],
+            "i int, DATA array<double>, ELEVATIO double, TAMBIENT double, "
+            "PRESSURE double, HUMIDITY double")
+        out = apply_atmosphere_correction(df.filter("i % 2 = 1"), freqs_mhz)
+        got = [r["DATA"] for r in out.orderBy("i").collect()]
+        assert norm(got) == norm(expected[1::2])
 
 
 class TestRealCodecs:

@@ -1,6 +1,6 @@
 """SDFITS codec + Spark source tests (reference S1/S2/S3/O22 parity):
 pure-numpy round-trip, structural verify, corruption injection, the
-binaryFile -> mapInPandas distributed scan feeding the segmentation
+binaryFile -> mapInArrow distributed scan feeding the segmentation
 operator, and the file stream, which must give the same rows, ids and
 corruption verdicts as the batch scan.
 """
@@ -40,6 +40,46 @@ def _obs_pdf(**kw) -> pd.DataFrame:
 HEADER = {"DATE": "2024-03-01T00:00:00", "OBSMODE": "track",
           "OBSFREQ": 1400.0, "OBSBW": 80.0}
 HISTORY = ["DATAMODE HIRES", "START,STOP channels 0 63"]
+
+
+def _nan_obs_bytes() -> bytes:
+    # every 7th DATA element NaN, and one NaN TSYS
+    pdf = _obs_pdf(n_science=10)
+    pdf["DATA"] = [np.where(np.arange(len(v)) % 7 == 0, np.nan,
+                            np.asarray(v)) for v in pdf["DATA"]]
+    pdf.loc[3, "TSYS"] = np.nan
+    return write_sdfits(pdf, HEADER, HISTORY)
+
+
+def _codec_rows(path: str, buf: bytes) -> list[tuple]:
+    """The rows a reader must give for one file, from the pandas codec
+    (parse_sdfits), without obs_id: NaN (in DATA or a scalar) as None;
+    one tombstone carrying the codec's message for a corrupt file."""
+    from radio_data_pipeline_spark.sources.fits import (
+        observation_struct_fields,
+    )
+    names = [f.name for f in observation_struct_fields()]
+    try:
+        table = parse_sdfits(buf).table
+    except FitsFormatError as exc:
+        return [(path, str(exc), -1, *(None for _ in names))]
+
+    def cell(v):
+        if isinstance(v, list):
+            return [None if x != x else x for x in v]
+        if isinstance(v, np.integer):
+            return int(v)
+        if isinstance(v, (float, np.floating)):
+            return None if v != v else float(v)
+        return v
+
+    return [(path, None, i, *(cell(table[n].iloc[i]) if n in table
+                              else None for n in names))
+            for i in range(len(table))]
+
+
+def _without_obs_id(rows) -> list[tuple]:
+    return sorted((tuple(r)[:-1] for r in rows), key=lambda t: t[:3])
 
 
 def test_roundtrip_bytes_structure():
@@ -95,6 +135,22 @@ def test_read_sdfits_spark_source(spark, tmp_path):
     first = df.filter("path LIKE '%/obs0.fits' AND row_idx = 0") \
         .collect()[0]
     assert first["CALSTATE"] == 1 and len(first["DATA"]) == 64
+
+    # every row equals the pandas codec's, a NaN DATA element as NULL
+    nan_file = _nan_obs_bytes()
+    (tmp_path / "nan").mkdir()
+    (tmp_path / "nan" / "obs.fits").write_bytes(nan_file)
+    expected = sorted(
+        (row for i in range(3) for row in _codec_rows(
+            f"file:{tmp_path / f'obs{i}.fits'}",
+            (tmp_path / f"obs{i}.fits").read_bytes())),
+        key=lambda t: t[:3])
+    assert _without_obs_id(df.collect()) == expected
+    nan_rows = _without_obs_id(
+        read_sdfits(spark, str(tmp_path / "nan" / "obs.fits")).collect())
+    assert nan_rows == _codec_rows(f"file:{tmp_path / 'nan' / 'obs.fits'}",
+                                   nan_file)
+    assert any(None in r[4] for r in nan_rows)
 
     # headers travel as per-file JSON
     hdrs = read_sdfits_headers(spark, str(tmp_path / "*.fits")).collect()
@@ -244,6 +300,29 @@ def test_reduce_sdfits_runs_in_few_spark_jobs(spark, tmp_path):
     assert call_jobs == 1, f"{call_jobs} Spark jobs inside reduce_sdfits"
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 3, f"{len(jobs)} Spark jobs for one file"
+
+    # the atmosphere correction of validated afterwards reads the rows
+    # the kernel's job left behind: one job, and no second decode
+    from radio_data_pipeline_spark.operators.atmosphere import (
+        apply_atmosphere_correction,
+    )
+    from radio_data_pipeline_spark.operators.validation import (
+        validate_observation,
+    )
+    freqs = spect["frequency"].tolist()
+    group = "reduce-sdfits-atmosphere-guard"
+    sc.setJobGroup(group, group)
+    try:
+        atm = apply_atmosphere_correction(products["validated"], freqs)
+        corrected = atm.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = atm._jdf.queryExecution().executedPlan().toString()
+    assert "binaryFile" not in plan, plan
+    fresh = apply_atmosphere_correction(validate_observation(
+        read_sdfits(spark, path), channel_window=(0, 63)), freqs)
+    assert sorted(corrected) == sorted(fresh.collect())
 
 
 def test_reduce_sdfits_header_read_errors_start_no_spark_job(spark,
@@ -397,14 +476,17 @@ def test_sdfits_stream_fails_on_zero_length_file(spark, tmp_path):
 
 def test_sdfits_stream_permissive_tombstones_corrupt_files(spark, tmp_path):
     # permissive stream: a 0-byte file and an END-less file are one
-    # tombstone each, carrying the codec's verdict; the good file
-    # decodes all its rows
+    # tombstone each, carrying the codec's verdict; the good file and
+    # the one with NaN DATA elements decode all their rows, and every
+    # row equals the pandas codec's and the batch scan's
     src = tmp_path / "stream"
     src.mkdir()
     good = write_sdfits(_obs_pdf(n_science=8), HEADER, HISTORY)
-    (src / "good.fits").write_bytes(good)
-    (src / "empty.fits").write_bytes(b"")
-    (src / "no_end.fits").write_bytes(corrupt_drop_end(good))
+    files = {"good.fits": good, "empty.fits": b"",
+             "no_end.fits": corrupt_drop_end(good),
+             "nan.fits": _nan_obs_bytes()}
+    for name, buf in files.items():
+        (src / name).write_bytes(buf)
     verdicts = {}
     for name, buf in [("empty.fits", b""),
                       ("no_end.fits", corrupt_drop_end(good))]:
@@ -417,10 +499,13 @@ def test_sdfits_stream_permissive_tombstones_corrupt_files(spark, tmp_path):
     tombs = [r for r in rows if r["row_idx"] == -1]
     assert {r["path"]: r["corrupt_error"] for r in tombs} == verdicts
     assert len(tombs) == 2
-    data = [r for r in rows if r["row_idx"] >= 0]
-    assert {r["path"] for r in data} == {f"file:{src / 'good.fits'}"}
-    assert sorted(r["row_idx"] for r in data) == \
-        list(range(len(parse_sdfits(good).table)))
+    expected = sorted((row for name, buf in files.items()
+                       for row in _codec_rows(f"file:{src / name}", buf)),
+                      key=lambda t: t[:3])
+    assert _without_obs_id(rows) == expected
+    assert _without_obs_id(read_sdfits(spark, str(src / "*.fits"),
+                                       mode="permissive").collect()) \
+        == expected
 
 
 def test_sdfits_stream_offset_stays_flat(tmp_path):
@@ -813,6 +898,31 @@ def test_zero_length_file_tombstoned_not_lost(spark, tmp_path):
                     mode="failfast").collect()
     with pytest.raises(FitsFormatError, match="zero-length"):
         read_sdfits_headers(spark, str(tmp_path / "*.fits")).collect()
+
+
+def test_hidden_files_are_skipped_like_binary_file(spark, tmp_path):
+    """A directory Spark wrote holds a 0-byte `_SUCCESS` marker and may
+    hold `.crc` files; binaryFile skips such names, so the listing must
+    too. Otherwise failfast and reduce_sdfits raise the zero-length
+    error naming `_SUCCESS`, and permissive adds a tombstone for it."""
+    from radio_data_pipeline_spark.pipeline import reduce_sdfits
+
+    good = write_sdfits(_obs_pdf(n_science=8), HEADER, HISTORY)
+    (tmp_path / "obs.fits").write_bytes(good)
+    (tmp_path / "_SUCCESS").write_bytes(b"")
+    (tmp_path / ".obs.fits.crc").write_bytes(b"crc")
+    (tmp_path / "obs.fits._COPYING_").write_bytes(b"")
+    listed = {r["path"] for r in spark.read.format("binaryFile")
+              .load(str(tmp_path)).select("path").collect()}
+    assert {p.rsplit("/", 1)[-1] for p in listed} == {"obs.fits"}
+
+    n_rows = len(parse_sdfits(good).table)
+    for mode in ("failfast", "permissive"):
+        rows = read_sdfits(spark, str(tmp_path), mode=mode).collect()
+        assert {r["path"] for r in rows} == listed, mode
+        assert len(rows) == n_rows and all(r["row_idx"] >= 0 for r in rows)
+    products = reduce_sdfits(spark, str(tmp_path))
+    assert len(products["continuum"].toPandas()) == 8
 
 
 def test_permissive_scan_fuzz_decode_or_one_tombstone(spark, tmp_path):
