@@ -2,6 +2,13 @@
 
 Continuum = sum over the channel (in-row array) axis; Spectrum = sum
 over the time (row) axis; ON-OFF = spectrum(ON) - spectrum(OFF).
+
+Every Spark spectrum (integrate_spectrum, on_off_spectrum and
+pipeline.spectrum_pipeline_distributed) is the one aggregation
+_signed_spectrum, with the reference's masked-sum NULL rule
+(spectrum.py:63-69): a NULL DATA element (a NaN masked by validation
+F6) is skipped, and a channel NULL in every row of its group sums to
+NULL, not 0.
 """
 
 from __future__ import annotations
@@ -43,10 +50,24 @@ def integrate_continuum(df: DataFrame, epoch_ts: str | None = None,
     )
 
 
+def _signed_spectrum(df: DataFrame, group_cols: list[str],
+                     sign: Column) -> DataFrame:
+    """sum(DATA[pos] * sign) per (group_cols..., pos): posexplode +
+    groupBy, unsorted. Spark's sum skips NULL products, and a group
+    with none left sums to NULL (the module's NULL rule)."""
+    return (
+        df.select(*group_cols, sign.alias("_sign"),
+                  F.posexplode("DATA").alias("pos", "val"))
+        .groupBy(*group_cols, "pos")
+        .agg(F.sum(F.col("val") * F.col("_sign")).alias("intensity"))
+    )
+
+
 def integrate_spectrum(df: DataFrame,
                        group_cols: list[str] | None = None) -> DataFrame:
     """Reference A2 (utils.py:120-124, mode 'spectrum'): element-wise
-    sum of DATA vectors across rows -> one row per channel position.
+    sum of DATA vectors across rows -> one row per channel position,
+    ordered by (group_cols..., pos).
 
     posexplode + groupBy(pos): the single shuffle is keyed by
     (group..., pos) — with n_channels in the thousands and group keys
@@ -56,21 +77,13 @@ def integrate_spectrum(df: DataFrame,
     O(groups x channels), independent of row count.
     """
     group_cols = group_cols or []
-    exploded = df.select(
-        *group_cols, F.posexplode("DATA").alias("pos", "val"))
-    return (
-        exploded.groupBy(*group_cols, "pos")
-        .agg(F.sum(F.coalesce(F.col("val").cast("double"), F.lit(0.0)))
-             .alias("intensity"))
+    return _signed_spectrum(df, group_cols, F.lit(1.0)) \
         .orderBy(*group_cols, "pos")
-    )
 
 
 def on_off_spectrum(df: DataFrame, on_pred: Column) -> DataFrame:
     """Reference M7 (spectrum.py:63-67): spectrum(ON) - spectrum(OFF)
-    element-wise, as ONE integrate_spectrum over DATA times a +1/-1
-    row sign instead of two aggregations and a join. A NULL element
-    counts as 0 on either side."""
+    element-wise, ordered by pos, as ONE aggregation with a +1/-1 row
+    sign instead of two aggregations and a join."""
     sign = F.when(on_pred, F.lit(1.0)).otherwise(F.lit(-1.0))
-    return integrate_spectrum(
-        df.withColumn("DATA", F.transform("DATA", lambda v: v * sign)))
+    return _signed_spectrum(df, [], sign).orderBy("pos")

@@ -2,16 +2,15 @@
 §2.5 M11, §2.1 S2).
 
 The reference validates one file eagerly and prints failures
-(validate.py:48-49, 69-70); here validation is a lazy transformation
-plus an explicit FAILFAST schema on read, so corrupt inputs surface as
-errors instead of silent prints.
+(validate.py:48-49, 69-70); here validation is a lazy transformation,
+and a corrupt file surfaces from the FITS reader's failfast mode
+(sources/fits.py) as an error instead of a silent print.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Columns the reference checks for non-negativity (validate.py:56-57).
 PHYSICAL_COLUMNS = [
@@ -19,35 +18,6 @@ PHYSICAL_COLUMNS = [
     "DURATION", "EXPOSURE", "LST", "RESTFREQ", "FREQRES", "TRGTLONG",
     "MJD", "UTSECS",
 ]
-
-# Canonical observation schema (SURVEY.md §1.4); used for FAILFAST
-# ingest — the Spark analogue of hdul.verify('exception')
-# (validate.py:20).
-OBSERVATION_SCHEMA = T.StructType([
-    T.StructField("obs_id", T.LongType()),
-    T.StructField("row_idx", T.IntegerType()),
-    T.StructField("DATE_OBS", T.TimestampType()),
-    T.StructField("DATA", T.ArrayType(T.DoubleType())),
-    T.StructField("IFNUM", T.IntegerType()),
-    T.StructField("PLNUM", T.IntegerType()),
-    T.StructField("CALSTATE", T.IntegerType()),
-    T.StructField("SWPVALID", T.IntegerType()),
-    T.StructField("OBSMODE", T.StringType()),
-    T.StructField("ELEVATIO", T.DoubleType()),
-    T.StructField("TAMBIENT", T.DoubleType()),
-    T.StructField("PRESSURE", T.DoubleType()),
-    T.StructField("HUMIDITY", T.DoubleType()),
-    T.StructField("TSYS", T.DoubleType()),
-    T.StructField("TCAL", T.DoubleType()),
-    T.StructField("DURATION", T.DoubleType()),
-    T.StructField("EXPOSURE", T.DoubleType()),
-    T.StructField("LST", T.DoubleType()),
-    T.StructField("RESTFREQ", T.DoubleType()),
-    T.StructField("FREQRES", T.DoubleType()),
-    T.StructField("TRGTLONG", T.DoubleType()),
-    T.StructField("MJD", T.DoubleType()),
-    T.StructField("UTSECS", T.DoubleType()),
-])
 
 
 def mask_nan_values(df: DataFrame) -> DataFrame:

@@ -46,7 +46,10 @@ from radio_data_pipeline_spark.operators.filters import (
     filter_time_ranges,
 )
 from radio_data_pipeline_spark.operators.header import ObservationHeader
-from radio_data_pipeline_spark.operators.integrate import integrate_continuum
+from radio_data_pipeline_spark.operators.integrate import (
+    _signed_spectrum,
+    integrate_continuum,
+)
 from radio_data_pipeline_spark.operators.segmentation import (
     segment_observation,
 )
@@ -149,10 +152,11 @@ def spectrum_pipeline_distributed(df: DataFrame,
                                   ) -> DataFrame:
     """All-streams spectrum in one lineage: the ON-OFF subtraction (M7)
     folded into ONE signed aggregation — rows at or after a stream's
-    first 'onoff:off' row contribute -value — so the reduction is a
-    single posexplode + groupBy keyed on (stream, channel). Shuffle
-    volume after map-side partial aggregation is O(streams x channels),
-    independent of row count.
+    first 'onoff:off' row contribute -value — so the reduction is the
+    package's one spectrum aggregation (_signed_spectrum: posexplode +
+    groupBy keyed on (stream, channel), a channel NULL in every row
+    sums to NULL). Shuffle volume after map-side partial aggregation is
+    O(streams x channels), independent of row count.
 
     The off transition (O14) is a per-stream window min(row_idx) over
     the 'onoff:off' rows, taken before the CALSTATE/SWPVALID filter, so
@@ -169,12 +173,7 @@ def spectrum_pipeline_distributed(df: DataFrame,
         sign = F.when(F.col("row_idx") >= F.col("_off_start"),
                       F.lit(-1.0)).otherwise(F.lit(1.0))
     filtered = df.filter((F.col("CALSTATE") == 0) & (F.col("SWPVALID") == 0))
-    return (
-        filtered.select(*STREAM_COLS, sign.alias("_sign"),
-                        F.posexplode("DATA").alias("pos", "val"))
-        .groupBy(*STREAM_COLS, "pos")
-        .agg(F.sum(F.col("val") * F.col("_sign")).alias("intensity"))
-    )
+    return _signed_spectrum(filtered, STREAM_COLS, sign)
 
 
 def reduce_observation(validated: DataFrame, header: ObservationHeader,

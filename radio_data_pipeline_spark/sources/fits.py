@@ -22,10 +22,12 @@ there is no driver bottleneck and a 100 TB corpus of observations
 parallelizes by file. Both give a file the same rows, path, obs_id and
 corruption verdict. The decode hands Spark an Arrow record batch whose
 DATA list column is built from the table's contiguous 2-D block, so no
-per-element Python object is made between the file and the JVM. The
-decoded header travels as one JSON string per file (a few KB), not as
-per-row columns; read_sdfits_header reads one file's header on the
-driver from its leading blocks, with no Spark job.
+per-element Python object is made between the file and the JVM.
+decode_sdfits emits rows only, no header: read_sdfits_headers carries
+each file's header as one JSON string (a few KB), not as per-row
+columns, and read_sdfits_header reads one file's header on the driver
+from its leading blocks, with no Spark job. Every reader reads the
+files a path names by one rule (_scan_files).
 """
 
 from __future__ import annotations
@@ -436,61 +438,6 @@ def write_sdfits(table: pd.DataFrame, header: dict | None = None,
             + _pad_block(rec.tobytes()))
 
 
-def write_sdfits_per_observation(df, out_dir: str,
-                                 header: dict | None = None,
-                                 history: list[str] | None = None,
-                                 order_col: str = "row_idx"):
-    """Distributed S3 sink: one SDFITS file per observation stream,
-    encoded and written executor-side (groupBy stream ->
-    applyInPandas), so a million-observation export never funnels
-    through the driver. Returns a DataFrame (obs_id, IFNUM, PLNUM,
-    path, n_rows) of what was written.
-
-    Files land as <out_dir>/obs<id>_if<i>_pl<p>.fits; out_dir must be
-    a filesystem visible to the executors (shared mount in cluster
-    mode). Each file is written to a task-unique temp name and
-    os.rename'd into place, so task retries/speculation never leave a
-    torn file at the final path. NOTE the returned manifest is lazy —
-    every action re-runs the writes (idempotent thanks to the atomic
-    rename); call .collect() once and reuse."""
-    import os
-
-    import pandas as pd  # noqa: F811
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("obs_id", T.LongType()),
-        T.StructField("IFNUM", T.IntegerType()),
-        T.StructField("PLNUM", T.IntegerType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("n_rows", T.LongType()),
-    ])
-    data_cols = [c for c in df.columns
-                 if c not in ("path", "corrupt_error", "obs_id")]
-
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        obs_id = int(pdf["obs_id"].iloc[0])
-        ifnum = int(pdf["IFNUM"].iloc[0])
-        plnum = int(pdf["PLNUM"].iloc[0])
-        path = os.path.join(out_dir,
-                            f"obs{obs_id}_if{ifnum}_pl{plnum}.fits")
-        buf = write_sdfits(pdf[data_cols].reset_index(drop=True),
-                           header, history)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(buf)
-        os.rename(tmp, path)  # atomic on the same filesystem
-        return pd.DataFrame([{
-            "obs_id": obs_id, "IFNUM": ifnum, "PLNUM": plnum,
-            "path": path, "n_rows": len(pdf),
-        }])
-
-    os.makedirs(out_dir, exist_ok=True)
-    return (df.groupBy("obs_id", "IFNUM", "PLNUM")
-            .applyInPandas(write_group, schema=schema))
-
-
 def corrupt_drop_end(buf: bytes) -> bytes:
     """O22 (file_corruption.py:5-34): blank the primary header's END
     card so parse_sdfits must raise FitsFormatError."""
@@ -638,25 +585,37 @@ def _hidden(name: str) -> bool:
             or name.startswith(".") or name.endswith("._COPYING_"))
 
 
+def _scan_files(matched, is_dir, children, is_file, name) -> list:
+    """The one rule for which files a path or glob names, shared by
+    the Hadoop listing (_list_files) and the stream's local listing:
+    of the entries the glob matched, a directory stands for the
+    entries one level down (binaryFile's non-recursive default), only
+    files are kept, and _hidden names are skipped, also a name the
+    glob matched directly. The callables read an entry of the caller's
+    file system."""
+    found = []
+    for entry in matched:
+        found.extend(children(entry) if is_dir(entry) else [entry])
+    return [f for f in found if is_file(f) and not _hidden(name(f))]
+
+
 def _list_files(spark, path_glob: str, permissive: bool):
     """(fs, matched, files, empty) for a path or glob, from one Hadoop
     globStatus: the qualified paths the glob matches, the FileStatus of
-    every file a binaryFile scan of them reads (a matched file, or the
-    files one directory level down: binaryFile's non-recursive
-    default; _hidden names excluded either way), and the sorted
-    qualified paths of the 0-byte ones.
+    every file a binaryFile scan of them reads (_scan_files), and the
+    sorted qualified paths of the 0-byte ones.
     Metadata only, the same class of work InMemoryFileIndex does to
     plan the scan. failfast raises _zero_length_error for a 0-byte
     file here, at planning time."""
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path(path_glob)
     fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    matched, files = [], []
-    for s in (fs.globStatus(jpath) or []):
-        matched.append(fs.makeQualified(s.getPath()).toString())
-        found = fs.listStatus(s.getPath()) if s.isDirectory() else [s]
-        files += [c for c in found
-                  if c.isFile() and not _hidden(c.getPath().getName())]
+    globbed = list(fs.globStatus(jpath) or [])
+    matched = [fs.makeQualified(s.getPath()).toString() for s in globbed]
+    files = _scan_files(globbed, is_dir=lambda s: s.isDirectory(),
+                        children=lambda s: fs.listStatus(s.getPath()),
+                        is_file=lambda s: s.isFile(),
+                        name=lambda s: s.getPath().getName())
     empty = sorted(fs.makeQualified(c.getPath()).toString()
                    for c in files if c.getLen() == 0)
     if empty and not permissive:
@@ -780,8 +739,12 @@ class _SdfitsStreamReader(DataSourceStreamReader):
         import glob
         import os
 
+        files = _scan_files(
+            glob.glob(self._glob), is_dir=os.path.isdir,
+            children=lambda d: [os.path.join(d, n) for n in os.listdir(d)],
+            is_file=os.path.isfile, name=os.path.basename)
         out = []
-        for p in sorted(glob.glob(self._glob)):
+        for p in sorted(files):
             try:
                 out.append((p, os.stat(p).st_mtime))
             except OSError:
@@ -835,7 +798,15 @@ def read_sdfits_stream(spark, path_glob: str, mode: str = "failfast"):
     columns, obs_id = xxhash64(path)). A file therefore gets the same
     rows, ids and corruption verdict from either reader; a 0-byte file
     reaches the decode as b'' and is tombstoned (permissive) or fails
-    the query (failfast) like any other corrupt file."""
+    the query (failfast) like any other corrupt file.
+
+    The stream reads the files the path names by read_sdfits's rule
+    (_scan_files): a directory reads its files one level down, and
+    hidden names (`_SUCCESS`, `.crc`, `._COPYING_`) are skipped. The
+    listing runs in PySpark's Python stream-source worker, which has
+    no JVM gateway and so no Hadoop FileSystem: paths are local or
+    mounted only, and the pattern is Python `glob`'s, which has no
+    Hadoop `{a,b}` alternation."""
     import os
 
     from pyspark.sql import functions as F

@@ -608,39 +608,6 @@ def test_permissive_mode_quarantines_corrupt_files(spark, tmp_path):
     assert len(data) > 0 and all(r["corrupt_error"] is None for r in data)
 
 
-def test_distributed_fits_sink_roundtrip(spark, tmp_path):
-    # corpus DataFrame -> one FITS per stream written executor-side ->
-    # read back == original
-    from radio_data_pipeline_spark.sources.fits import (
-        write_sdfits_per_observation,
-    )
-    from radio_data_pipeline_spark.sources.synthetic import (
-        make_observation_set,
-    )
-    pdf = make_observation_set([ObsSpec(obs_id=0, n_science=10),
-                                ObsSpec(obs_id=1, n_science=10)])
-    df = spark.createDataFrame(pdf)
-    out = str(tmp_path / "export")
-    manifest = write_sdfits_per_observation(df, out, HEADER,
-                                            HISTORY).collect()
-    assert len(manifest) == 8  # 2 obs x 4 streams
-    assert all(r["n_rows"] > 0 for r in manifest)
-
-    back = read_sdfits(spark, f"{out}/*.fits")
-    assert back.count() == len(pdf)
-    # one stream spot check: values and ISO timestamps round-trip
-    one = (back.filter("path LIKE '%obs1_if0_pl1%'")
-           .orderBy("row_idx").toPandas())
-    orig = (pdf[(pdf.obs_id == 1) & (pdf.IFNUM == 0) & (pdf.PLNUM == 1)]
-            .reset_index(drop=True))
-    assert (one["CALSTATE"].to_numpy() == orig["CALSTATE"].to_numpy()).all()
-    assert one["DATE_OBS"].iloc[0] == \
-        orig["DATE_OBS"].iloc[0].strftime("%Y-%m-%dT%H:%M:%S")
-    np.testing.assert_allclose(
-        np.vstack(one["DATA"].to_numpy()),
-        np.vstack(orig["DATA"].map(np.asarray).to_numpy()))
-
-
 def test_logical_column_round_trips():
     """FITS 'L' logical columns must survive write->read as bools,
     not 'True'/'False' strings — regression for the missing bool
@@ -902,27 +869,39 @@ def test_zero_length_file_tombstoned_not_lost(spark, tmp_path):
 
 def test_hidden_files_are_skipped_like_binary_file(spark, tmp_path):
     """A directory Spark wrote holds a 0-byte `_SUCCESS` marker and may
-    hold `.crc` files; binaryFile skips such names, so the listing must
-    too. Otherwise failfast and reduce_sdfits raise the zero-length
-    error naming `_SUCCESS`, and permissive adds a tombstone for it."""
+    hold `.crc` files; binaryFile skips such names, so every reader's
+    listing must too. Otherwise failfast and reduce_sdfits raise the
+    zero-length error naming `_SUCCESS`, and permissive adds a
+    tombstone for it. The stream lists by the same rule: the directory
+    one level down, and a hidden name its glob matches directly is
+    skipped."""
     from radio_data_pipeline_spark.pipeline import reduce_sdfits
 
+    src = tmp_path / "obs"
+    src.mkdir()
     good = write_sdfits(_obs_pdf(n_science=8), HEADER, HISTORY)
-    (tmp_path / "obs.fits").write_bytes(good)
-    (tmp_path / "_SUCCESS").write_bytes(b"")
-    (tmp_path / ".obs.fits.crc").write_bytes(b"crc")
-    (tmp_path / "obs.fits._COPYING_").write_bytes(b"")
+    (src / "obs.fits").write_bytes(good)
+    (src / "_SUCCESS").write_bytes(b"")
+    (src / ".obs.fits.crc").write_bytes(b"crc")
+    (src / "obs.fits._COPYING_").write_bytes(b"")
     listed = {r["path"] for r in spark.read.format("binaryFile")
-              .load(str(tmp_path)).select("path").collect()}
+              .load(str(src)).select("path").collect()}
     assert {p.rsplit("/", 1)[-1] for p in listed} == {"obs.fits"}
 
     n_rows = len(parse_sdfits(good).table)
     for mode in ("failfast", "permissive"):
-        rows = read_sdfits(spark, str(tmp_path), mode=mode).collect()
+        rows = read_sdfits(spark, str(src), mode=mode).collect()
         assert {r["path"] for r in rows} == listed, mode
         assert len(rows) == n_rows and all(r["row_idx"] >= 0 for r in rows)
-    products = reduce_sdfits(spark, str(tmp_path))
+    products = reduce_sdfits(spark, str(src))
     assert len(products["continuum"].toPandas()) == 8
+
+    for path, mode in ((str(src), "permissive"),
+                       (str(src / "*"), "failfast")):
+        batch = read_sdfits(spark, path, mode=mode).collect()
+        streamed = _drain_stream(spark, path, str(tmp_path / f"cp-{mode}"),
+                                 mode=mode)
+        assert _sorted_rows(streamed) == _sorted_rows(batch), (path, mode)
 
 
 def test_permissive_scan_fuzz_decode_or_one_tombstone(spark, tmp_path):

@@ -160,6 +160,33 @@ def test_onoff_sign_is_positional_and_all_nan_channel_is_null(spark):
     keep = np.arange(spec.n_channels) != 5
     np.testing.assert_allclose(got[keep], expected[keep], rtol=1e-9)
 
+    # the Spark spectrum forms share the rule: NULL, not 0
+    from radio_data_pipeline_spark.operators.integrate import (
+        integrate_spectrum,
+        on_off_spectrum,
+    )
+    from radio_data_pipeline_spark.pipeline import (
+        spectrum_pipeline_distributed,
+    )
+    science = df.filter((F.col("CALSTATE") == 0) & (F.col("SWPVALID") == 0))
+    is_on = ~F.col("OBSMODE").contains("onoff:off")
+    forms = {
+        "integrate_spectrum": (integrate_spectrum(science),
+                               np.nansum(data[rows], axis=0)),
+        "on_off_spectrum": (on_off_spectrum(science, is_on),
+                            np.nansum(data[rows] * labelled[rows, None],
+                                      axis=0)),
+        "spectrum_pipeline_distributed": (
+            spectrum_pipeline_distributed(df, header_obsmode="onoff"),
+            expected),
+    }
+    for name, (form, want) in forms.items():
+        out = (form.toPandas().sort_values("pos")["intensity"]
+               .to_numpy(dtype=float))
+        assert len(out) == spec.n_channels and np.isnan(out[5]), name
+        np.testing.assert_allclose(out[keep], want[keep], rtol=1e-9,
+                                   err_msg=name)
+
 
 def test_on_off_spectrum_is_on_minus_off_with_null_as_zero(spark):
     from radio_data_pipeline_spark.operators.integrate import (
@@ -589,15 +616,15 @@ def _spectrum_by_operators(df, header_obsmode):
         find_calibrations_hybrid,
         label_segments,
     )
+    from radio_data_pipeline_spark.operators.integrate import (
+        _signed_spectrum,
+    )
     labeled = label_segments(
         df, find_calibrations_hybrid(df, header_obsmode=header_obsmode))
     sign = F.when(F.col("onoff") == "off", F.lit(-1.0)).otherwise(F.lit(1.0))
-    return (labeled.filter((F.col("CALSTATE") == 0)
-                           & (F.col("SWPVALID") == 0))
-            .select(*STREAMS, sign.alias("_sign"),
-                    F.posexplode("DATA").alias("pos", "val"))
-            .groupBy(*STREAMS, "pos")
-            .agg(F.sum(F.col("val") * F.col("_sign")).alias("intensity")))
+    return _signed_spectrum(labeled.filter((F.col("CALSTATE") == 0)
+                                           & (F.col("SWPVALID") == 0)),
+                            STREAMS, sign)
 
 
 def _assert_same(got, ref, keys):

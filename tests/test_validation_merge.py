@@ -15,7 +15,6 @@ from radio_data_pipeline_spark.operators.merge import (
     merge_observations,
 )
 from radio_data_pipeline_spark.operators.validation import (
-    OBSERVATION_SCHEMA,
     crop_channels,
     mask_nan_values,
     physical_filter,
@@ -82,14 +81,6 @@ class TestValidation:
         out = validate_observation(df, channel_window=(0, 31))
         assert out.count() == len(obs_pdf) - 5
         assert len(out.first()["DATA"]) == 32
-
-    def test_failfast_schema_read(self, spark, obs_pdf, tmp_path):
-        # S2 analogue: enforcing the canonical schema on read
-        df = spark.createDataFrame(obs_pdf)
-        path = str(tmp_path / "obs.parquet")
-        df.write.mode("overwrite").parquet(path)
-        back = spark.read.schema(OBSERVATION_SCHEMA).parquet(path)
-        assert back.count() == len(obs_pdf)
 
 
 class TestMerge:
