@@ -15,7 +15,8 @@ ApJS, continuum.py:85-94); that library is unavailable here, so the
 same published algorithm's rejection loop (Chauvenet criterion around
 a robust sigma) is implemented in NumPy — a documented substitution,
 pinned by golden tests. Calibration segments are tiny (dozens of
-rows), so the sequential loop runs inside one Arrow batch.
+rows), so the sequential loop runs in NumPy on one observation's rows
+at a time.
 
 Gain application (M6) implements the INTENDED time-interpolation
 semantics: the reference's z>=1.96 branch rebinds the loop variable
@@ -34,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from radio_data_pipeline_spark.operators.segmentation import STREAM_COLS
 
 
 # ------------------------------------------------------------------
@@ -125,9 +128,6 @@ _RCR_SCHEMA = T.StructType([
 ])
 
 
-_RCR_KEYS = ["obs_id", "IFNUM", "PLNUM", "segment", "CALSTATE"]
-
-
 def fit_segment(t: np.ndarray, y: np.ndarray) -> dict:
     """The robust fit of one diode-on or diode-off half of a cal
     spike: (intercept, slope, b_sd, m_sd, t_mean), the fit fields None
@@ -144,60 +144,25 @@ def fit_segment(t: np.ndarray, y: np.ndarray) -> dict:
     return dict(intercept=b, slope=m, b_sd=b_sd, m_sd=m_sd, t_mean=t_mean)
 
 
-def _fit_group(pdf: pd.DataFrame) -> dict:
-    """The per-segment robust fit as one rcr_fit_segments row."""
-    return {
-        "obs_id": pdf["obs_id"].iloc[0],
-        "IFNUM": pdf["IFNUM"].iloc[0],
-        "PLNUM": pdf["PLNUM"].iloc[0],
-        "segment": pdf["segment"].iloc[0],
-        "calstate": pdf["CALSTATE"].iloc[0],
-        "n": len(pdf),
-        **fit_segment(pdf["t"].to_numpy(dtype=float),
-                      pdf["intensity"].to_numpy(dtype=float)),
-    }
-
-
 def rcr_fit_segments(continuum_df: DataFrame) -> DataFrame:
     """Run the robust fit over every (stream, segment, CALSTATE) group
     of an integrated-continuum frame with columns
     (obs_id, IFNUM, PLNUM, segment, CALSTATE, t, intensity).
 
-    Physical shape: repartition by the segment key, sort within
-    partitions, then ONE mapInPandas kernel that fits every complete
-    group inside each Arrow batch, carrying the (possibly split)
-    boundary group to the next batch. The naive
-    ``groupBy(...).applyInPandas`` ships one Arrow round-trip PER
-    GROUP (~5-8 ms each — measured 2.3 s of pure overhead for 320
-    dozen-row segments, vs 0.3 s of actual fit math); batching many
-    groups per Arrow exchange removes that multiplier while keeping
-    the same shuffle key, the same results, and bounded memory (the
-    carry holds at most one segment)."""
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            # rows are sorted by key, so the (maybe incomplete) last
-            # group is the contiguous tail — hold it for the next batch
-            last = pdf.iloc[-1]
-            tail = (pdf[_RCR_KEYS] == last[_RCR_KEYS]).all(axis=1)
-            carry = pdf[tail]
-            done = pdf[~tail]
-            if len(done):
-                yield pd.DataFrame(
-                    [_fit_group(g) for _, g in
-                     done.groupby(_RCR_KEYS, sort=False)])
-        if carry is not None and len(carry):
-            yield pd.DataFrame([_fit_group(carry)])
+    One groupBy(obs_id).applyInPandas, the shape of every other
+    per-observation kernel: one Arrow round trip per observation, and
+    pandas groups its rows by (IFNUM, PLNUM, segment, CALSTATE) for
+    fit_segment."""
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame([
+            {"obs_id": g["obs_id"].iloc[0], "IFNUM": ifnum, "PLNUM": plnum,
+             "segment": segment, "calstate": calstate, "n": len(g),
+             **fit_segment(g["t"].to_numpy(dtype=float),
+                           g["intensity"].to_numpy(dtype=float))}
+            for (ifnum, plnum, segment, calstate), g in pdf.groupby(
+                ["IFNUM", "PLNUM", "segment", "CALSTATE"], sort=False)])
 
-    return (continuum_df
-            .repartition(*_RCR_KEYS)
-            .sortWithinPartitions(*_RCR_KEYS)
-            .mapInPandas(run, schema=_RCR_SCHEMA))
+    return continuum_df.groupBy("obs_id").applyInPandas(run, _RCR_SCHEMA)
 
 
 # ------------------------------------------------------------------
@@ -286,9 +251,6 @@ def apply_gain_calibration(science: DataFrame,
 # gain_calibrate inside its per-observation kernel instead; these stay
 # as the operator form it is tested against.
 # ------------------------------------------------------------------
-
-STREAM_COLS = ["obs_id", "IFNUM", "PLNUM"]
-
 
 def calibration_heights_df(fits: DataFrame) -> DataFrame:
     """M5 as a join: combine each segment's diode-on and diode-off fits

@@ -6,8 +6,9 @@ filter pushdown and whole-stage codegen apply; none of them shuffle.
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
-from typing import Iterable, Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -23,6 +24,24 @@ def select_stream(df: DataFrame, ifnum: int, plnum: int) -> DataFrame:
     return df.filter((F.col("IFNUM") == ifnum) & (F.col("PLNUM") == plnum))
 
 
+def _time_range_predicate(ts: Column, include: Sequence[TimeRange] | None,
+                          exclude: Sequence[TimeRange] | None,
+                          bound: Callable[[str], object]) -> Column:
+    """F3's one body: OR over the include ``(start, end)`` open
+    intervals, AND over the negated exclude intervals, each ISO bound
+    converted to ts's type by `bound`."""
+    def inside(a: str, b: str) -> Column:
+        return (ts > bound(a)) & (ts < bound(b))
+
+    pred = F.lit(True)
+    if include:
+        pred = pred & reduce(operator.or_, [inside(a, b) for a, b in include])
+    if exclude:
+        pred = pred & reduce(operator.and_,
+                             [~inside(a, b) for a, b in exclude])
+    return pred
+
+
 def time_range_predicate(ts: Column,
                          include: Sequence[TimeRange] | None = None,
                          exclude: Sequence[TimeRange] | None = None) -> Column:
@@ -34,20 +53,8 @@ def time_range_predicate(ts: Column,
     (utils.py:247 vs 258,269 — would raise on real data); we implement
     the evidently intended semantics: include first, then exclude.
     """
-    pred = F.lit(True)
-    if include:
-        inc = [
-            (ts > F.lit(a).cast("timestamp")) & (ts < F.lit(b).cast("timestamp"))
-            for a, b in include
-        ]
-        pred = pred & reduce(lambda x, y: x | y, inc)
-    if exclude:
-        exc = [
-            ~((ts > F.lit(a).cast("timestamp")) & (ts < F.lit(b).cast("timestamp")))
-            for a, b in exclude
-        ]
-        pred = pred & reduce(lambda x, y: x & y, exc)
-    return pred
+    return _time_range_predicate(
+        ts, include, exclude, lambda iso: F.lit(iso).cast("timestamp"))
 
 
 def _iso_to_us(iso: str) -> int:
@@ -68,16 +75,7 @@ def time_range_predicate_us(ts_us: Column,
     """F3 semantics against an epoch-microsecond LONG column — exact
     integer comparisons (used for sources whose native precision
     exceeds what both engines' timestamp readers preserve)."""
-    pred = F.lit(True)
-    if include:
-        inc = [(ts_us > _iso_to_us(a)) & (ts_us < _iso_to_us(b))
-               for a, b in include]
-        pred = pred & reduce(lambda x, y: x | y, inc)
-    if exclude:
-        exc = [~((ts_us > _iso_to_us(a)) & (ts_us < _iso_to_us(b)))
-               for a, b in exclude]
-        pred = pred & reduce(lambda x, y: x & y, exc)
-    return pred
+    return _time_range_predicate(ts_us, include, exclude, _iso_to_us)
 
 
 def filter_time_ranges(df: DataFrame,

@@ -32,7 +32,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-GROUP_COLS = ["obs_id", "IFNUM", "PLNUM"]
+#: the key of one (IFNUM, PLNUM) stream of one observation
+STREAM_COLS = ["obs_id", "IFNUM", "PLNUM"]
+#: the columns segment_observation reads
+SEGMENT_COLS = [*STREAM_COLS, "row_idx", "CALSTATE", "SWPVALID", "OBSMODE"]
 
 
 def _scan_post_cal(swpvalid: np.ndarray, calstate: np.ndarray) -> int | None:
@@ -175,9 +178,7 @@ def _stream_indices(df: DataFrame, channel_count: int | None,
         return pd.DataFrame(rows, columns=_RESULT_SCHEMA.fieldNames(),
                             dtype=object)
 
-    cols = [c for c in df.columns
-            if c in {*GROUP_COLS, "CALSTATE", "SWPVALID", "OBSMODE",
-                     "row_idx"}]
+    cols = [c for c in df.columns if c in SEGMENT_COLS]
     return (df.select(*cols)
             .groupBy("obs_id")
             .applyInPandas(run, schema=_RESULT_SCHEMA))
@@ -223,11 +224,11 @@ def label_segments(df: DataFrame, indices: DataFrame) -> DataFrame:
     and at millions of streams the join rides the stream-key
     partitioning the window already established."""
     from pyspark.sql import Window
-    w = Window.partitionBy(*GROUP_COLS).orderBy("row_idx")
+    w = Window.partitionBy(*STREAM_COLS).orderBy("row_idx")
     pos = F.row_number().over(w) - 1
     labeled = (
         df.withColumn("_pos", pos)
-        .join(indices, GROUP_COLS, "left")
+        .join(indices, STREAM_COLS, "left")
         .withColumn(
             "segment",
             F.when(F.col("_pos") < F.col("data_start_idx"), "pre_cal")

@@ -21,9 +21,10 @@ header on the driver from the file's leading blocks and validates the
 file first; its validated rows are a lazy local checkpoint that the
 kernel's job fills, so a later action on them (the atmosphere
 correction) reads those blocks instead of decoding the file again.
-A NumPy spectrum behind the corpus form's groupBy shuffle
-is measured slower than the posexplode (ROADMAP item 1), so the
-spectrum's form follows the entry point.
+The corpus spectrum stays the posexplode: computed in NumPy by the
+continuum's groupBy(obs_id) kernel instead, with equal outputs, it
+made the corpus_faulty op 1.214 s median against 1.115 s (13
+interleaved rounds, seed 1, 4 vCPUs).
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from radio_data_pipeline_spark.operators.calibration import (
-    STREAM_COLS,
     fit_segment,
     gain_calibrate,
     height_from_fits,
@@ -51,6 +51,8 @@ from radio_data_pipeline_spark.operators.integrate import (
     integrate_continuum,
 )
 from radio_data_pipeline_spark.operators.segmentation import (
+    SEGMENT_COLS,
+    STREAM_COLS,
     segment_observation,
 )
 
@@ -125,7 +127,7 @@ def continuum_pipeline_distributed(df: DataFrame,
 
     Returns (obs_id, IFNUM, PLNUM, t, intensity) for the science rows
     of every stream. t is seconds since the Unix epoch (one file's
-    reduce_observation rebases it on the header date), and
+    reduce_observation measures it from the header DATE), and
     channel_count is each observation's own distinct-IFNUM x
     distinct-PLNUM product (continuum.py:24-28). Time and frequency
     crops are predicates applied to `df` upstream (reduce_observation).
@@ -138,9 +140,7 @@ def continuum_pipeline_distributed(df: DataFrame,
     hundred narrow rows per group — and the only shuffle is keyed on
     the observation id.
     """
-    rows = integrate_continuum(
-        df, keep_cols=[*STREAM_COLS, "row_idx", "CALSTATE", "SWPVALID",
-                       "OBSMODE"])
+    rows = integrate_continuum(df, keep_cols=SEGMENT_COLS)
     schema = T.StructType([rows.schema[c]
                            for c in (*STREAM_COLS, "t", "intensity")])
     return rows.groupBy("obs_id").applyInPandas(
@@ -196,13 +196,14 @@ def reduce_observation(validated: DataFrame, header: ObservationHeader,
     with no non-NULL value sums to NULL.
 
     Shape: one select carries the narrow stream columns, t and the
-    channel sum (integrate_continuum's expressions), the header epoch
-    t0 as a constant column, and DATA only on the selected stream's
-    CALSTATE=0 & SWPVALID=0 rows, so Arrow moves only the vectors the
-    spectrum sums. coalesce(1) puts the observation in one task
-    without a shuffle, and one mapInPandas runs _per_observation
-    on it, one output row per obs_id. The products are collected once
-    because a lazy form would re-run the decode for each of them.
+    channel sum (integrate_continuum's expressions, t since the header
+    DATE, on which the cal fits run as the reference's do), and DATA
+    only on the selected stream's CALSTATE=0 & SWPVALID=0 rows, so
+    Arrow moves only the vectors the spectrum sums. coalesce(1) puts
+    the observation in one task without a shuffle, and one mapInPandas
+    runs _per_observation on it, one output row per obs_id. The
+    products are collected once because a lazy form would re-run the
+    decode for each of them.
     """
     data = validated
     if include_time or exclude_time:
@@ -213,10 +214,8 @@ def reduce_observation(validated: DataFrame, header: ObservationHeader,
                                               exclude_freq)
     spectrum_rows = ((F.col("IFNUM") == ifnum) & (F.col("PLNUM") == plnum)
                      & (F.col("CALSTATE") == 0) & (F.col("SWPVALID") == 0))
-    rows = integrate_continuum(data, keep_cols=[
-        *STREAM_COLS, "row_idx", "CALSTATE", "SWPVALID", "OBSMODE",
-        F.lit(header.date).cast("timestamp").cast("double").alias("t0"),
-        F.when(spectrum_rows, F.col("DATA")).alias("DATA")])
+    rows = integrate_continuum(data, epoch_ts=header.date, keep_cols=[
+        *SEGMENT_COLS, F.when(spectrum_rows, F.col("DATA")).alias("DATA")])
 
     def kernel(batches):
         batches = list(batches)
@@ -228,7 +227,7 @@ def reduce_observation(validated: DataFrame, header: ObservationHeader,
             cont = cont[(cont["IFNUM"] == ifnum) & (cont["PLNUM"] == plnum)]
             yield pd.DataFrame({
                 "obs_id": [obs_id],
-                "t": [cont["t"].to_numpy() - obs["t0"].iloc[0]],
+                "t": [cont["t"].to_numpy()],
                 "intensity": [cont["intensity"].to_numpy()],
                 "spectrum": [np.empty(0) if spectrum is None
                              else spectrum[:len(freqs)]]})

@@ -463,8 +463,13 @@ def corrupt_drop_end(buf: bytes) -> bytes:
 def observation_struct_fields():
     """The canonical observation columns (SURVEY.md §1.4) as Spark
     StructFields — the single source of truth for the decoded schema
-    that read_sdfits and read_sdfits_stream both emit."""
+    that read_sdfits and read_sdfits_stream both emit. The doubles are
+    the physical filter's columns (F5), so it sees every one of them."""
     from pyspark.sql import types as T
+
+    from radio_data_pipeline_spark.operators.validation import (
+        PHYSICAL_COLUMNS,
+    )
     return [
         T.StructField("DATE_OBS", T.StringType()),
         T.StructField("DATA", T.ArrayType(T.DoubleType())),
@@ -473,14 +478,7 @@ def observation_struct_fields():
         T.StructField("CALSTATE", T.IntegerType()),
         T.StructField("SWPVALID", T.IntegerType()),
         T.StructField("OBSMODE", T.StringType()),
-        T.StructField("ELEVATIO", T.DoubleType()),
-        T.StructField("TAMBIENT", T.DoubleType()),
-        T.StructField("PRESSURE", T.DoubleType()),
-        T.StructField("HUMIDITY", T.DoubleType()),
-        T.StructField("TSYS", T.DoubleType()),
-        T.StructField("TCAL", T.DoubleType()),
-        T.StructField("DURATION", T.DoubleType()),
-        T.StructField("EXPOSURE", T.DoubleType()),
+        *(T.StructField(c, T.DoubleType()) for c in PHYSICAL_COLUMNS),
     ]
 
 
@@ -698,6 +696,19 @@ def read_sdfits(spark, path_glob: str, mode: str = "failfast"):
         .withColumn("obs_id", F.xxhash64("path"))
 
 
+def _expand_braces(pattern: str) -> list[str]:
+    """The plain patterns a Hadoop glob's `{a,b}` alternation stands
+    for, nested groups included (`{a,b{c,d}}` -> a, bc, a, bd), for a
+    listing through Python `glob`, which has no alternation: the
+    innermost group is expanded first. An unpaired brace is literal."""
+    group = re.search(r"\{([^{}]*)\}", pattern)
+    if group is None:
+        return [pattern]
+    return [out for alt in group.group(1).split(",")
+            for out in _expand_braces(pattern[:group.start()] + alt
+                                      + pattern[group.end():])]
+
+
 class _SdfitsStreamReader(DataSourceStreamReader):
     """Streaming SDFITS ingest: each micro-batch picks up observation
     files that appeared under the glob since the last offset. Offsets
@@ -739,12 +750,14 @@ class _SdfitsStreamReader(DataSourceStreamReader):
         import glob
         import os
 
+        matched = [p for pattern in _expand_braces(self._glob)
+                   for p in glob.glob(pattern)]
         files = _scan_files(
-            glob.glob(self._glob), is_dir=os.path.isdir,
+            matched, is_dir=os.path.isdir,
             children=lambda d: [os.path.join(d, n) for n in os.listdir(d)],
             is_file=os.path.isfile, name=os.path.basename)
         out = []
-        for p in sorted(files):
+        for p in sorted(set(files)):
             try:
                 out.append((p, os.stat(p).st_mtime))
             except OSError:
@@ -805,8 +818,9 @@ def read_sdfits_stream(spark, path_glob: str, mode: str = "failfast"):
     hidden names (`_SUCCESS`, `.crc`, `._COPYING_`) are skipped. The
     listing runs in PySpark's Python stream-source worker, which has
     no JVM gateway and so no Hadoop FileSystem: paths are local or
-    mounted only, and the pattern is Python `glob`'s, which has no
-    Hadoop `{a,b}` alternation."""
+    mounted only. The pattern takes Hadoop's `{a,b}` alternation,
+    nested groups included, expanded before Python `glob` lists each
+    alternative."""
     import os
 
     from pyspark.sql import functions as F
